@@ -5,18 +5,20 @@ The reference ran the whole per-record chain as five row-at-a-time RDD
 JVM->pickle->Python->pickle->JVM round trip per map.  Here the chain is two
 Arrow-batched crossings:
 
-  1. ``envelope_udf``  -- parse envelope, canonicalise _id
-  2. ``payload_udf``   -- decrypt + (audit transform) + validate + sanitise
-                          + canonical serialise, fused into one batch pass
+  1. ``envelope_udf``        -- parse envelope, canonicalise _id
+  2. ``decrypt_process_udf`` -- AES-CTR decrypt with the cached data key +
+                                (audit transform) + validate + sanitise +
+                                canonical serialise, fused into one batch
+                                pass
 
-Everything around them (db_type, id_part, partitioning columns, writes)
-stays JVM-side as native column expressions.
+operators/ingest.py::ingest_lines is their one caller.  Everything around
+them (db_type, id_part, partitioning columns, writes) stays JVM-side as
+native column expressions.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     BooleanType,
@@ -29,7 +31,6 @@ from . import record
 from .crypto import (
     CachingKeyClient,
     KeyService,
-    aes_ctr_decrypt,
     aes_ctr_decrypt_batch,
 )
 
@@ -212,72 +213,6 @@ def envelope_udf(
     return _parse.asNondeterministic()
 
 
-def decrypt_udf(
-    key_service: KeyService, hit_acc=None, miss_acc=None, permissive: bool = False
-):
-    """AES-CTR decrypt as a scalar pandas UDF.
-
-    The key cache is a module-level per-worker dict (closure state is not
-    guaranteed to survive across Arrow batches), so cached keys span every
-    batch and task a worker processes -- the reference's per-container dict
-    cache with accumulator observability (steps/ingesters.py:103-104,
-    steps/dks.py:96-116).
-    A null ciphertext raises, as the reference does
-    (steps/dks.py:142-143); use quarantine_missing_db_object() upstream to
-    divert such rows instead."""
-    client = CachingKeyClient(key_service, hit_acc=hit_acc, miss_acc=miss_acc)
-
-    @pandas_udf(StringType())
-    def _decrypt(
-        ciphertext: pd.Series, encrypted_key: pd.Series, iv: pd.Series, kek_id: pd.Series
-    ) -> pd.Series:
-        return pd.Series(
-            _decrypt_series(
-                client, ciphertext, encrypted_key, iv, kek_id, permissive=permissive
-            ),
-            dtype="object",
-        )
-
-    # optimizer barrier, same rationale as envelope_udf: a deterministic
-    # alias gets inlined into pushable predicates (filter on the
-    # decrypted column) and the decrypt -- and its accumulator
-    # accounting -- runs twice
-    return _decrypt.asNondeterministic()
-
-
-def payload_udf(audit: bool = False):
-    """Fused transform/validate/sanitise/canonicalise pass
-    (reference steps/ingesters.py:112-115 ran these as four separate maps).
-
-    Args are columns: (decrypted, db, collection, envelope_stamp)."""
-
-    @pandas_udf(PAYLOAD_STRUCT)
-    def _process(
-        decrypted: pd.Series,
-        db: pd.Series,
-        collection: pd.Series,
-        stamp: pd.Series,
-    ) -> pd.DataFrame:
-        vals, deletes = [], []
-        for rec, d, c, s in zip(decrypted, db, collection, stamp):
-            # fused validate+sanitise+finalise: one parse, one walk, one
-            # dump per record (record.process_parsed) instead of the
-            # classic dump/replace/re-parse/dump chain -- byte-identical
-            # by construction, pinned by tests/test_record.py
-            if audit and d == "data" and c == "businessAudit":
-                val, is_delete = record.process_parsed(
-                    record.audit_context(rec, s), d or "", c or ""
-                )
-            else:
-                val, is_delete = record.process_record(rec, d or "", c or "")
-            vals.append(val)
-            deletes.append(is_delete)
-        return pd.DataFrame({"val": vals, "is_delete": deletes})
-
-    # optimizer barrier (see envelope_udf)
-    return _process.asNondeterministic()
-
-
 def decrypt_process_udf(
     key_service: KeyService,
     audit: bool = False,
@@ -287,9 +222,16 @@ def decrypt_process_udf(
 ):
     """Decrypt + (audit transform) + validate + sanitise + canonicalise in
     ONE Arrow crossing -- the SURVEY.md section-7 target shape (envelope
-    parse, then a single fused per-record pass).  Chaining decrypt_udf and
-    payload_udf instead costs an extra JVM<->Python serialisation of every
-    decrypted payload.
+    parse, then a single fused per-record pass).  A separate decrypt UDF
+    feeding a process UDF would cost an extra JVM<->Python serialisation
+    of every decrypted payload.
+
+    The key cache is a module-level per-worker dict (closure state is not
+    guaranteed to survive across Arrow batches), so cached keys span every
+    batch and task a worker processes -- the reference's per-container
+    dict cache with accumulator observability (steps/ingesters.py:103-104,
+    steps/dks.py:96-116).  Strict mode raises on a null ciphertext, as the
+    reference does (steps/dks.py:142-143).
 
     Args are columns: (ciphertext, encrypted_key, iv, kek_id, db,
     collection, envelope_stamp).
@@ -321,7 +263,11 @@ def decrypt_process_udf(
                 deletes.append(None)
                 continue
             try:
-                # fused single-pass chain -- see payload_udf
+                # fused validate+sanitise+finalise: one parse, one walk,
+                # one dump per record (record.process_parsed) instead of
+                # the classic dump/replace/re-parse/dump chain --
+                # byte-identical by construction, pinned by
+                # tests/test_record.py
                 if audit and d == "data" and c == "businessAudit":
                     val, is_delete = record.process_parsed(
                         record.audit_context(rec, s), d or "", c or ""
@@ -339,26 +285,3 @@ def decrypt_process_udf(
 
     # optimizer barrier (see envelope_udf)
     return _process.asNondeterministic()
-
-
-def canonical_json_udf():
-    """Standalone canonical-JSON re-serialiser (reference steps/data.py:163-165).
-    Spark's to_json cannot sort keys, so this stays a pandas UDF."""
-
-    @pandas_udf(StringType())
-    def _canon(values: pd.Series) -> pd.Series:
-        return values.map(record.finalise_record)
-
-    return _canon
-
-
-def sanitise_column(col):
-    """JVM-side equivalent of record.sanitise_text for already-serialised
-    JSON string columns: stays inside WholeStageCodegen, no Python crossing
-    (reference steps/data.py:150-161).  Collection gating is the caller's
-    job (it is per-pipeline config, not per-row)."""
-    out = F.replace(col, F.lit("$"), F.lit("d_"))
-    out = F.replace(out, F.lit("\\u0000"), F.lit(""))
-    out = F.replace(out, F.lit("_archivedDateTime"), F.lit("_removedDateTime"))
-    out = F.replace(out, F.lit("_archived"), F.lit("_removed"))
-    return out

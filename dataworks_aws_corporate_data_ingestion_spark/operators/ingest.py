@@ -2,9 +2,13 @@
 canonical records, as a DataFrame lineage.
 
 DataFrame-native re-expression of the reference's RDD map chains
-(reference steps/ingesters.py:108-120 audit, :526-539 calcParts):
-text scan -> envelope UDF -> decrypt UDF -> payload UDF -> column exprs.
-Two Arrow crossings total; everything else is JVM columnar.
+(reference steps/ingesters.py:108-120 audit, :526-539 calcParts).
+``ingest_lines`` is the one place a landing line becomes a canonical
+row: envelope UDF -> quarantine split -> fused decrypt/process UDF.  Two
+Arrow crossings total; everything else is JVM columnar.  The batch day
+(``ingest_daily``), the registry pipelines and the streaming ingest all
+compose it; callers differ only in how lines arrive and how rows are
+shaped afterwards.
 """
 
 from __future__ import annotations
@@ -12,113 +16,76 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import (
-    decrypt_process_udf,
-    decrypt_udf,
-    envelope_udf,
-    payload_udf,
-)
+from ..functions.udfs import decrypt_process_udf, envelope_udf
 from ..functions.crypto import KeyService
 
 
-def read_envelopes(
-    spark: SparkSession,
-    source_path: str,
-    collection: str | None = None,
-    expand: bool = True,
+def ingest_lines(
+    lines_df: DataFrame,
+    collection: str | None,
+    key_service: KeyService,
+    *,
+    audit: bool = False,
     permissive: bool = False,
-) -> DataFrame:
-    """Line-oriented scan of JSONL (gz auto-decompressed by the Hadoop
-    codec) plus envelope parse (reference steps/ingesters.py:30-31 +
-    steps/data.py:63-89).
+    hit_acc=None,
+    miss_acc=None,
+    observation=None,
+    decrypt_observation=None,
+) -> tuple[DataFrame, DataFrame]:
+    """Landing lines -> (rows, quarantined).  ``lines_df`` is any
+    DataFrame whose ``value`` column holds one JSONL envelope per row,
+    batch or streaming.
 
-    ``expand=False`` keeps the parsed envelope as the single ``env``
-    struct column -- REQUIRED when a filter follows (see
-    quarantine_missing_db_object): filtering on an expanded field
-    re-derives the UDF expression and Catalyst evaluates the whole
-    upstream Python chain twice.
+    ``rows`` carries the envelope fields plus ``val`` (canonical JSON)
+    and ``is_delete``; ``quarantined`` carries the raw ``value`` line plus
+    the envelope fields of every row diverted instead of failing the job.
 
-    ``permissive=True`` diverts unparseable lines (all-null envelope,
-    null db_object) into the quarantine branch instead of failing the
-    day -- see envelope_udf.  A truncated gzip MEMBER still fails at the
-    Hadoop codec layer (file-level corruption is not a row-level
-    concern)."""
-    df = spark.read.text(source_path).withColumn(
+    Envelope parse (reference steps/ingesters.py:30-31 +
+    steps/data.py:63-89): the parsed envelope stays packed in one ``env``
+    struct through the quarantine split, so the split filters on a struct
+    attribute and the envelope UDF -- plus everything upstream of it --
+    evaluates exactly once.  Filtering an expanded ``db_object`` column
+    instead duplicates the UDF expression into the Filter node; the
+    round-3 plan audit measured the whole Python chain running twice.
+
+    Null dbObject rows go to ``quarantined`` instead of failing the whole
+    job (the reference hard-raises per record, steps/dks.py:142-143; a
+    100 TB run should not die on one bad row).
+
+    ``observation``: a pyspark.sql.Observation attached BELOW the split,
+    so the caller's single write action also yields ``n_envelopes`` and
+    ``n_quarantined`` -- no second scan of the day's input to count the
+    (near-empty) quarantine branch.
+
+    ``permissive``: unparseable lines (all-null envelope, see
+    envelope_udf) join the quarantine branch, and so do records that fail
+    DECRYPT or transform (bad base64 ciphertext/key/IV, the key service
+    refusing one record's key, non-UTF-8 or invalid payload): the fused
+    pass yields val=NULL for them and they are diverted into the same
+    quarantine schema, counted as ``n_undecryptable`` on
+    ``decrypt_observation`` (a second Observation -- the parse-level one
+    rides the pre-split frame and cannot be observed twice).  Clean rows
+    stay byte-identical to the strict run.  A truncated gzip MEMBER still
+    fails at the Hadoop codec layer (file-level corruption is not a
+    row-level concern).
+
+    ``hit_acc``/``miss_acc``: key-cache accumulators (reference
+    steps/ingesters.py:89-90,124-128), counted once per record decrypt."""
+    env = lines_df.withColumn(
         "env", envelope_udf(collection, permissive=permissive)(F.col("value"))
     )
-    return df.select("value", "env.*") if expand else df
-
-
-def quarantine_missing_db_object(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split rows with a null dbObject into a quarantine branch instead of
-    failing the whole job (the reference hard-raises per record,
-    steps/dks.py:142-143; a 100 TB run should not die on one bad row).
-
-    Pass the UNEXPANDED frame (``env`` struct still packed): the split
-    then filters on the struct attribute and the envelope UDF -- plus
-    everything upstream of it -- evaluates exactly once.  Filtering an
-    expanded ``db_object`` column instead duplicates the UDF expression
-    into the Filter node, and the round-3 plan audit measured the whole
-    Python chain (fixture encrypt + envelope parse) running twice."""
-    if "env" in df.columns:
-        good = df.filter(F.col("env.db_object").isNotNull()).select("value", "env.*")
-        bad = df.filter(F.col("env.db_object").isNull()).select("value", "env.*")
-        return good, bad
-    good = df.filter(F.col("db_object").isNotNull())
-    bad = df.filter(F.col("db_object").isNull())
-    return good, bad
-
-
-def decrypt_records(
-    df: DataFrame,
-    key_service: KeyService,
-    hit_acc=None,
-    miss_acc=None,
-) -> DataFrame:
-    """Attach the decrypted payload column (reference steps/dks.py:119-157)."""
-    dec = decrypt_udf(key_service, hit_acc=hit_acc, miss_acc=miss_acc)
-    return df.withColumn(
-        "decrypted",
-        dec(
-            F.col("db_object"),
-            F.col("encrypted_encryption_key"),
-            F.col("initialisation_vector"),
-            F.col("key_encryption_key_id"),
-        ),
+    if observation is not None:
+        env = env.observe(
+            observation,
+            F.count(F.lit(1)).alias("n_envelopes"),
+            F.count(F.when(F.col("env.db_object").isNull(), 1)).alias(
+                "n_quarantined"
+            ),
+        )
+    good = env.filter(F.col("env.db_object").isNotNull()).select("value", "env.*")
+    quarantined = env.filter(F.col("env.db_object").isNull()).select(
+        "value", "env.*"
     )
-
-
-def process_payloads(df: DataFrame, audit: bool = False) -> DataFrame:
-    """Apply (audit transform ->) validate -> sanitise -> canonicalise,
-    yielding `val` and `is_delete` (reference steps/ingesters.py:112-115)."""
-    proc = payload_udf(audit=audit)
-    out = df.withColumn(
-        "payload",
-        proc(F.col("decrypted"), F.col("db"), F.col("collection"), F.col("last_modified")),
-    )
-    return out.select(
-        *[c for c in df.columns if c not in ("decrypted", "value")],
-        F.col("payload.val").alias("val"),
-        F.col("payload.is_delete").alias("is_delete"),
-    )
-
-
-def decrypt_and_process(
-    df: DataFrame,
-    key_service: KeyService,
-    audit: bool = False,
-    hit_acc=None,
-    miss_acc=None,
-    permissive: bool = False,
-) -> DataFrame:
-    """Fused decrypt + transform + validate + sanitise + canonicalise:
-    one Arrow crossing instead of decrypt_records |> process_payloads'
-    two.  Same output columns as process_payloads.
-
-    ``permissive=True``: per-record decrypt/transform failures yield
-    val=NULL rows instead of failing the task (see decrypt_process_udf),
-    and the raw ``value`` line is KEPT so the caller can divert failures
-    to the quarantine branch with the envelope-quarantine schema."""
     proc = decrypt_process_udf(
         key_service,
         audit=audit,
@@ -126,25 +93,33 @@ def decrypt_and_process(
         miss_acc=miss_acc,
         permissive=permissive,
     )
-    out = df.withColumn(
-        "payload",
-        proc(
-            F.col("db_object"),
-            F.col("encrypted_encryption_key"),
-            F.col("initialisation_vector"),
-            F.col("key_encryption_key_id"),
-            F.col("db"),
-            F.col("collection"),
-            F.col("last_modified"),
-        ),
+    payload = proc(
+        F.col("db_object"),
+        F.col("encrypted_encryption_key"),
+        F.col("initialisation_vector"),
+        F.col("key_encryption_key_id"),
+        F.col("db"),
+        F.col("collection"),
+        F.col("last_modified"),
     )
-    keep = (
-        df.columns if permissive else [c for c in df.columns if c != "value"]
-    )
-    return out.select(
+    # permissive keeps the raw line so failures can join the quarantine
+    keep = good.columns if permissive else [c for c in good.columns if c != "value"]
+    rows = good.withColumn("payload", payload).select(
         *keep,
         F.col("payload.val").alias("val"),
         F.col("payload.is_delete").alias("is_delete"),
+    )
+    if not permissive:
+        return rows, quarantined
+    if decrypt_observation is not None:
+        rows = rows.observe(
+            decrypt_observation,
+            F.count(F.when(F.col("val").isNull(), 1)).alias("n_undecryptable"),
+        )
+    undecryptable = rows.filter(F.col("val").isNull()).select(*quarantined.columns)
+    return (
+        rows.filter(F.col("val").isNotNull()).drop("value"),
+        quarantined.unionByName(undecryptable),
     )
 
 
@@ -204,62 +179,23 @@ def ingest_daily(
     permissive: bool = False,
     decrypt_observation=None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full daily pipeline; returns (rows, quarantined_envelopes).
+    """Full daily pipeline over a landing path (gz auto-decompressed by
+    the Hadoop codec); returns (rows, quarantined_envelopes).  The keyword
+    options are ingest_lines'.
 
     For audit collections the caller writes `val` as JSONL
     (reference steps/ingesters.py:116-119); for keyed collections the
     caller feeds the rows to sinks.writers.write_daily (reference
-    steps/ingesters.py:526-539).
-
-    ``observation``: a pyspark.sql.Observation attached BELOW the
-    good/quarantine split, so the caller's single write action also yields
-    `n_envelopes` and `n_quarantined` counts -- no second scan of the
-    day's input to count the (near-empty) quarantine branch.  At 100 TB
-    the alternative -- an action on the quarantine DataFrame -- re-reads
-    and re-parses every record for a counter.
-
-    ``permissive``: unparseable lines join the quarantine branch (raw
-    line preserved in its ``value`` column, counted in
-    ``n_quarantined``) instead of failing the day -- and so do records
-    that fail DECRYPT or transform (bad base64 ciphertext/key/IV, DKS
-    refusing one record's key, non-UTF-8 or invalid payload): the fused
-    pass yields val=NULL for them and they are diverted into the same
-    quarantine schema, counted as ``n_undecryptable`` on
-    ``decrypt_observation`` (a second Observation -- the parse-level one
-    rides the pre-split frame and cannot be observed twice).  Clean rows
-    stay byte-identical to the strict run."""
-    env = read_envelopes(
-        spark, source_path, collection, expand=False, permissive=permissive
-    )
-    if observation is not None:
-        env = env.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_envelopes"),
-            F.count(F.when(F.col("env.db_object").isNull(), 1)).alias(
-                "n_quarantined"
-            ),
-        )
-    good, quarantined = quarantine_missing_db_object(env)
-    processed = decrypt_and_process(
-        good,
+    steps/ingesters.py:526-539)."""
+    rows, quarantined = ingest_lines(
+        spark.read.text(source_path),
+        collection,
         key_service,
         audit=audit,
+        permissive=permissive,
         hit_acc=hit_acc,
         miss_acc=miss_acc,
-        permissive=permissive,
+        observation=observation,
+        decrypt_observation=decrypt_observation,
     )
-    if permissive:
-        if decrypt_observation is not None:
-            processed = processed.observe(
-                decrypt_observation,
-                F.count(F.when(F.col("val").isNull(), 1)).alias(
-                    "n_undecryptable"
-                ),
-            )
-        ok = processed.filter(F.col("val").isNotNull()).drop("value")
-        undecryptable = processed.filter(F.col("val").isNull()).select(
-            *quarantined.columns
-        )
-        quarantined = quarantined.unionByName(undecryptable)
-        return to_daily_rows(ok, export_date), quarantined
-    return to_daily_rows(processed, export_date), quarantined
+    return to_daily_rows(rows, export_date), quarantined

@@ -35,7 +35,6 @@ def merge_snapshot(
     dailies: DataFrame,
     keys: Sequence[str] = ("id_part", "id"),
     order_by: Sequence = None,
-    range_partitions: int | None = None,
 ) -> DataFrame:
     """Union + window-dedup merge (reference steps/ingesters.py:448-457).
 
@@ -43,20 +42,17 @@ def merge_snapshot(
     INSERT lexically, so a day's DELETE wins over the snapshot's INSERT
     (docs/data-engineering-summary.md:110-115).
 
-    Scale notes: `range_partitions=None` leaves the exchange width to AQE
-    (the reference hard-coded 4096 with a TODO).  When both inputs were
+    Scale notes: the range exchange's width is left to AQE (the
+    reference hard-coded 4096 with a TODO).  When both inputs were
     written range-clustered by (id_part, id) -- the engine's write
     discipline -- the range exchange resamples into nearly-sorted runs, and
     the per-partition sort is cheap.  Skewed ids are split by AQE.
     """
     cols = [F.col(c) for c in ("id", "db_type", "val", "id_part")]
     unioned = snapshot.select(*cols).unionAll(dailies.select(*cols))
-    clustered = (
-        unioned.repartitionByRange(range_partitions, *keys)
-        if range_partitions
-        else unioned.repartitionByRange(*keys)
+    return latest_by_key(
+        unioned.repartitionByRange(*keys), keys, order_by or [F.col("db_type").asc()]
     )
-    return latest_by_key(clustered, keys, order_by or [F.col("db_type").asc()])
 
 
 def snapshot_diff(

@@ -118,8 +118,7 @@ def run_day(spark: SparkSession, cfg: EngineConfig, date: str) -> int:
         )
     else:
         # ingest_daily output always carries the crypto/envelope pandas
-        # UDFs: persist across the range-sampler's double execution,
-        # stated explicitly so the writer skips its plan probe
+        # UDFs: persist across the range-sampler's double execution
         write_daily(
             rows,
             spec.output_root,

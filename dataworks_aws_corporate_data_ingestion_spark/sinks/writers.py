@@ -15,32 +15,13 @@ from pyspark.sql import DataFrame
 DAILY_PARTITIONS = ("export_year", "export_month", "export_day", "id_part")
 
 
-def _has_python_stage(df: DataFrame) -> bool:
-    """Detect Python UDF stages from the ANALYZED logical plan's JSON
-    (PythonUDF expression nodes carry their class name there).  The
-    round-3 probe inspected executedPlan() -- full physical planning,
-    measured 268 ms/call on a plain columnar input, which alone explained
-    most of the write_daily bench regression.  toJSON on the analyzed
-    plan is ~2-5x cheaper and needs no physical planning; callers that
-    know their input (the engine's own call sites) pass `stabilize`
-    explicitly and skip the probe entirely."""
-    try:
-        return "PythonUDF" in df._jdf.queryExecution().analyzed().toJSON()
-    except Exception:
-        try:
-            return "EvalPython" in df._jdf.queryExecution().executedPlan().toString()
-        except Exception:
-            return False
-
-
 def write_daily(
     df: DataFrame,
     path: str,
     fmt: str = "orc",
     compression: str = "zlib",
-    num_partitions: int | None = None,
-    stabilize: bool | None = None,
-) -> bool:
+    stabilize: bool = False,
+) -> None:
     """Daily-delta write (reference steps/ingesters.py:534-538):
     repartitionByRange(id_part, id) + sortWithinPartitions(id) + dynamic
     partition overwrite, so re-runs replace only the day they touch.
@@ -52,12 +33,9 @@ def write_daily(
     the single most expensive hidden cost of this write shape (it also
     double-counts any accumulators riding the UDFs).  True persists the
     input (memory-then-disk) across the two executions and unpersists
-    after the write; None (default) auto-detects: persist iff the plan
-    contains a Python stage, since a pure-columnar chain usually rescans
-    cheaper than it spills.  Returns the resolved decision (useful for
-    tests/observability)."""
-    if stabilize is None:
-        stabilize = _has_python_stage(df)
+    after the write; pass it for ingest_daily output (plans.runner does).
+    The default False suits pure-columnar inputs, which usually rescan
+    cheaper than they spill."""
     handle = None
     if stabilize:
         from pyspark.storagelevel import StorageLevel
@@ -65,13 +43,9 @@ def write_daily(
         handle = df.persist(StorageLevel.MEMORY_AND_DISK)
         df = handle
     try:
-        cluster = (
-            df.repartitionByRange(num_partitions, "id_part", "id")
-            if num_partitions
-            else df.repartitionByRange("id_part", "id")
-        )
         (
-            cluster.sortWithinPartitions("id")
+            df.repartitionByRange("id_part", "id")
+            .sortWithinPartitions("id")
             .write.option("partitionOverwriteMode", "dynamic")
             .partitionBy(*DAILY_PARTITIONS)
             .format(fmt)
@@ -82,7 +56,6 @@ def write_daily(
     finally:
         if handle is not None:
             handle.unpersist()
-    return stabilize
 
 
 def write_snapshot(

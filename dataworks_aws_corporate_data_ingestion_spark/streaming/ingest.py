@@ -3,9 +3,10 @@ stream.
 
 The reference's closest analogue is its per-day re-run loop (reference
 steps/corporate_data_ingestion.py:100-117); here the same transform chain
-runs as a file-source stream with `availableNow` -- process everything
-that has landed, checkpoint, stop -- i.e. trigger-once incremental batches
-with exactly-once file tracking instead of date arithmetic.
+(operators/ingest.py::ingest_lines) runs as a file-source stream with
+`availableNow` -- process everything that has landed, checkpoint, stop --
+i.e. trigger-once incremental batches with exactly-once file tracking
+instead of date arithmetic.
 """
 
 from __future__ import annotations
@@ -15,23 +16,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.crypto import KeyService
-from ..functions.udfs import decrypt_process_udf, envelope_udf
+from ..operators.ingest import ingest_lines
 
 _LINE_SCHEMA = StructType([StructField("value", StringType())])
 
 
-def stream_envelopes(
-    spark: SparkSession, source_dir: str, collection: str | None = None
-) -> DataFrame:
-    """readStream over a JSONL landing directory; new files become
-    micro-batch input exactly once (checkpoint-tracked)."""
-    lines = (
-        spark.readStream.schema(_LINE_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .text(source_dir)
-    )
-    return lines.withColumn("env", envelope_udf(collection)(F.col("value"))).select(
-        "env.*"
+def to_stream_rows(rows: DataFrame) -> DataFrame:
+    """The streaming sink's row shape over ingest_lines' rows."""
+    return rows.select(
+        "id",
+        "db",
+        "collection",
+        "val",
+        F.when(F.col("is_delete"), F.lit("DELETE"))
+        .otherwise(F.lit("INSERT"))
+        .alias("db_type"),
     )
 
 
@@ -45,38 +44,24 @@ def streaming_ingest_query(
     audit: bool = False,
     available_now: bool = True,
 ):
-    """Build and start the incremental ingest: envelope -> fused
-    decrypt/validate/sanitise (one Arrow crossing, same as the batch
-    path) -> parquet append sink.
+    """Build and start the incremental ingest: readStream over a JSONL
+    landing directory (new files become micro-batch input exactly once,
+    checkpoint-tracked) -> ingest_lines, the batch path's chain -> parquet
+    append sink.  Null-dbObject rows are dropped, as the batch path
+    quarantines them.
 
     Returns the StreamingQuery; callers awaitTermination() (availableNow
     drains the backlog then stops -- the streaming replacement for the
     reference's date-range driver loop)."""
-    env = stream_envelopes(spark, source_dir, collection)
-    good = env.filter(F.col("db_object").isNotNull())
-    proc = decrypt_process_udf(key_service, audit=audit)
-    out = good.withColumn(
-        "payload",
-        proc(
-            F.col("db_object"),
-            F.col("encrypted_encryption_key"),
-            F.col("initialisation_vector"),
-            F.col("key_encryption_key_id"),
-            F.col("db"),
-            F.col("collection"),
-            F.col("last_modified"),
-        ),
-    ).select(
-        "id",
-        "db",
-        "collection",
-        F.col("payload.val").alias("val"),
-        F.when(F.col("payload.is_delete"), F.lit("DELETE"))
-        .otherwise(F.lit("INSERT"))
-        .alias("db_type"),
+    lines = (
+        spark.readStream.schema(_LINE_SCHEMA)
+        .option("maxFilesPerTrigger", 64)
+        .text(source_dir)
     )
+    rows, _ = ingest_lines(lines, collection, key_service, audit=audit)
     writer = (
-        out.writeStream.format("parquet")
+        to_stream_rows(rows)
+        .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

@@ -388,20 +388,17 @@ def _materialize_cdi_fixture(spark: SparkSession, sf_dir: str, fix_dir: str) -> 
 
 def _cdi_pipeline_from_files(spark: SparkSession, fix_dir: str) -> DataFrame:
     from .functions.crypto import IdentityKeyService
-    from .operators.ingest import (
-        decrypt_and_process,
-        quarantine_missing_db_object,
-        read_envelopes,
-        to_daily_rows,
-    )
+    from .operators.ingest import ingest_daily
     from .workloads.cdi_pipeline import EXPORT_DATE
 
-    env = read_envelopes(
-        spark, fix_dir, "calculator:calculationParts", expand=False
+    rows, _quarantined = ingest_daily(
+        spark,
+        fix_dir,
+        "calculator:calculationParts",
+        IdentityKeyService(),
+        EXPORT_DATE,
     )
-    good, _quarantined = quarantine_missing_db_object(env)
-    processed = decrypt_and_process(good, IdentityKeyService())
-    return to_daily_rows(processed, EXPORT_DATE)
+    return rows
 
 
 BENCH_FIXTURES["cdi_ingest_pipeline"] = {
@@ -446,8 +443,7 @@ def _bench_write_daily(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     from .sinks.writers import write_daily
 
     # pure-columnar input: no persist needed across the range sampler's
-    # double execution, stated explicitly so the bench never pays the
-    # writer's plan probe (the round-3 +22% regression was the probe)
+    # double execution
     write_daily(
         _daily_rows_from_events(spark, sf_dir), f"{out_dir}/daily", stabilize=False
     )
@@ -700,40 +696,21 @@ def _probe_write_daily_zordered(
 def _probe_streaming_ingest(
     spark: SparkSession, sf_dir: str, out_dir: str
 ) -> DataFrame:
-    """Batch twin of the streaming ingest's per-batch plan: identical
-    expression chain over a batch read of the same landing dir, so the
-    plan_sha pins the transformation the stream executes each
-    micro-batch (streaming physical plans carry per-run state ids that
-    would defeat the sha normalisation)."""
+    """Batch twin of the streaming ingest's per-batch plan: the same
+    ingest_lines chain and row projection over a batch read of the same
+    landing dir, so the plan_sha pins the transformation the stream
+    executes each micro-batch (streaming physical plans carry per-run
+    state ids that would defeat the sha normalisation)."""
     from .functions.crypto import IdentityKeyService
-    from .functions.udfs import decrypt_process_udf, envelope_udf
+    from .operators.ingest import ingest_lines
+    from .streaming.ingest import to_stream_rows
 
-    lines = spark.read.text(f"{out_dir}/stream_src")
-    env = lines.withColumn(
-        "env", envelope_udf("calculator:calculationParts")(F.col("value"))
-    ).select("env.*")
-    good = env.filter(F.col("db_object").isNotNull())
-    proc = decrypt_process_udf(IdentityKeyService())
-    return good.withColumn(
-        "payload",
-        proc(
-            F.col("db_object"),
-            F.col("encrypted_encryption_key"),
-            F.col("initialisation_vector"),
-            F.col("key_encryption_key_id"),
-            F.col("db"),
-            F.col("collection"),
-            F.col("last_modified"),
-        ),
-    ).select(
-        "id",
-        "db",
-        "collection",
-        F.col("payload.val").alias("val"),
-        F.when(F.col("payload.is_delete"), F.lit("DELETE"))
-        .otherwise(F.lit("INSERT"))
-        .alias("db_type"),
+    rows, _quarantined = ingest_lines(
+        spark.read.text(f"{out_dir}/stream_src"),
+        "calculator:calculationParts",
+        IdentityKeyService(),
     )
+    return to_stream_rows(rows)
 
 
 WRITE_BENCH_PLAN_PROBES["write_daily_clustered_orc"] = _probe_write_daily

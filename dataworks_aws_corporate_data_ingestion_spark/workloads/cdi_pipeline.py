@@ -33,12 +33,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.crypto import IdentityKeyService
-from ..operators.ingest import (
-    decrypt_and_process,
-    quarantine_missing_db_object,
-    to_daily_rows,
-)
-from ..functions.udfs import envelope_udf
+from ..operators.ingest import ingest_lines, to_daily_rows
 from ..partitioning import fan_out
 from ..sources.tables import load_table
 from ..workload import register
@@ -261,14 +256,10 @@ def cdi_audit_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     lines = enc.select(line.alias("value"))
-    # env stays packed through the quarantine split -- expanding first
-    # would double-evaluate the whole Python chain (see ingest.py)
-    env = lines.withColumn(
-        "env", envelope_udf("data:businessAudit")(F.col("value"))
+    rows, _quarantined = ingest_lines(
+        lines, "data:businessAudit", IdentityKeyService(), audit=True
     )
-    good, _quarantined = quarantine_missing_db_object(env)
-    processed = decrypt_and_process(good, IdentityKeyService(), audit=True)
-    return processed.select("id", "val", "is_delete")
+    return rows.select("id", "val", "is_delete")
 
 
 @register(
@@ -311,12 +302,9 @@ def cdi_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     quirk, delete-flag derivation, canonical key-sorted serialisation, and
     id_part bucketing all at once (reference steps/data.py + steps/dks.py +
     steps/ingesters.py:505-522)."""
-    lines = envelope_lines_from_events(spark, sf_dir)
-    # env stays packed through the quarantine split -- expanding first
-    # would double-evaluate the whole Python chain (see ingest.py)
-    env = lines.withColumn(
-        "env", envelope_udf("calculator:calculationParts")(F.col("value"))
+    rows, _quarantined = ingest_lines(
+        envelope_lines_from_events(spark, sf_dir),
+        "calculator:calculationParts",
+        IdentityKeyService(),
     )
-    good, _quarantined = quarantine_missing_db_object(env)
-    processed = decrypt_and_process(good, IdentityKeyService())
-    return to_daily_rows(processed, EXPORT_DATE)
+    return to_daily_rows(rows, EXPORT_DATE)

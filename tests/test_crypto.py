@@ -61,10 +61,13 @@ class TestKeyCache:
 
     def test_accumulators_surface_on_driver(self, spark):
         """Cache counters must cross the executor boundary via accumulators
-        when decryption runs inside a distributed job."""
+        when decryption runs inside a distributed job -- through the
+        shared ingest chain every caller composes."""
         from pyspark.sql import functions as F
 
-        from dataworks_aws_corporate_data_ingestion_spark.functions.udfs import decrypt_udf
+        from dataworks_aws_corporate_data_ingestion_spark.operators.ingest import (
+            ingest_lines,
+        )
         from tests.fixtures import make_batch
 
         hit_acc = spark.sparkContext.accumulator(0)
@@ -74,32 +77,21 @@ class TestKeyCache:
         # shared with other fixtures would already be warm and the
         # hit/miss split below would depend on test order
         lines, _ = make_batch(60, seed=424242, n_keys=5)
-        env = read_envelopes_from_df(spark, lines)
-        dec = decrypt_udf(IdentityKeyService(), hit_acc=hit_acc, miss_acc=miss_acc)
-        out = env.coalesce(1).withColumn(
-            "decrypted",
-            dec(
-                F.col("db_object"),
-                F.col("encrypted_encryption_key"),
-                F.col("initialisation_vector"),
-                F.col("key_encryption_key_id"),
-            ),
+        # one partition => one Python worker => one key cache
+        lines_df = spark.createDataFrame([(l,) for l in lines], ["value"]).coalesce(1)
+        rows, _ = ingest_lines(
+            lines_df,
+            "calculator:calculationParts",
+            IdentityKeyService(),
+            hit_acc=hit_acc,
+            miss_acc=miss_acc,
         )
         # force evaluation of the UDF column (a bare count() would let
-        # Catalyst prune the decrypted column and skip decryption entirely)
-        n = out.filter(F.col("decrypted").isNotNull()).count()
+        # Catalyst prune the payload column and skip decryption entirely)
+        n = rows.filter(F.col("val").isNotNull()).count()
         assert n == 60
         assert miss_acc.value == 5
         assert hit_acc.value == 55
-
-
-def read_envelopes_from_df(spark, lines):
-    from pyspark.sql import functions as F
-
-    from dataworks_aws_corporate_data_ingestion_spark.functions.udfs import envelope_udf
-
-    df = spark.createDataFrame([(l,) for l in lines], ["value"])
-    return df.withColumn("env", envelope_udf()(F.col("value"))).select("value", "env.*")
 
 
 class TestHttpKeyService:

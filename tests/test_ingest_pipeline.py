@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -288,35 +287,73 @@ class TestObserveIngest:
 
 
 class TestWriteStabilize:
-    def test_udf_input_is_stabilized_and_columnar_is_not(self, spark, tmp_path):
-        """The range sampler executes the write input twice; write_daily
-        must persist across that iff the chain contains a Python stage
-        (re-running crypto UDFs to learn range bounds is the hidden 2x)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
+    def test_stabilized_write_decrypts_each_record_once(self, spark, tmp_path):
+        """The range sampler executes the write input twice.  With
+        stabilize=True write_daily persists across it, so the crypto chain
+        decrypts each record exactly once (one key-cache lookup, hit or
+        miss, per decrypt); without it the sampler reruns the chain."""
+        lines, _ = make_batch(40, seed=515151, n_keys=3)
+        src = _write_lines(tmp_path, lines)
 
-        from dataworks_aws_corporate_data_ingestion_spark.sinks.writers import write_daily
+        def key_lookups(stabilize: bool) -> int:
+            hit_acc = spark.sparkContext.accumulator(0)
+            miss_acc = spark.sparkContext.accumulator(0)
+            rows, _ = ingest_daily(
+                spark, src, "calculator:calculationParts",
+                IdentityKeyService(), "2023-05-02",
+                hit_acc=hit_acc, miss_acc=miss_acc,
+            )
+            out = str(tmp_path / f"daily_{stabilize}")
+            write_daily(
+                rows, out, fmt="parquet", compression="snappy",
+                stabilize=stabilize,
+            )
+            assert spark.read.parquet(out).count() == 40
+            return hit_acc.value + miss_acc.value
 
-        base = spark.range(50).select(
-            F.lpad(F.col("id").cast("string"), 4, "0").alias("id"),
-            F.lit(2024).alias("export_year"),
-            F.lit(1).alias("export_month"),
-            F.lit(2).alias("export_day"),
-            F.lit("INSERT").alias("db_type"),
-            F.col("id").cast("string").alias("val"),
-        ).withColumn("id_part", F.substring("id", 1, 2))
+        assert key_lookups(True) == 40
+        assert key_lookups(False) > 40
 
-        assert write_daily(base, str(tmp_path / "plain")) is False
 
-        @pandas_udf(StringType())
-        def _shout(v: pd.Series) -> pd.Series:
-            return v.str.upper()
+class TestStreamBatchParity:
+    def test_stream_rows_equal_batch_rows(self, spark, tmp_path):
+        """streaming_ingest_query and ingest_daily compose the same chain:
+        for the same landing files their (id, val, db_type) rows match,
+        and both drop the null-dbObject line."""
+        from dataworks_aws_corporate_data_ingestion_spark.streaming.ingest import (
+            streaming_ingest_query,
+        )
 
-        with_udf = base.withColumn("val", _shout(F.col("val")))
-        assert write_daily(with_udf, str(tmp_path / "udf")) is True
-        # both layouts readable and complete
-        assert spark.read.orc(str(tmp_path / "plain")).count() == 50
-        got = spark.read.orc(str(tmp_path / "udf"))
-        assert got.count() == 50
-        assert got.filter(F.col("val") == "0007").count() == 0  # uppercased... digits unchanged
+        lines, _ = make_batch(20, seed=626262, delete_every=4)
+        broken = json.loads(lines[3])
+        broken["message"]["dbObject"] = None
+        lines[3] = json.dumps(broken)
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        _write_lines(landing, lines, name="day.jsonl")
+
+        batch_rows, _ = ingest_daily(
+            spark, str(landing), "calculator:calculationParts",
+            IdentityKeyService(), "2023-05-02",
+        )
+        want = sorted(
+            (r["id"], r["val"], r["db_type"]) for r in batch_rows.collect()
+        )
+        assert len(want) == 19
+        assert {db_type for _, _, db_type in want} == {"INSERT", "DELETE"}
+
+        out = str(tmp_path / "stream_out")
+        q = streaming_ingest_query(
+            spark, str(landing), out, str(tmp_path / "ckpt"),
+            "calculator:calculationParts", IdentityKeyService(),
+        )
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            if q.isActive:
+                q.stop()
+        got = sorted(
+            (r["id"], r["val"], r["db_type"])
+            for r in spark.read.parquet(out).collect()
+        )
+        assert got == want
