@@ -416,8 +416,9 @@ def _measure_anchor(spark, sf_dir: str, sf: float, repeats: int) -> dict:
     """Time the anchor probe under the same shield/record discipline as a
     regular entry and compare to the committed reference.  The ratio is
     only published when the probe's plan_sha matches the anchor's (a
-    changed probe plan would measure the change, not the era) and the SF
-    matches (different data volume, different cost)."""
+    changed probe plan would measure the change, not the era), the SF
+    matches (different data volume, different cost) and the host has the
+    anchor's CPU count (a different machine, not a different era)."""
     ref = _anchor_ref()
     probe = (ref or {}).get("probe", "q1_pricing_summary")
     spec = QUERIES.get(probe)
@@ -452,6 +453,12 @@ def _measure_anchor(spark, sf_dir: str, sf: float, repeats: int) -> dict:
     elif rec["plan_sha"] != ref.get("plan_sha"):
         anchor["comparable"] = False
         anchor["reason"] = "probe plan_sha changed since anchor was set"
+    elif ref.get("host_cpus") != os.cpu_count():
+        anchor["comparable"] = False
+        anchor["reason"] = (
+            f"anchor set on a {ref.get('host_cpus')}-cpu host,"
+            f" this host has {os.cpu_count()}"
+        )
     elif not ref.get("ref_best_sec"):
         anchor["comparable"] = False
         anchor["reason"] = "anchor has no ref_best_sec"

@@ -35,15 +35,14 @@ def publish_snapshot_tables(
     snapshot_path: str,
     tables: list[TableSpec],
     snapshot_format: str = "orc",
-    num_partitions: int | None = None,
 ) -> None:
     """Impose each DDL schema over the snapshot's `val` JSON and publish as
     a managed table (reference steps/ingesters.py:283-339).
 
     Scale notes: one snapshot scan feeds N tables via a DISK_ONLY persist
     (the reference's exact trick); per-table output re-clusters by range on
-    (id_part, id) so downstream scans prune.  AQE sizes the exchange when
-    num_partitions is None (the reference hard-coded 1024)."""
+    (id_part, id) so downstream scans prune.  AQE sizes the exchange (the
+    reference hard-coded 1024)."""
     source = (
         spark.read.schema("id string, id_part string, db_type string, val string")
         .format(snapshot_format)
@@ -52,16 +51,12 @@ def publish_snapshot_tables(
     )
     try:
         for spec in tables:
-            parsed = source.select(
-                F.from_json("val", spec.json_schema).alias("val"), "id_part", "id"
-            )
-            clustered = (
-                parsed.repartitionByRange(num_partitions, "id_part", "id")
-                if num_partitions
-                else parsed.repartitionByRange("id_part", "id")
-            )
             (
-                clustered.select("val.*")
+                source.select(
+                    F.from_json("val", spec.json_schema).alias("val"), "id_part", "id"
+                )
+                .repartitionByRange("id_part", "id")
+                .select("val.*")
                 .write.format("parquet")
                 .mode("overwrite")
                 .saveAsTable(spec.table_name)

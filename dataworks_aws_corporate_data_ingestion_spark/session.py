@@ -14,10 +14,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the local[32]/128GiB test harness; on a real cluster
-# these are overridden by spark-submit conf.  They are *ratios and toggles*,
-# not sizes, so they scale: AQE resizes shuffles at runtime from actual map
-# output statistics rather than from a guess made at plan time.
+# Defaults chosen for the local test harness; on a real cluster these are
+# overridden by spark-submit conf.  They are *ratios and toggles*, not
+# sizes, so they scale: AQE resizes shuffles at runtime from actual map
+# output statistics rather than from a guess made at plan time.  The host-
+# and master-dependent settings are added by get_session.
 _DEFAULTS = {
     # AQE replaces hard-coded shuffle widths; coalesces tiny partitions and
     # splits skewed ones (the reference's id_part hotspots) at runtime.
@@ -37,13 +38,35 @@ _DEFAULTS = {
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
     ),
     "spark.sql.session.timeZone": "UTC",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
 }
+
+
+def _default_driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else the smaller of 32g and half the host's
+    physical memory: a heap ceiling above the machine's RAM lets the JVM
+    grow until the kernel kills it instead of collecting."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    return f"{min(32 * 1024, half_mb)}m"
 
 
 def default_master() -> str:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     return f"local[{cpus}]"
+
+
+def _session_conf(master: str, extra_conf: dict[str, str] | None) -> dict[str, str]:
+    conf = dict(_DEFAULTS, **{"spark.driver.memory": _default_driver_memory()})
+    if master == "local" or master.startswith("local["):
+        # executors are driver threads, so a distributed listing job buys
+        # no parallelism: list every partition directory on the driver
+        conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(
+            2**31 - 1
+        )
+    conf.update(extra_conf or {})
+    return conf
 
 
 def get_session(
@@ -53,13 +76,9 @@ def get_session(
     hive: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults applied."""
-    builder = SparkSession.builder.appName(app_name).master(
-        master or default_master()
-    )
-    conf = dict(_DEFAULTS)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    master = master or default_master()
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in _session_conf(master, extra_conf).items():
         builder = builder.config(k, v)
     if hive:
         builder = builder.enableHiveSupport()

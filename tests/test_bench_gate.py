@@ -49,3 +49,39 @@ class TestLoadGate:
         gate = bench._load_gate()
         assert not gate["aborted"]
         assert gate["load1_at_gate"] is None
+
+
+class TestAnchorHostShape:
+    """The era anchor compares one host across time; a probe timed on a
+    machine with a different CPU count measures the machine, not the era."""
+
+    def _measure(self, monkeypatch, spark, sf_dir, host_cpus):
+        ref = {
+            "probe": "q1_pricing_summary",
+            "sf": 0.1,
+            "plan_sha": "abc",
+            "ref_best_sec": 1.0,
+            "host_cpus": host_cpus,
+        }
+        monkeypatch.setattr(bench, "_anchor_ref", lambda: ref)
+        monkeypatch.setattr(
+            bench, "_wait_for_quiet", lambda budget: ({"ext_busy_cores": 0.0}, 0.0)
+        )
+        monkeypatch.setattr(
+            bench,
+            "_timed_record",
+            lambda spark, run_once, repeats: {"best": 2.0, "median": 2.0},
+        )
+        monkeypatch.setattr(bench, "plan_sha", lambda df: "abc")
+        return bench._measure_anchor(spark, sf_dir, 0.1, 1)
+
+    def test_other_cpu_count_is_not_comparable(self, monkeypatch, spark, sf_dir):
+        anchor = self._measure(monkeypatch, spark, sf_dir, bench.os.cpu_count() + 1)
+        assert anchor["comparable"] is False
+        assert "cpu host" in anchor["reason"]
+        assert "era_ratio" not in anchor
+
+    def test_same_cpu_count_is_comparable(self, monkeypatch, spark, sf_dir):
+        anchor = self._measure(monkeypatch, spark, sf_dir, bench.os.cpu_count())
+        assert anchor["comparable"] is True
+        assert anchor["era_ratio"] == 2.0

@@ -129,6 +129,40 @@ class TestPublish:
         assert view.count() == 5
 
 
+class TestPartitionListing:
+    """Loading an id_part tree wider than Spark's parallel-discovery
+    threshold (32) lists it on the driver: on a local master the listing
+    job's tasks would run on driver threads anyway."""
+
+    def test_wide_trees_load_without_a_spark_job(self, spark, tmp_path):
+        schema = "id string, db_type string, val string, id_part string"
+        parts = [f"{i:02x}" for i in range(40)]
+        rows = [(f"id{p}", "INSERT", f'{{"p": "{p}"}}', p) for p in parts]
+        df = spark.createDataFrame(rows, schema)
+        snap, daily = str(tmp_path / "snap"), str(tmp_path / "daily")
+        df.write.partitionBy("id_part").parquet(snap)
+        df.withColumn("export_year", F.lit(2023)).withColumn(
+            "export_month", F.lit(5)
+        ).withColumn("export_day", F.lit(1)).write.partitionBy(
+            "export_year", "export_month", "export_day", "id_part"
+        ).parquet(daily)
+
+        sc = spark.sparkContext
+        group = "wide-tree-listing"
+        sc.setJobGroup(group, "load wide id_part trees")
+        try:
+            snapshot = spark.read.schema(schema).format("parquet").load(snap)
+            dailies = read_dailies_since(spark, daily, "2023-04-30")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+        for loaded in (snapshot, dailies):
+            got = loaded.select(*df.columns).collect()
+            assert sorted(tuple(r) for r in got) == sorted(rows)
+
+
 class TestRunner:
     def test_date_range(self):
         assert date_range("2023-05-01", "2023-05-03") == [
