@@ -496,6 +496,35 @@ def _prev_details() -> tuple[int, float, dict, dict | None] | None:
     )
 
 
+def classify(
+    old: dict | None,
+    new: dict | None,
+    ot: float,
+    nt: float,
+    thr: float,
+    era: float | None,
+) -> str:
+    """One entry's round-over-round class from its old/new details
+    records, old/new best seconds, the steady threshold and the era
+    ratio (None when no shared anchor) -- the ladder _classify_vs_prev
+    documents.  tools/bench_diff.py classifies with this same function."""
+    osha = (old or {}).get("plan_sha")
+    nsha = (new or {}).get("plan_sha")
+    if osha and nsha and osha != nsha:
+        return "PLAN-CHANGED"
+    rel = (nt - ot) / ot if ot else 0.0
+    if abs(rel) <= thr:
+        return "steady"
+    if era:
+        expected = ot * era
+        if expected and abs(nt - expected) / expected <= thr:
+            return "ERA-DRIFT"
+    nb, nm = (new or {}).get("best"), (new or {}).get("median")
+    if nb and nm and nm > nb * 1.8:
+        return "HOST-NOISE?"
+    return "FASTER" if rel < 0 else "SLOWER"
+
+
 def _classify_vs_prev(details: dict, anchor: dict, sf: float) -> None:
     """Stamp each entry with its round-over-round adjudication
     (tools/bench_diff.py semantics, r10 verdict item #5: noise victims
@@ -553,26 +582,14 @@ def _classify_vs_prev(details: dict, anchor: dict, sf: float) -> None:
         ot, nt = old["best"], rec.get("best")
         if not ot or not nt:
             continue
-        osha, nsha = old.get("plan_sha"), rec.get("plan_sha")
-        rel = (nt - ot) / ot
-        if osha and nsha and osha != nsha:
-            cls = "PLAN-CHANGED"
-        elif abs(rel) <= thr:
-            cls = "steady"
-        elif era and abs(nt - ot * era) / (ot * era) <= thr:
-            cls = "ERA-DRIFT"
-        elif rec.get("median") and rec["median"] > nt * 1.8:
-            cls = "HOST-NOISE?"
-        else:
-            cls = "FASTER" if rel < 0 else "SLOWER"
         rec["vs_prev"] = {
             "ref_round": rnd,
             "ref_best": ot,
-            "rel_delta": round(rel, 3),
+            "rel_delta": round((nt - ot) / ot, 3),
             "era_ratio_vs_ref": None if era is None else round(era, 3),
-            "class": cls,
+            "class": classify(old, rec, ot, nt, thr, era),
             "pin_sha_match": (
-                None if name not in pins else pins[name] == nsha
+                None if name not in pins else pins[name] == rec.get("plan_sha")
             ),
         }
 

@@ -76,7 +76,7 @@ def mg_summary(
     by at most W_p/(k+1); summaries are mergeable (sum per key,
     optionally re-trim with `_mg_reduce`) with errors adding like the
     bound -- the property the streaming admission
-    (streaming/mg_admission.py) folds across micro-batches.
+    (streaming/summary_admission.py) folds across micro-batches.
 
     Arrow batches arrive via mapInPandas; each batch is pre-combined
     with a vectorised groupby-sum so the Python-side dict only sees

@@ -1,11 +1,19 @@
 """Shared catalog-as-state streaming-admission framework.
 
-Every admission family ({lm,span,mg,cms,hist,bloom,dedup}_admission)
-follows the same replay-safe protocol over parquet catalog tables:
+Every admission family ({lm,span,bloom,dedup}_admission and the MG /
+CMS / histogram specs of summary_admission) makes micro-batch folding
+replay-safe over parquet catalog tables with the same two helpers:
 
   token = caller's foreachBatch batch_id, else the order-insensitive
           sum/xor/count content hash of the batch's id set
-          (span_admission.batch_content_token -- the one definition)
+          (batch_content_token -- the one definition)
+  refresh_state_tables before reading and after appending, because
+          foreachBatch runs under a cloned session
+
+The mergeable-summary families (summary_admission.py) additionally run
+the full shell defined here -- the fused probe (batch_admission_state /
+probe_with_summary), append_once, the ledger and compact_index:
+
   for each state table, IN A FIXED ORDER:
       if the table lacks the token -> append the batch's BOUNDED
       partial (a sketch / counter table, never the batch itself) plus
@@ -17,17 +25,9 @@ follows the same replay-safe protocol over parquet catalog tables:
 Crash atomicity falls out of the per-table marker: a crash between the
 table appends leaves a window where only a prefix of the tables holds
 the token, and the replay appends exactly the missing suffix --
-certified per family by the *_admission_streaming_certificate registry
-entries (admit, replay mid-sequence, crash-window replay, compact,
-exact-verify against a one-shot oracle).
-
-The seven family modules each re-implemented this shell (~150 LoC of
-ledger check + marker append + compaction plumbing); this module is
-the single implementation (r8 verdict item #5), with mg_admission and
-cms_admission re-expressed on it.  The family modules keep their
-public APIs and their family-specific logic (what the bounded partial
-IS, what folding MEANS -- e.g. the MG re-trim rule); the certificates
-and replay/crash-window pytests pin the refactor hash-for-hash.
+certified by the *_admission_streaming_certificate registry entries
+(admit, replay mid-sequence, crash-window replay, compact, exact-verify
+against a one-shot oracle).
 """
 
 from __future__ import annotations
@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "batch_content_token",
-    "batch_token_and_measure",
     "batch_admission_state",
     "probe_with_summary",
     "refresh_state_tables",
@@ -85,31 +84,7 @@ def batch_content_token(
     count pins the multiset size, so a collision now needs all three to
     agree AND blake2b to collide on the packed triple.  Kept under 2^62
     so stream batch ids offset by (1 << 62) stay disjoint."""
-    return batch_token_and_measure(batch_df, id_col)[0]
-
-
-def batch_token_and_measure(
-    batch_df: DataFrame,
-    id_col: str = "doc_id",
-    weight_col: str | None = None,
-) -> tuple[int, int]:
-    """batch_content_token + ledger_measure from ONE scan of the batch.
-
-    The token math is bit-identical to what batch_content_token always
-    produced (same three combiners through the same blake2b finaliser,
-    and the count combiner is already the unweighted ledger measure);
-    with `weight_col` the same aggregate additionally sums the weight
-    mass.  Admission rounds always need both values -- the token to
-    decide replay, the measure on first admission -- and the token
-    aggregate already reads every batch row, so folding the measure in
-    removes one full batch scan per admitted batch (r10 optimization:
-    guide section 1.2, remove passes before tuning per-task work --
-    measured one full slice scan + job per admitted micro-batch in
-    mg_admission_streaming_certificate)."""
-    token, measure, _ = batch_admission_state(
-        batch_df.sparkSession, batch_df, id_col, weight_col
-    )
-    return token, measure
+    return batch_admission_state(batch_df.sparkSession, batch_df, id_col)[0]
 
 
 # Driver-side bound on the marker summary each state table ships per
@@ -489,8 +464,8 @@ def admit_ledger_once(
 ) -> bool:
     """Append the (n_rows, batch_token) ledger row iff absent.  Pass
     `measure` when the caller already holds the batch's ledger
-    contribution (batch_token_and_measure computes it in the token
-    scan) to skip re-scanning the batch, and `committed` when the
+    contribution (batch_admission_state computes it in the token scan)
+    to skip re-scanning the batch, and `committed` when the
     caller already probed the marker (tokens_committed)."""
     return append_once(
         spark,

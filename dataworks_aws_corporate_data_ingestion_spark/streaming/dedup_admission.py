@@ -43,11 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import release_tracked
-from .span_admission import refresh_state_tables
 from ..operators.dedup import (
     append_to_minhash_index,
     near_dup_pairs_against_index,
 )
+from .admission import refresh_state_tables
 
 
 def admit_batch(
@@ -66,7 +66,7 @@ def admit_batch(
     # saveAsTable appends refreshed the clone's relation cache, not the
     # outer session's -- re-list the state tables or this batch would
     # dedup against a stale (possibly empty) index (see
-    # span_admission.refresh_state_tables)
+    # admission.refresh_state_tables)
     refresh_state_tables(spark, f"{prefix}_shingles", f"{prefix}_buckets")
     indexed_ids = spark.table(f"{prefix}_shingles").select(F.col(id_col))
     # pin the fresh/replayed split before the index append below changes

@@ -60,10 +60,7 @@ from ..operators.spandedup import (
     mask_duplicated_spans_incremental,
     ngram_positions,
 )
-# the shared protocol shell lives in admission.py (r8 verdict item #5);
-# re-exported here because this module defined them first and the
-# certificates / tests / sibling families import them from both homes
-from .admission import batch_content_token, refresh_state_tables  # noqa: F401
+from .admission import batch_content_token, refresh_state_tables
 
 
 def init_span_index(

@@ -19,6 +19,8 @@ these entries hash-match their oracles directly with no error envelope.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -391,10 +393,10 @@ def mg_admission_streaming_certificate(
 ) -> DataFrame:
     """Streaming heavy-hitter certification: admit the event stream in
     three micro-batch-shaped slices through the REAL admission round
-    (streaming/mg_admission.py::admit_mg_batch -- per-table batch_token
-    commit markers, replay ledger, bounded per-batch MG summaries),
-    REPLAY the second batch (must be a no-op), compact the partials
-    mid-sequence (compact_mg_index, re-trimmed to k), then exact-verify
+    (streaming/summary_admission.py::admit with the MG spec --
+    per-table batch_token commit markers, replay ledger, bounded
+    per-batch MG summaries), REPLAY the second batch (must be a no-op),
+    compact the partials mid-sequence (re-trimmed to k), then exact-verify
     heavy hitters off the final stored candidate state.  Hash-matching
     the one-shot GROUP BY + HAVING oracle proves N-batch streaming
     admission + replay + compaction preserves the Misra-Gries superset
@@ -405,11 +407,13 @@ def mg_admission_streaming_certificate(
     scan of the batch plus a <= k-row append; the stream is never
     re-read by admission or compaction.  The exact-verify recount runs
     over the archived corpus once, against broadcast candidates only."""
-    from ..streaming.mg_admission import (
-        admit_mg_batch,
-        compact_mg_index,
+    from ..operators.heavyhitters import mg_summary
+    from ..streaming.summary_admission import (
+        MG,
+        admit,
+        compact,
         heavy_hitters_from_state,
-        init_mg_index,
+        init,
     )
 
     e = load_table(spark, "events", sf_dir)
@@ -423,22 +427,23 @@ def mg_admission_streaming_certificate(
         e.filter((F.col("ts") >= d11) & (F.col("ts") < d21)),
         e.filter(F.col("ts") >= d21),
     ]
-    init_mg_index(spark, "mg_adm")
+    init(spark, MG, "mg_adm")
     for i, s in enumerate(slices):
         batch = s.select("event_id", key.alias("key"))
-        admit_mg_batch(
-            spark, batch, "mg_adm", key_col="key", k=_MG_K,
-            id_col="event_id",
+        summary = partial(mg_summary, batch.select("key"), ["key"], _MG_K)
+        admit(
+            spark, MG, batch, "mg_adm", summary,
+            id_col="event_id", k=_MG_K,
         )
         if i == 1:
             # at-least-once delivery: replaying an admitted batch must
             # be a no-op (commit markers), and compaction mid-sequence
             # must preserve both counts and markers
-            admit_mg_batch(
-                spark, batch, "mg_adm", key_col="key", k=_MG_K,
-                id_col="event_id",
+            admit(
+                spark, MG, batch, "mg_adm", summary,
+                id_col="event_id", k=_MG_K,
             )
-            compact_mg_index(spark, "mg_adm", k=_MG_K)
+            compact(spark, MG, "mg_adm", k=_MG_K)
     # the ledger total IS the corpus count: heavy_hitters_from_state
     # recounts the corpus and raises unless the two agree, and returns
     # the verified total (r11; supersedes the r10 separate ledger
@@ -1046,7 +1051,7 @@ def mg_admission_weighted_certificate(
     """WEIGHTED streaming heavy-hitter certification: the event stream's
     VALUE mass (exact integer cents) admitted in three batch-shaped
     slices through the real admission round with weight tracking
-    (admit_mg_batch(weight_col=) -- SpaceSaving-style weighted
+    (admit(MG, weight_col=) -- SpaceSaving-style weighted
     counters, weight-sum ledger), second batch replayed, partials
     compacted mid-sequence, then exact-verified off the final state.
     Hash-matches the one-shot weighted GROUP BY SUM + HAVING oracle --
@@ -1055,11 +1060,13 @@ def mg_admission_weighted_certificate(
     Scale notes: identical admission shape to the frequency twin; the
     ledger accumulates exact weight sums per batch, so the threshold is
     integer-exact over the whole stream."""
-    from ..streaming.mg_admission import (
-        admit_mg_batch,
-        compact_mg_index,
+    from ..operators.heavyhitters import mg_summary
+    from ..streaming.summary_admission import (
+        MG,
+        admit,
+        compact,
         heavy_hitters_from_state,
-        init_mg_index,
+        init,
     )
 
     e = load_table(spark, "events", sf_dir)
@@ -1074,21 +1081,25 @@ def mg_admission_weighted_certificate(
         e.filter((F.col("ts") >= d11) & (F.col("ts") < d21)),
         e.filter(F.col("ts") >= d21),
     ]
-    init_mg_index(spark, "mgw_adm")
+    init(spark, MG, "mgw_adm")
     for i, s in enumerate(slices):
         batch = s.select(
             "event_id", key.alias("key"), cents.alias("cents")
         )
-        admit_mg_batch(
-            spark, batch, "mgw_adm", key_col="key", k=_MG_K,
-            id_col="event_id", weight_col="cents",
+        summary = partial(
+            mg_summary, batch.select("key", "cents"), ["key"], _MG_K,
+            weight_col="cents",
+        )
+        admit(
+            spark, MG, batch, "mgw_adm", summary,
+            id_col="event_id", weight_col="cents", k=_MG_K,
         )
         if i == 1:
-            admit_mg_batch(
-                spark, batch, "mgw_adm", key_col="key", k=_MG_K,
-                id_col="event_id", weight_col="cents",
+            admit(
+                spark, MG, batch, "mgw_adm", summary,
+                id_col="event_id", weight_col="cents", k=_MG_K,
             )
-            compact_mg_index(spark, "mgw_adm", k=_MG_K)
+            compact(spark, MG, "mgw_adm", k=_MG_K)
     # the verified total IS sum(cents) over the stream:
     # heavy_hitters_from_state just computed that exact aggregate and
     # raised unless it equals the ledger, so returning it replaces a
@@ -1225,7 +1236,8 @@ def quantile_admission_streaming_certificate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming quantile-sketch certification
-    (streaming/hist_admission.py): the events stream is admitted in
+    (streaming/summary_admission.py, HIST spec): the events stream is
+    admitted in
     three micro-batch-shaped slices (event_id % 3) through the real
     histogram-admission round (bounded per-day bin partials, hist ->
     meta append order, commit markers), with the FIRST batch replayed
@@ -1253,33 +1265,36 @@ def quantile_admission_streaming_certificate(
     from math import ceil
 
     from ..operators.histsketch import cents_bin, daily_histogram
-    from ..streaming.hist_admission import (
-        admit_hist_batch,
-        compact_hist_index,
-        init_hist_index,
+    from ..streaming.summary_admission import (
+        HIST,
+        admit,
+        compact,
+        init,
         quantile_bins_from_state,
-        read_hist_state,
+        read_state,
     )
 
     e = load_table(spark, "events", sf_dir)
-    init_hist_index(spark, "qh_adm")
+    init(spark, HIST, "qh_adm")
     for i in range(3):
         batch = e.filter(F.col("event_id") % 3 == i)
-        admit_hist_batch(
-            spark, batch, "qh_adm", _HIST_BINS, _HIST_SPAN_CENTS
+        summary = partial(
+            daily_histogram, batch, "ts", "value", _HIST_BINS,
+            _HIST_SPAN_CENTS,
         )
+        admit(spark, HIST, batch, "qh_adm", summary, id_col="event_id")
         if i == 0:
-            _, n_before = read_hist_state(spark, "qh_adm")
-            admit_hist_batch(  # replay: must be a no-op
-                spark, batch, "qh_adm", _HIST_BINS, _HIST_SPAN_CENTS
+            _, n_before = read_state(spark, HIST, "qh_adm")
+            admit(  # replay: must be a no-op
+                spark, HIST, batch, "qh_adm", summary, id_col="event_id"
             )
-            _, n_after = read_hist_state(spark, "qh_adm")
+            _, n_after = read_state(spark, HIST, "qh_adm")
             if n_after != n_before:
                 raise AssertionError(
                     f"replayed batch changed ledger: {n_before} -> {n_after}"
                 )
         if i == 1:
-            compact_hist_index(spark, "qh_adm")
+            compact(spark, HIST, "qh_adm")
     bins, mass, picks = quantile_bins_from_state(
         spark, "qh_adm", [0.5, 0.9]
     )
@@ -1287,7 +1302,7 @@ def quantile_admission_streaming_certificate(
     if mass != n_events:
         raise AssertionError(f"histogram mass {mass} != corpus {n_events}")
     # append == rebuild, bit for bit
-    daily_state, _ = read_hist_state(spark, "qh_adm")
+    daily_state, _ = read_state(spark, HIST, "qh_adm")
     rebuild = daily_histogram(e, "ts", "value", _HIST_BINS, _HIST_SPAN_CENTS)
     diff = (
         daily_state.exceptAll(rebuild).count()
@@ -1556,7 +1571,8 @@ def cms_daily_rollup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cms_admission_streaming_certificate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Streaming Count-Min certification (streaming/cms_admission.py):
+    """Streaming Count-Min certification (streaming/summary_admission.py,
+    CMS spec):
     the events stream is admitted in three micro-batch-shaped slices
     (event_id % 3) through the real CMS-admission round (bounded d*w
     cell partials, cms -> meta append order, commit markers), with the
@@ -1572,11 +1588,12 @@ def cms_admission_streaming_certificate(
     aggregate of THAT BATCH (kilobytes appended); the stream is never
     re-read.  The exact recount exists only to certify."""
     from ..operators.cms import cms_point_estimates, cms_sketch
-    from ..streaming.cms_admission import (
-        admit_cms_batch,
-        compact_cms_index,
-        init_cms_index,
-        read_cms_state,
+    from ..streaming.summary_admission import (
+        CMS,
+        admit,
+        compact,
+        init,
+        read_state,
     )
 
     e = load_table(spark, "events", sf_dir)
@@ -1588,27 +1605,24 @@ def cms_admission_streaming_certificate(
             F.pmod(F.col("user_id"), F.lit(32)).cast("string"),
         ).alias("key"),
     )
-    init_cms_index(spark, "cms_adm")
+    init(spark, CMS, "cms_adm")
     for i in range(3):
         batch = keyed.filter(F.col("event_id") % 3 == i)
-        admit_cms_batch(
-            spark, batch, "cms_adm", _CMS_W, _CMS_D,
-            key_col="key", id_col="event_id",
-        )
+        summary = partial(cms_sketch, batch, "key", _CMS_W, _CMS_D)
+        admit(spark, CMS, batch, "cms_adm", summary, id_col="event_id")
         if i == 0:
-            _, n_before = read_cms_state(spark, "cms_adm")
-            admit_cms_batch(  # replay: must be a no-op
-                spark, batch, "cms_adm", _CMS_W, _CMS_D,
-                key_col="key", id_col="event_id",
+            _, n_before = read_state(spark, CMS, "cms_adm")
+            admit(  # replay: must be a no-op
+                spark, CMS, batch, "cms_adm", summary, id_col="event_id"
             )
-            _, n_after = read_cms_state(spark, "cms_adm")
+            _, n_after = read_state(spark, CMS, "cms_adm")
             if n_after != n_before:
                 raise AssertionError(
                     f"replayed batch changed ledger: {n_before} -> {n_after}"
                 )
         if i == 1:
-            compact_cms_index(spark, "cms_adm")
-    state, n_total = read_cms_state(spark, "cms_adm")
+            compact(spark, CMS, "cms_adm")
+    state, n_total = read_state(spark, CMS, "cms_adm")
     n_events = keyed.count()
     if n_total != n_events:
         raise AssertionError(f"ledger {n_total} != corpus {n_events}")
@@ -1748,11 +1762,12 @@ def cms_admission_weighted_certificate(
     {frequency, weighted} x {batch, streaming} CMS matrix, every cell
     oracle-certified, mirroring the MG matrix."""
     from ..operators.cms import cms_point_estimates, cms_sketch
-    from ..streaming.cms_admission import (
-        admit_cms_batch,
-        compact_cms_index,
-        init_cms_index,
-        read_cms_state,
+    from ..streaming.summary_admission import (
+        CMS,
+        admit,
+        compact,
+        init,
+        read_state,
     )
 
     e = load_table(spark, "events", sf_dir)
@@ -1765,27 +1780,30 @@ def cms_admission_weighted_certificate(
         ).alias("key"),
         F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
     )
-    init_cms_index(spark, "cmsw_adm")
+    init(spark, CMS, "cmsw_adm")
     for i in range(3):
         batch = keyed.filter(F.col("event_id") % 3 == i)
-        admit_cms_batch(
-            spark, batch, "cmsw_adm", _CMS_W, _CMS_D,
-            key_col="key", id_col="event_id", weight_col="cents",
+        summary = partial(
+            cms_sketch, batch, "key", _CMS_W, _CMS_D, weight_col="cents"
+        )
+        admit(
+            spark, CMS, batch, "cmsw_adm", summary,
+            id_col="event_id", weight_col="cents",
         )
         if i == 0:
-            _, n_before = read_cms_state(spark, "cmsw_adm")
-            admit_cms_batch(  # replay: must be a no-op
-                spark, batch, "cmsw_adm", _CMS_W, _CMS_D,
-                key_col="key", id_col="event_id", weight_col="cents",
+            _, n_before = read_state(spark, CMS, "cmsw_adm")
+            admit(  # replay: must be a no-op
+                spark, CMS, batch, "cmsw_adm", summary,
+                id_col="event_id", weight_col="cents",
             )
-            _, n_after = read_cms_state(spark, "cmsw_adm")
+            _, n_after = read_state(spark, CMS, "cmsw_adm")
             if n_after != n_before:
                 raise AssertionError(
                     f"replay moved weight ledger: {n_before} -> {n_after}"
                 )
         if i == 1:
-            compact_cms_index(spark, "cmsw_adm")
-    state, mass_total = read_cms_state(spark, "cmsw_adm")
+            compact(spark, CMS, "cmsw_adm")
+    state, mass_total = read_state(spark, CMS, "cmsw_adm")
     corpus_mass = int(
         keyed.agg(F.sum("cents").cast("bigint")).collect()[0][0] or 0
     )

@@ -255,8 +255,9 @@ def drift_from_stored_histograms(
     integer rows per day and never rescans an event.
 
     This is the consumer side of the quantile-sketch state the
-    streaming admission path (streaming/hist_admission.py) maintains --
-    the same stored rows answer both quantile and drift questions."""
+    streaming admission path (streaming/summary_admission.py, HIST
+    spec) maintains -- the same stored rows answer both quantile and
+    drift questions."""
     from ..operators.histsketch import daily_histogram
     from ..sinks.bucketing import _clear_orphan_location
 

@@ -20,7 +20,6 @@ from dataworks_aws_corporate_data_ingestion_spark.streaming.admission import (
     append_once,
     batch_admission_state,
     batch_content_token,
-    batch_token_and_measure,
     compact_index,
     init_state_tables,
     token_committed,
@@ -85,8 +84,7 @@ class TestFusedRoundRead:
         assert tok == _reference_token(b)
         assert measure == b.count()
         assert done == set()
-        # the delegating wrapper and the one-arg form agree
-        assert batch_token_and_measure(b, "doc_id")[0] == tok
+        # the one-arg form agrees
         assert batch_content_token(b, "doc_id") == tok
 
     def test_weighted_measure(self, spark):

@@ -1,9 +1,11 @@
-"""Streaming CMS admission (streaming/cms_admission.py): append ==
-rebuild at every prefix, replay idempotence, the crash window,
+"""Streaming CMS admission (streaming/summary_admission.py, CMS spec):
+append == rebuild at every prefix, replay idempotence, the crash window,
 compaction invariants, and the real foreachBatch surface with two
 micro-batches (cloned-session staleness regression)."""
 
 from __future__ import annotations
+
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,11 +13,12 @@ from pyspark.sql import functions as F
 from dataworks_aws_corporate_data_ingestion_spark.operators.cms import (
     cms_sketch,
 )
-from dataworks_aws_corporate_data_ingestion_spark.streaming.cms_admission import (
-    admit_cms_batch,
-    compact_cms_index,
-    init_cms_index,
-    read_cms_state,
+from dataworks_aws_corporate_data_ingestion_spark.streaming.summary_admission import (
+    CMS,
+    admit,
+    compact,
+    init,
+    read_state,
 )
 
 pytestmark = pytest.mark.slow
@@ -36,28 +39,33 @@ def _batch_df(spark, keys, start_id=0):
     ).repartition(2)
 
 
+def _summary(df, weight_col=None):
+    """The builder of the batch's lazy CMS partial, as admit expects it."""
+    return partial(cms_sketch, df, "key", W, D, weight_col=weight_col)
+
+
 def _cleanup(spark, prefix):
     for t in (f"{prefix}_cms", f"{prefix}_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def _state_rows(spark, prefix):
-    sketch, n = read_cms_state(spark, prefix)
+    sketch, n = read_state(spark, CMS, prefix)
     return sorted(tuple(r) for r in sketch.collect()), n
 
 
 class TestAdmission:
     def test_prefix_equals_rebuild(self, spark):
         try:
-            init_cms_index(spark, "t_ca1")
+            init(spark, CMS, "t_ca1")
             seen = []
             sid = 0
             for b in BATCHES:
                 df = _batch_df(spark, b, sid)
                 seen.extend((sid + i, k) for i, k in enumerate(b))
                 sid += 10000
-                admit_cms_batch(
-                    spark, df, "t_ca1", W, D, key_col="key",
+                admit(
+                    spark, CMS, df, "t_ca1", _summary(df),
                     id_col="event_id",
                 )
                 corpus = spark.createDataFrame(
@@ -77,25 +85,25 @@ class TestAdmission:
 
     def test_replay_is_noop(self, spark):
         try:
-            init_cms_index(spark, "t_ca2")
+            init(spark, CMS, "t_ca2")
             df = _batch_df(spark, BATCHES[0])
-            admit_cms_batch(spark, df, "t_ca2", W, D, key_col="key",
-                            id_col="event_id")
+            admit(spark, CMS, df, "t_ca2", _summary(df),
+                  id_col="event_id")
             s1, n1 = _state_rows(spark, "t_ca2")
-            admit_cms_batch(spark, df, "t_ca2", W, D, key_col="key",
-                            id_col="event_id")
+            admit(spark, CMS, df, "t_ca2", _summary(df),
+                  id_col="event_id")
             s2, n2 = _state_rows(spark, "t_ca2")
             assert s2 == s1 and n1 == n2 == len(BATCHES[0])
         finally:
             _cleanup(spark, "t_ca2")
 
     def test_crash_after_cms_heals_meta(self, spark):
-        from dataworks_aws_corporate_data_ingestion_spark.streaming.span_admission import (
+        from dataworks_aws_corporate_data_ingestion_spark.streaming.admission import (
             batch_content_token,
         )
 
         try:
-            init_cms_index(spark, "t_ca3")
+            init(spark, CMS, "t_ca3")
             df = _batch_df(spark, BATCHES[0])
             token = batch_content_token(df, "event_id")
             part = cms_sketch(df, "key", W, D).collect()
@@ -109,10 +117,10 @@ class TestAdmission:
             ).write.mode("append").format("parquet").saveAsTable(
                 "t_ca3_cms"
             )
-            _, n_before = read_cms_state(spark, "t_ca3")
+            _, n_before = read_state(spark, CMS, "t_ca3")
             assert n_before == 0  # the crash window
-            admit_cms_batch(spark, df, "t_ca3", W, D, key_col="key",
-                            id_col="event_id")
+            admit(spark, CMS, df, "t_ca3", _summary(df),
+                  id_col="event_id")
             got, n = _state_rows(spark, "t_ca3")
             want = sorted(
                 tuple(r) for r in cms_sketch(df, "key", W, D).collect()
@@ -124,12 +132,13 @@ class TestAdmission:
 
     def test_compaction_preserves_cells_tokens_and_replay(self, spark):
         try:
-            init_cms_index(spark, "t_ca4")
+            init(spark, CMS, "t_ca4")
             sid = 0
             for b in BATCHES[:2]:
-                admit_cms_batch(
-                    spark, _batch_df(spark, b, sid), "t_ca4", W, D,
-                    key_col="key", id_col="event_id",
+                df = _batch_df(spark, b, sid)
+                admit(
+                    spark, CMS, df, "t_ca4", _summary(df),
+                    id_col="event_id",
                 )
                 sid += 10000
             before, n_before = _state_rows(spark, "t_ca4")
@@ -141,7 +150,7 @@ class TestAdmission:
                 .distinct()
                 .collect()
             }
-            compact_cms_index(spark, "t_ca4")
+            compact(spark, CMS, "t_ca4")
             after, n_after = _state_rows(spark, "t_ca4")
             assert after == before and n_after == n_before
             tokens_after = {
@@ -153,9 +162,10 @@ class TestAdmission:
                 .collect()
             }
             assert tokens_after == tokens_before
-            admit_cms_batch(  # replay after compaction: still a no-op
-                spark, _batch_df(spark, BATCHES[1], 10000), "t_ca4",
-                W, D, key_col="key", id_col="event_id",
+            df = _batch_df(spark, BATCHES[1], 10000)
+            admit(  # replay after compaction: still a no-op
+                spark, CMS, df, "t_ca4", _summary(df),
+                id_col="event_id",
             )
             final, n_final = _state_rows(spark, "t_ca4")
             assert final == before and n_final == n_before
@@ -167,7 +177,7 @@ class TestForeachBatch:
     def test_two_micro_batches_end_to_end(self, spark, tmp_path):
         src = tmp_path / "src"
         try:
-            init_cms_index(spark, "t_ca6")
+            init(spark, CMS, "t_ca6")
             sid = 0
             for b in BATCHES[:2]:
                 _batch_df(spark, b, sid).coalesce(1).write.parquet(
@@ -181,9 +191,9 @@ class TestForeachBatch:
             )
 
             def _admit(batch_df, batch_id):
-                admit_cms_batch(
-                    spark, batch_df, "t_ca6", W, D, key_col="key",
-                    id_col="event_id",
+                admit(
+                    spark, CMS, batch_df, "t_ca6",
+                    _summary(batch_df), id_col="event_id",
                 )
 
             q = (
@@ -219,7 +229,7 @@ class TestWeightedAdmission:
             [("warm", 3000)] + [(f"w{i}", 2) for i in range(9)],
         ]
         try:
-            init_cms_index(spark, "t_caw1")
+            init(spark, CMS, "t_caw1")
             seen = []
             sid = 0
             for b in wbatches:
@@ -229,8 +239,9 @@ class TestWeightedAdmission:
                 df = spark.createDataFrame(
                     rows, "event_id bigint, key string, w long"
                 ).repartition(2)
-                admit_cms_batch(
-                    spark, df, "t_caw1", W, D, key_col="key",
+                admit(
+                    spark, CMS, df, "t_caw1",
+                    _summary(df, "w"),
                     id_col="event_id", weight_col="w",
                 )
                 corpus = spark.createDataFrame(

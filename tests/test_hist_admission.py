@@ -1,5 +1,5 @@
-"""Streaming quantile-sketch admission (streaming/hist_admission.py):
-append == rebuild at every prefix, replay idempotence, the crash
+"""Streaming quantile-sketch admission (streaming/summary_admission.py,
+HIST spec): append == rebuild at every prefix, replay idempotence, the crash
 window, compaction invariants, ledger divergence detection, and the
 real foreachBatch surface with two micro-batches (cloned-session
 staleness regression)."""
@@ -7,6 +7,7 @@ staleness regression)."""
 from __future__ import annotations
 
 from datetime import datetime
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,12 +15,13 @@ from pyspark.sql import functions as F
 from dataworks_aws_corporate_data_ingestion_spark.operators.histsketch import (
     daily_histogram,
 )
-from dataworks_aws_corporate_data_ingestion_spark.streaming.hist_admission import (
-    admit_hist_batch,
-    compact_hist_index,
-    init_hist_index,
+from dataworks_aws_corporate_data_ingestion_spark.streaming.summary_admission import (
+    HIST,
+    admit,
+    compact,
+    init,
     quantile_bins_from_state,
-    read_hist_state,
+    read_state,
 )
 
 pytestmark = pytest.mark.slow
@@ -47,13 +49,19 @@ def _batch_df(spark, rows, start_id=0):
     ).repartition(2)
 
 
+def _summary(df):
+    """The builder of the batch's lazy daily-histogram partial, as admit
+    expects it."""
+    return partial(daily_histogram, df, "ts", "value", BINS, SPAN)
+
+
 def _cleanup(spark, prefix):
     for t in (f"{prefix}_hist", f"{prefix}_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def _state_rows(spark, prefix):
-    daily, n = read_hist_state(spark, prefix)
+    daily, n = read_state(spark, HIST, prefix)
     return sorted(tuple(r) for r in daily.collect()), n
 
 
@@ -63,7 +71,7 @@ class TestAdmission:
         bit-identical to a one-shot daily histogram of their union --
         the addition-algebra append==rebuild claim at every prefix."""
         try:
-            init_hist_index(spark, "t_qh1")
+            init(spark, HIST, "t_qh1")
             seen = []
             sid = 0
             for b in BATCHES:
@@ -73,7 +81,10 @@ class TestAdmission:
                     for i, (ts, v) in enumerate(b)
                 )
                 sid += 10000
-                admit_hist_batch(spark, df, "t_qh1", BINS, SPAN)
+                admit(
+                    spark, HIST, df, "t_qh1", _summary(df),
+                    id_col="event_id",
+                )
                 corpus = spark.createDataFrame(
                     seen, "event_id bigint, ts timestamp_ntz, value double"
                 )
@@ -91,11 +102,17 @@ class TestAdmission:
 
     def test_replay_is_noop(self, spark):
         try:
-            init_hist_index(spark, "t_qh2")
+            init(spark, HIST, "t_qh2")
             df = _batch_df(spark, BATCHES[0])
-            admit_hist_batch(spark, df, "t_qh2", BINS, SPAN)
+            admit(
+                spark, HIST, df, "t_qh2", _summary(df),
+                id_col="event_id",
+            )
             state1, n1 = _state_rows(spark, "t_qh2")
-            admit_hist_batch(spark, df, "t_qh2", BINS, SPAN)
+            admit(
+                spark, HIST, df, "t_qh2", _summary(df),
+                id_col="event_id",
+            )
             state2, n2 = _state_rows(spark, "t_qh2")
             assert state2 == state1
             assert n1 == n2 == len(BATCHES[0])
@@ -105,12 +122,12 @@ class TestAdmission:
     def test_crash_after_hist_heals_meta(self, spark):
         """Crash window: _hist appended, _meta not.  The replay must
         append only the ledger row and converge with no double-count."""
-        from dataworks_aws_corporate_data_ingestion_spark.streaming.span_admission import (
+        from dataworks_aws_corporate_data_ingestion_spark.streaming.admission import (
             batch_content_token,
         )
 
         try:
-            init_hist_index(spark, "t_qh3")
+            init(spark, HIST, "t_qh3")
             df = _batch_df(spark, BATCHES[0])
             token = batch_content_token(df, "event_id")
             # simulate the crash: run only the _hist half by hand
@@ -124,9 +141,12 @@ class TestAdmission:
             ).write.mode("append").format("parquet").saveAsTable(
                 "t_qh3_hist"
             )
-            _, n_before = read_hist_state(spark, "t_qh3")
+            _, n_before = read_state(spark, HIST, "t_qh3")
             assert n_before == 0  # ledger missing: the crash window
-            admit_hist_batch(spark, df, "t_qh3", BINS, SPAN)
+            admit(
+                spark, HIST, df, "t_qh3", _summary(df),
+                id_col="event_id",
+            )
             got, n = _state_rows(spark, "t_qh3")
             want = sorted(
                 tuple(r)
@@ -141,11 +161,13 @@ class TestAdmission:
 
     def test_compaction_preserves_bins_tokens_and_replay(self, spark):
         try:
-            init_hist_index(spark, "t_qh4")
+            init(spark, HIST, "t_qh4")
             sid = 0
             for b in BATCHES[:2]:
-                admit_hist_batch(
-                    spark, _batch_df(spark, b, sid), "t_qh4", BINS, SPAN
+                df = _batch_df(spark, b, sid)
+                admit(
+                    spark, HIST, df, "t_qh4", _summary(df),
+                    id_col="event_id",
                 )
                 sid += 10000
             before, n_before = _state_rows(spark, "t_qh4")
@@ -157,7 +179,7 @@ class TestAdmission:
                 .distinct()
                 .collect()
             }
-            stats = compact_hist_index(spark, "t_qh4")
+            stats = compact(spark, HIST, "t_qh4")
             assert stats["rows_after"] < stats["rows_before"]
             after, n_after = _state_rows(spark, "t_qh4")
             assert after == before and n_after == n_before
@@ -171,9 +193,10 @@ class TestAdmission:
             }
             assert tokens_after == tokens_before
             # replay after compaction: still a no-op
-            admit_hist_batch(
-                spark, _batch_df(spark, BATCHES[1], 10000), "t_qh4",
-                BINS, SPAN,
+            df = _batch_df(spark, BATCHES[1], 10000)
+            admit(
+                spark, HIST, df, "t_qh4", _summary(df),
+                id_col="event_id",
             )
             final, n_final = _state_rows(spark, "t_qh4")
             assert final == before and n_final == n_before
@@ -182,11 +205,13 @@ class TestAdmission:
 
     def test_quantile_read_path_and_divergence_guard(self, spark):
         try:
-            init_hist_index(spark, "t_qh5")
+            init(spark, HIST, "t_qh5")
             sid = 0
             for b in BATCHES:
-                admit_hist_batch(
-                    spark, _batch_df(spark, b, sid), "t_qh5", BINS, SPAN
+                df = _batch_df(spark, b, sid)
+                admit(
+                    spark, HIST, df, "t_qh5", _summary(df),
+                    id_col="event_id",
                 )
                 sid += 10000
             bins, mass, picks = quantile_bins_from_state(
@@ -219,7 +244,7 @@ class TestForeachBatch:
         cloned-session staleness regression shape."""
         src = tmp_path / "src"
         try:
-            init_hist_index(spark, "t_qh6")
+            init(spark, HIST, "t_qh6")
             sid = 0
             for b in BATCHES[:2]:
                 _batch_df(spark, b, sid).coalesce(1).write.parquet(
@@ -235,7 +260,10 @@ class TestForeachBatch:
             )
 
             def _admit(batch_df, batch_id):
-                admit_hist_batch(spark, batch_df, "t_qh6", BINS, SPAN)
+                admit(
+                    spark, HIST, batch_df, "t_qh6", _summary(batch_df),
+                    id_col="event_id",
+                )
 
             q = (
                 stream.writeStream.foreachBatch(_admit)

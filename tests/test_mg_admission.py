@@ -1,23 +1,27 @@
 """Streaming Misra-Gries heavy-hitter admission
-(streaming/mg_admission.py): prefix equality with the batch operator,
+(streaming/summary_admission.py, MG spec): prefix equality with the batch operator,
 replay idempotence, every crash window, compaction invariants, ledger
 divergence detection, and the real foreachBatch surface with two
 micro-batches (cloned-session staleness regression)."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
 from dataworks_aws_corporate_data_ingestion_spark.operators.heavyhitters import (
     heavy_hitters_exact,
+    mg_summary,
 )
-from dataworks_aws_corporate_data_ingestion_spark.streaming.mg_admission import (
-    admit_mg_batch,
-    compact_mg_index,
+from dataworks_aws_corporate_data_ingestion_spark.streaming.summary_admission import (
+    MG,
+    admit,
+    compact,
     heavy_hitters_from_state,
-    init_mg_index,
-    read_mg_state,
+    init,
+    read_state,
 )
 
 pytestmark = pytest.mark.slow
@@ -40,6 +44,14 @@ def _batch_df(spark, rows, start_id=0):
     ).repartition(3)
 
 
+def _summary(df, weight_col=None):
+    """The builder of the batch's lazy MG partial, as admit expects it."""
+    cols = ["key"] + ([weight_col] if weight_col else [])
+    return partial(
+        mg_summary, df.select(*cols), ["key"], K, weight_col=weight_col
+    )
+
+
 def _cleanup(spark, prefix):
     for t in (f"{prefix}_mg", f"{prefix}_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -51,7 +63,7 @@ class TestAdmission:
         off the state must equal heavy_hitters_exact over the union of
         batches 0..j, at every prefix."""
         try:
-            init_mg_index(spark, "t_mg1")
+            init(spark, MG, "t_mg1")
             seen = []
             sid = 0
             for b in BATCHES:
@@ -60,9 +72,9 @@ class TestAdmission:
                     (sid + i, r[0]) for i, r in enumerate(b)
                 )
                 sid += 10000
-                admit_mg_batch(
-                    spark, df, "t_mg1", key_col="key", k=K,
-                    id_col="event_id",
+                admit(
+                    spark, MG, df, "t_mg1", _summary(df),
+                    id_col="event_id", k=K,
                 )
                 corpus = spark.createDataFrame(
                     seen, "event_id bigint, key string"
@@ -85,15 +97,15 @@ class TestAdmission:
 
     def test_replay_is_noop(self, spark):
         try:
-            init_mg_index(spark, "t_mg2")
+            init(spark, MG, "t_mg2")
             df = _batch_df(spark, BATCHES[0])
-            admit_mg_batch(spark, df, "t_mg2", key_col="key", k=K,
-                           id_col="event_id")
-            cands1, n1 = read_mg_state(spark, "t_mg2")
+            admit(spark, MG, df, "t_mg2", _summary(df),
+                  id_col="event_id", k=K)
+            cands1, n1 = read_state(spark, MG, "t_mg2")
             state1 = sorted(tuple(r) for r in cands1.collect())
-            admit_mg_batch(spark, df, "t_mg2", key_col="key", k=K,
-                           id_col="event_id")
-            cands2, n2 = read_mg_state(spark, "t_mg2")
+            admit(spark, MG, df, "t_mg2", _summary(df),
+                  id_col="event_id", k=K)
+            cands2, n2 = read_state(spark, MG, "t_mg2")
             assert sorted(tuple(r) for r in cands2.collect()) == state1
             assert n1 == n2 == len(BATCHES[0])
         finally:
@@ -102,18 +114,17 @@ class TestAdmission:
     def test_crash_after_mg_heals_meta(self, spark):
         """Crash window: _mg appended, _meta not.  The replay must
         append only the ledger row and converge."""
-        from dataworks_aws_corporate_data_ingestion_spark.streaming.span_admission import (
+        from dataworks_aws_corporate_data_ingestion_spark.streaming.admission import (
             batch_content_token,
         )
 
         try:
-            init_mg_index(spark, "t_mg3")
+            init(spark, MG, "t_mg3")
             df = _batch_df(spark, BATCHES[0])
             token = batch_content_token(df, "event_id")
             # simulate the crash: run only the _mg half by hand
             from dataworks_aws_corporate_data_ingestion_spark.operators.heavyhitters import (
                 _mg_reduce,
-                mg_summary,
             )
 
             parts = mg_summary(df.select("key"), ["key"], K).collect()
@@ -126,12 +137,12 @@ class TestAdmission:
             spark.createDataFrame(
                 rows, "key string, c long, batch_token long"
             ).write.mode("append").format("parquet").saveAsTable("t_mg3_mg")
-            _, n_before = read_mg_state(spark, "t_mg3")
+            _, n_before = read_state(spark, MG, "t_mg3")
             assert n_before == 0  # ledger missing: the crash window
             # replay the full admission: must not double-count _mg
-            admit_mg_batch(spark, df, "t_mg3", key_col="key", k=K,
-                           id_col="event_id")
-            cands, n = read_mg_state(spark, "t_mg3")
+            admit(spark, MG, df, "t_mg3", _summary(df),
+                  id_col="event_id", k=K)
+            cands, n = read_state(spark, MG, "t_mg3")
             assert n == len(BATCHES[0])
             hot = {r["key"]: r["c_lower"] for r in cands.collect()}["hot"]
             assert hot <= 30  # a double-append would exceed the true count
@@ -140,15 +151,16 @@ class TestAdmission:
 
     def test_compaction_preserves_counts_tokens_and_guarantee(self, spark):
         try:
-            init_mg_index(spark, "t_mg4")
+            init(spark, MG, "t_mg4")
             sid = 0
             for b in BATCHES[:2]:
-                admit_mg_batch(
-                    spark, _batch_df(spark, b, sid), "t_mg4",
-                    key_col="key", k=K, id_col="event_id",
+                df = _batch_df(spark, b, sid)
+                admit(
+                    spark, MG, df, "t_mg4", _summary(df),
+                    id_col="event_id", k=K,
                 )
                 sid += 10000
-            before, n_before = read_mg_state(spark, "t_mg4")
+            before, n_before = read_state(spark, MG, "t_mg4")
             tokens_before = {
                 r["batch_token"]
                 for r in spark.table("t_mg4_mg")
@@ -157,7 +169,7 @@ class TestAdmission:
                 .distinct()
                 .collect()
             }
-            stats = compact_mg_index(spark, "t_mg4", k=K)
+            stats = compact(spark, MG, "t_mg4", k=K)
             assert stats["rows_after"] <= K + len(tokens_before)
             tokens_after = {
                 r["batch_token"]
@@ -169,14 +181,15 @@ class TestAdmission:
             }
             assert tokens_after == tokens_before
             # replay after compaction: still a no-op
-            admit_mg_batch(
-                spark, _batch_df(spark, BATCHES[1], 10000), "t_mg4",
-                key_col="key", k=K, id_col="event_id",
+            df = _batch_df(spark, BATCHES[1], 10000)
+            admit(
+                spark, MG, df, "t_mg4", _summary(df),
+                id_col="event_id", k=K,
             )
-            _, n = read_mg_state(spark, "t_mg4")
+            _, n = read_state(spark, MG, "t_mg4")
             assert n == n_before
             # the heavy keys of batches 0-1 must survive the trim
-            cands, _ = read_mg_state(spark, "t_mg4")
+            cands, _ = read_state(spark, MG, "t_mg4")
             keys = {r["key"] for r in cands.collect()}
             assert {"hot", "warm"} <= keys
         finally:
@@ -184,10 +197,10 @@ class TestAdmission:
 
     def test_ledger_divergence_raises(self, spark):
         try:
-            init_mg_index(spark, "t_mg5")
+            init(spark, MG, "t_mg5")
             df = _batch_df(spark, BATCHES[0])
-            admit_mg_batch(spark, df, "t_mg5", key_col="key", k=K,
-                           id_col="event_id")
+            admit(spark, MG, df, "t_mg5", _summary(df),
+                  id_col="event_id", k=K)
             short = df.limit(10)
             with pytest.raises(AssertionError, match="divergence"):
                 heavy_hitters_from_state(
@@ -207,7 +220,7 @@ class TestForeachBatch:
         batch 1's appends."""
         src = tmp_path / "src"
         try:
-            init_mg_index(spark, "t_mg6")
+            init(spark, MG, "t_mg6")
             sid = 0
             for b in BATCHES[:2]:
                 _batch_df(spark, b, sid).coalesce(1).write.parquet(
@@ -221,9 +234,9 @@ class TestForeachBatch:
             )
 
             def _admit(batch_df, batch_id):
-                admit_mg_batch(
-                    spark, batch_df, "t_mg6", key_col="key", k=K,
-                    id_col="event_id", batch_token=None,
+                admit(
+                    spark, MG, batch_df, "t_mg6", _summary(batch_df),
+                    id_col="event_id", batch_token=None, k=K,
                 )
 
             q = (
@@ -267,7 +280,7 @@ class TestWeightedAdmission:
             [("warm", 3000)] + [(f"w{i}", 2) for i in range(25)],
         ]
         try:
-            init_mg_index(spark, "t_mgw1")
+            init(spark, MG, "t_mgw1")
             seen = []
             sid = 0
             for b in wbatches:
@@ -277,9 +290,9 @@ class TestWeightedAdmission:
                 df = spark.createDataFrame(
                     rows, "event_id bigint, key string, w long"
                 ).repartition(3)
-                admit_mg_batch(
-                    spark, df, "t_mgw1", key_col="key", k=K,
-                    id_col="event_id", weight_col="w",
+                admit(
+                    spark, MG, df, "t_mgw1", _summary(df, "w"),
+                    id_col="event_id", weight_col="w", k=K,
                 )
                 corpus = spark.createDataFrame(
                     seen, "event_id bigint, key string, w long"

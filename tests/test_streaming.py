@@ -1366,7 +1366,7 @@ class TestSpanAdmission:
             # crashed run: replicate ONLY the gram append (with the
             # content token admit_span_batch would derive), no ledger row
             init_span_index(spark, "t_span_cr", n_buckets=4)
-            from dataworks_aws_corporate_data_ingestion_spark.streaming.span_admission import (
+            from dataworks_aws_corporate_data_ingestion_spark.streaming.admission import (
                 batch_content_token,
             )
             from dataworks_aws_corporate_data_ingestion_spark.operators.spandedup import (
@@ -1574,7 +1574,7 @@ class TestLmAdmission:
             admit_lm_batch,
             init_lm_index,
         )
-        from dataworks_aws_corporate_data_ingestion_spark.streaming.span_admission import (
+        from dataworks_aws_corporate_data_ingestion_spark.streaming.admission import (
             batch_content_token,
         )
 

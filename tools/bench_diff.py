@@ -27,6 +27,9 @@ Classification per common query:
                  era ratio -- a genuine runtime change at constant plan
                  (data size, library, caching)
 
+The ladder is bench.classify -- the same function bench.py uses to stamp
+each entry's vs_prev class.
+
 The era ratio comes from the anchor blocks bench.py records (host.anchor:
 a pinned plan-stable probe timed against the committed BENCH_ANCHOR.json
 reference).  When both files carry comparable anchors against the SAME
@@ -43,7 +46,11 @@ suspicion (see ROUND_NOTES.md round-4 addendum).
 from __future__ import annotations
 
 import json
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def load(path: str) -> tuple[dict, dict, dict | None]:
@@ -128,12 +135,7 @@ def era_ratio(
         # committed anchor file pins what the probe's sha has been, so a
         # NEW sha matching it says the plan is the long-stable one
         try:
-            import os
-
-            with open(
-                os.path.join(os.path.dirname(os.path.dirname(
-                    os.path.abspath(__file__))), "BENCH_ANCHOR.json")
-            ) as f:
+            with open(os.path.join(REPO, "BENCH_ANCHOR.json")) as f:
                 anchor_file = json.load(f)
             if anchor_file.get("plan_sha") == nsha:
                 return (
@@ -147,27 +149,9 @@ def era_ratio(
     return None, "none available (no shared anchor, probe missing or plan-changed)"
 
 
-def classify(
-    old: dict, new: dict, ot: float, nt: float, thr: float, era: float | None
-) -> str:
-    osha = (old or {}).get("plan_sha")
-    nsha = (new or {}).get("plan_sha")
-    if osha and nsha and osha != nsha:
-        return "PLAN-CHANGED"
-    rel = (nt - ot) / ot if ot else 0.0
-    if abs(rel) <= thr:
-        return "steady"
-    if era:
-        expected = ot * era
-        if expected and abs(nt - expected) / expected <= thr:
-            return "ERA-DRIFT"
-    nb, nm = (new or {}).get("best"), (new or {}).get("median")
-    if nb and nm and nm > nb * 1.8:
-        return "HOST-NOISE?"
-    return "FASTER" if rel < 0 else "SLOWER"
-
-
 def main() -> int:
+    from bench import classify  # the one ladder bench.py also stamps
+
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     thr = 0.15
     probe = "q1_pricing_summary"
