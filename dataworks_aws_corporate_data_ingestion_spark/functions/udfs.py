@@ -1,27 +1,29 @@
-"""Arrow-batched pandas UDFs wrapping the pure-Python record core.
+"""The Arrow UDF wrapping the pure-Python record core.
 
 The reference ran the whole per-record chain as five row-at-a-time RDD
 ``.map`` lambdas (reference steps/ingesters.py:108-115) -- every row paid a
-JVM->pickle->Python->pickle->JVM round trip per map.  Here the chain is two
-Arrow-batched crossings:
+JVM->pickle->Python->pickle->JVM round trip per map.  Here the chain is ONE
+Arrow-batched crossing, ``ingest_udf``: the landing line goes in, and the
+envelope parse, AES-CTR decrypt with the cached data key, (audit transform)
++ validate + sanitise + canonical serialise all run in one batch pass over
+pyarrow arrays (no pandas frames).  Only the canonical row and an outcome
+marker come back; the ciphertext and key material return to the JVM only
+on rows bound for quarantine.
 
-  1. ``envelope_udf``        -- parse envelope, canonicalise _id
-  2. ``decrypt_process_udf`` -- AES-CTR decrypt with the cached data key +
-                                (audit transform) + validate + sanitise +
-                                canonical serialise, fused into one batch
-                                pass
-
-operators/ingest.py::ingest_lines is their one caller.  Everything around
-them (db_type, id_part, partitioning columns, writes) stays JVM-side as
-native column expressions.
+operators/ingest.py::ingest_lines is its one caller.  Everything around it
+(the quarantine split, db_type, id_part, partitioning columns, writes)
+stays JVM-side as native column expressions.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+from collections.abc import Sequence
+
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     BooleanType,
+    ByteType,
     StringType,
     StructField,
     StructType,
@@ -47,15 +49,16 @@ _RECORD_KEY_ERRORS = (ValueError, TypeError, KeyError)
 
 def _decrypt_series(
     client: CachingKeyClient,
-    ciphertext: pd.Series,
-    encrypted_key: pd.Series,
-    iv: pd.Series,
-    kek_id: pd.Series,
+    ciphertext: Sequence,
+    encrypted_key: Sequence,
+    iv: Sequence,
+    kek_id: Sequence,
     permissive: bool = False,
 ) -> list:
-    """Decrypt a whole Arrow batch, grouping records by resolved data key so
-    each group pays ONE cipher operation (aes_ctr_decrypt_batch) instead of
-    a Cipher per record.  Key-cache lookups stay per-record, preserving the
+    """Decrypt a batch of records (parallel sequences, one item per
+    record), grouping records by resolved data key so each group pays ONE
+    cipher operation (aes_ctr_decrypt_batch) instead of a Cipher per
+    record.  Key-cache lookups stay per-record, preserving the
     reference's hit/miss accounting contract exactly.
 
     ``permissive=True``: a record whose ciphertext/key/IV is malformed
@@ -69,14 +72,14 @@ def _decrypt_series(
     strict (reference steps/dks.py:142-143 raises)."""
     import base64
 
-    ct_list = ciphertext.tolist()
-    iv_list = iv.tolist()
+    ct_list = list(ciphertext)
+    iv_list = list(iv)
     n = len(ct_list)
     out: list = [None] * n
     failed = [False] * n
     keys: list = [None] * n
     for i, (ct, ek, kek) in enumerate(
-        zip(ct_list, encrypted_key.tolist(), kek_id.tolist())
+        zip(ct_list, encrypted_key, kek_id)
     ):
         if ct is None:
             if not permissive:
@@ -133,12 +136,25 @@ def _decrypt_series(
                 failed[i] = True
     return out
 
-ENVELOPE_STRUCT = StructType(
+
+# ingest_udf's outcome marker: the quarantine split filters on it
+GOOD = 0
+# unparseable line (permissive) or null dbObject: the envelope-level
+# quarantine, counted as n_quarantined
+QUARANTINED = 1
+# envelope fine, but decrypt or transform failed (permissive only)
+UNDECRYPTABLE = 2
+
+INGEST_STRUCT = StructType(
     [
         StructField("id", StringType()),
         StructField("db", StringType()),
         StructField("collection", StringType()),
         StructField("last_modified", StringType()),
+        StructField("val", StringType()),
+        StructField("is_delete", BooleanType()),
+        StructField("outcome", ByteType()),
+        # filled on quarantine-bound rows only
         StructField("db_object", StringType()),
         StructField("encrypted_encryption_key", StringType()),
         StructField("initialisation_vector", StringType()),
@@ -146,122 +162,82 @@ ENVELOPE_STRUCT = StructType(
     ]
 )
 
-PAYLOAD_STRUCT = StructType(
-    [
-        StructField("val", StringType()),
-        StructField("is_delete", BooleanType()),
-    ]
-)
 
-
-def envelope_udf(
-    configured_collection: str | None = None, permissive: bool = False
-):
-    """Envelope parse as a scalar pandas UDF returning a struct column.
-
-    The envelope's _lastModifiedDateTime is pre-coerced to the audit stamp
-    convention here (str(primitive) else "") because the struct column is
-    typed (reference steps/data.py:104-109).
-
-    ``permissive=True``: an unparseable line (invalid JSON, missing
-    'message'/'_id') yields an all-null struct instead of failing the
-    task.  Its ``db_object`` is null, so the row flows into the existing
-    quarantine branch (the raw line survives in the ``value`` column)
-    and is counted by the ingest observation -- one poison record cannot
-    kill a 100 TB day.  The reference raises per record
-    (steps/data.py:63-89 has no guard); the default stays strict for
-    byte parity."""
-    n_fields = len(ENVELOPE_STRUCT.fields)
-
-    @pandas_udf(ENVELOPE_STRUCT)
-    def _parse(lines: pd.Series) -> pd.DataFrame:
-        rows = []
-        for line in lines:
-            try:
-                env = record.parse_envelope(line, configured_collection)
-            except Exception:
-                if not permissive:
-                    raise
-                rows.append((None,) * n_fields)
-                continue
-            lm = env.last_modified
-            stamp = str(lm) if isinstance(lm, record.JSON_PRIMITIVES) else ""
-            rows.append(
-                (
-                    env.id,
-                    env.db,
-                    env.collection,
-                    stamp,
-                    env.db_object,
-                    env.encrypted_encryption_key,
-                    env.initialisation_vector,
-                    env.key_encryption_key_id,
-                )
-            )
-        return pd.DataFrame(
-            rows, columns=[f.name for f in ENVELOPE_STRUCT.fields]
-        )
-
-    # The parse is pure, but it is declared nondeterministic as an
-    # OPTIMIZER BARRIER: a deterministic alias gets inlined into any
-    # later filter predicate (e.g. the quarantine's db_object IS NOT
-    # NULL) and pushed down as a SECOND copy of the expression --
-    # Catalyst then runs the whole upstream Python chain twice.  The
-    # round-3 plan audit measured exactly that doubling; with the
-    # barrier the envelope parse evaluates once and filters reference
-    # its output attribute.
-    return _parse.asNondeterministic()
-
-
-def decrypt_process_udf(
+def ingest_udf(
+    collection: str | None,
     key_service: KeyService,
+    *,
     audit: bool = False,
+    permissive: bool = False,
     hit_acc=None,
     miss_acc=None,
-    permissive: bool = False,
 ):
-    """Decrypt + (audit transform) + validate + sanitise + canonicalise in
-    ONE Arrow crossing -- the SURVEY.md section-7 target shape (envelope
-    parse, then a single fused per-record pass).  A separate decrypt UDF
-    feeding a process UDF would cost an extra JVM<->Python serialisation
-    of every decrypted payload.
+    """Landing line -> canonical row in ONE scalar Arrow UDF: envelope
+    parse + canonical _id (reference steps/data.py:63-89), decrypt per key
+    group (_decrypt_series), then (audit transform) + validate + sanitise
+    + canonical serialise (record.process_record / process_parsed).
+
+    Returns an INGEST_STRUCT per line.  ``outcome`` is GOOD (``val`` and
+    ``is_delete`` set), QUARANTINED (null dbObject, or an unparseable line
+    in permissive mode: every field but ``outcome`` null) or UNDECRYPTABLE
+    (permissive only: decrypt or transform failed).  The envelope's
+    _lastModifiedDateTime comes back pre-coerced to the audit stamp
+    convention (str(primitive) else "", reference steps/data.py:104-109).
+    The dbObject and key-material fields are filled only on rows that are
+    not GOOD, so a good row's ciphertext never returns to the JVM.
 
     The key cache is a module-level per-worker dict (closure state is not
     guaranteed to survive across Arrow batches), so cached keys span every
     batch and task a worker processes -- the reference's per-container
     dict cache with accumulator observability (steps/ingesters.py:103-104,
-    steps/dks.py:96-116).  Strict mode raises on a null ciphertext, as the
-    reference does (steps/dks.py:142-143).
+    steps/dks.py:96-116).
 
-    Args are columns: (ciphertext, encrypted_key, iv, kek_id, db,
-    collection, envelope_stamp).
-
-    ``permissive=True``: a record that fails decrypt (see
-    _decrypt_series) OR the downstream transform/validate pass yields
-    (val=NULL, is_delete=NULL) instead of failing the task -- val is
-    never null on success, so the caller splits on it.  Clean rows are
-    byte-identical to the strict path."""
+    Strict (the default, reference parity) raises on an unparseable line
+    and on any decrypt/transform failure; a null dbObject is QUARANTINED in
+    both modes.  ``permissive=True`` turns record-shaped failures into
+    outcomes instead, so one poison record cannot kill a 100 TB day (the
+    reference raises per record, steps/data.py:63-89, steps/dks.py:142-143);
+    clean rows are byte-identical to the strict run."""
     client = CachingKeyClient(key_service, hit_acc=hit_acc, miss_acc=miss_acc)
 
-    @pandas_udf(PAYLOAD_STRUCT)
-    def _process(
-        ciphertext: pd.Series,
-        encrypted_key: pd.Series,
-        iv: pd.Series,
-        kek_id: pd.Series,
-        db: pd.Series,
-        collection: pd.Series,
-        stamp: pd.Series,
-    ) -> pd.DataFrame:
-        decrypted = _decrypt_series(
-            client, ciphertext, encrypted_key, iv, kek_id, permissive=permissive
-        )
-        vals, deletes = [], []
-        for rec, d, c, s in zip(decrypted, db, collection, stamp):
-            if rec is None and permissive:
-                vals.append(None)
-                deletes.append(None)
+    @arrow_udf(INGEST_STRUCT)
+    def _ingest(value: pa.Array) -> pa.Array:
+        lines = value.to_pylist()
+        n = len(lines)
+        ids, dbs, colls, stamps = [None] * n, [None] * n, [None] * n, [None] * n
+        cts, eks, ivs, keks = [None] * n, [None] * n, [None] * n, [None] * n
+        outcome = [QUARANTINED] * n
+        todo = []
+        for i, line in enumerate(lines):
+            try:
+                env = record.parse_envelope(line, collection)
+            except Exception:
+                if not permissive:
+                    raise
                 continue
+            lm = env.last_modified
+            ids[i], dbs[i], colls[i] = env.id, env.db, env.collection
+            stamps[i] = str(lm) if isinstance(lm, record.JSON_PRIMITIVES) else ""
+            cts[i] = env.db_object
+            eks[i] = env.encrypted_encryption_key
+            ivs[i] = env.initialisation_vector
+            keks[i] = env.key_encryption_key_id
+            if cts[i] is not None:
+                todo.append(i)
+        decrypted = _decrypt_series(
+            client,
+            [cts[i] for i in todo],
+            [eks[i] for i in todo],
+            [ivs[i] for i in todo],
+            [keks[i] for i in todo],
+            permissive=permissive,
+        )
+        vals, deletes = [None] * n, [None] * n
+        for i, rec in zip(todo, decrypted):
+            outcome[i] = UNDECRYPTABLE
+            if rec is None:
+                continue
+            d, c = dbs[i], colls[i]
             try:
                 # fused validate+sanitise+finalise: one parse, one walk,
                 # one dump per record (record.process_parsed) instead of
@@ -269,19 +245,40 @@ def decrypt_process_udf(
                 # byte-identical by construction, pinned by
                 # tests/test_record.py
                 if audit and d == "data" and c == "businessAudit":
-                    val, is_delete = record.process_parsed(
-                        record.audit_context(rec, s), d or "", c or ""
+                    vals[i], deletes[i] = record.process_parsed(
+                        record.audit_context(rec, stamps[i]), d, c
                     )
                 else:
-                    val, is_delete = record.process_record(rec, d or "", c or "")
-                vals.append(val)
-                deletes.append(is_delete)
+                    vals[i], deletes[i] = record.process_record(rec, d or "", c or "")
             except Exception:
                 if not permissive:
                     raise
-                vals.append(None)
-                deletes.append(None)
-        return pd.DataFrame({"val": vals, "is_delete": deletes})
+                continue
+            outcome[i] = GOOD
+            cts[i] = eks[i] = ivs[i] = keks[i] = None
+        s = value.type
+        return pa.StructArray.from_arrays(
+            [
+                pa.array(ids, s),
+                pa.array(dbs, s),
+                pa.array(colls, s),
+                pa.array(stamps, s),
+                pa.array(vals, s),
+                pa.array(deletes, pa.bool_()),
+                pa.array(outcome, pa.int8()),
+                pa.array(cts, s),
+                pa.array(eks, s),
+                pa.array(ivs, s),
+                pa.array(keks, s),
+            ],
+            names=INGEST_STRUCT.fieldNames(),
+        )
 
-    # optimizer barrier (see envelope_udf)
-    return _process.asNondeterministic()
+    # The UDF is pure, but it is declared nondeterministic as an
+    # OPTIMIZER BARRIER: a deterministic alias gets inlined into the
+    # split's filter predicates and pushed down as a SECOND copy of the
+    # expression -- Catalyst then runs the whole upstream Python chain
+    # twice.  The round-3 plan audit measured exactly that doubling; with
+    # the barrier the UDF evaluates once and the filters reference its
+    # output attribute.
+    return _ingest.asNondeterministic()

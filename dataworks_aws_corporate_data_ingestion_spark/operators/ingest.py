@@ -4,11 +4,11 @@ canonical records, as a DataFrame lineage.
 DataFrame-native re-expression of the reference's RDD map chains
 (reference steps/ingesters.py:108-120 audit, :526-539 calcParts).
 ``ingest_lines`` is the one place a landing line becomes a canonical
-row: envelope UDF -> quarantine split -> fused decrypt/process UDF.  Two
-Arrow crossings total; everything else is JVM columnar.  The batch day
-(``ingest_daily``), the registry pipelines and the streaming ingest all
-compose it; callers differ only in how lines arrive and how rows are
-shaped afterwards.
+row: one fused Arrow UDF (envelope parse -> decrypt -> canonicalise) and
+one split on its outcome marker.  One Arrow crossing total; everything
+else is JVM columnar.  The batch day (``ingest_daily``), the registry
+pipelines and the streaming ingest all compose it; callers differ only in
+how lines arrive and how rows are shaped afterwards.
 """
 
 from __future__ import annotations
@@ -16,8 +16,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import decrypt_process_udf, envelope_udf
 from ..functions.crypto import KeyService
+from ..functions.udfs import GOOD, QUARANTINED, UNDECRYPTABLE, ingest_udf
+
+_ROW_FIELDS = ("id", "db", "collection", "last_modified", "val", "is_delete")
+_ENVELOPE_FIELDS = (
+    "id",
+    "db",
+    "collection",
+    "last_modified",
+    "db_object",
+    "encrypted_encryption_key",
+    "initialisation_vector",
+    "key_encryption_key_id",
+)
 
 
 def ingest_lines(
@@ -30,97 +42,65 @@ def ingest_lines(
     hit_acc=None,
     miss_acc=None,
     observation=None,
-    decrypt_observation=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Landing lines -> (rows, quarantined).  ``lines_df`` is any
     DataFrame whose ``value`` column holds one JSONL envelope per row,
     batch or streaming.
 
-    ``rows`` carries the envelope fields plus ``val`` (canonical JSON)
-    and ``is_delete``; ``quarantined`` carries the raw ``value`` line plus
-    the envelope fields of every row diverted instead of failing the job.
+    ``rows`` carries ``id``, ``db``, ``collection``, ``last_modified``
+    (the envelope stamp), ``val`` (canonical JSON) and ``is_delete``;
+    ``quarantined`` carries the raw ``value`` line plus the 8 envelope
+    fields of every row diverted instead of failing the job.
 
-    Envelope parse (reference steps/ingesters.py:30-31 +
-    steps/data.py:63-89): the parsed envelope stays packed in one ``env``
-    struct through the quarantine split, so the split filters on a struct
-    attribute and the envelope UDF -- plus everything upstream of it --
-    evaluates exactly once.  Filtering an expanded ``db_object`` column
-    instead duplicates the UDF expression into the Filter node; the
-    round-3 plan audit measured the whole Python chain running twice.
+    The fused UDF (functions/udfs.py::ingest_udf) returns one struct per
+    line, and both branches filter on its ``outcome`` attribute, so the
+    UDF -- plus everything upstream of it -- evaluates exactly once.
+    Filtering an expanded UDF column instead duplicates the UDF
+    expression into the Filter node; the round-3 plan audit measured the
+    whole Python chain running twice.
 
     Null dbObject rows go to ``quarantined`` instead of failing the whole
     job (the reference hard-raises per record, steps/dks.py:142-143; a
     100 TB run should not die on one bad row).
 
     ``observation``: a pyspark.sql.Observation attached BELOW the split,
-    so the caller's single write action also yields ``n_envelopes`` and
-    ``n_quarantined`` -- no second scan of the day's input to count the
+    so the caller's single write action also yields ``n_envelopes``,
+    ``n_quarantined`` (envelope-level: null dbObject or unparseable) and
+    ``n_undecryptable`` -- no second scan of the day's input to count the
     (near-empty) quarantine branch.
 
-    ``permissive``: unparseable lines (all-null envelope, see
-    envelope_udf) join the quarantine branch, and so do records that fail
-    DECRYPT or transform (bad base64 ciphertext/key/IV, the key service
-    refusing one record's key, non-UTF-8 or invalid payload): the fused
-    pass yields val=NULL for them and they are diverted into the same
-    quarantine schema, counted as ``n_undecryptable`` on
-    ``decrypt_observation`` (a second Observation -- the parse-level one
-    rides the pre-split frame and cannot be observed twice).  Clean rows
-    stay byte-identical to the strict run.  A truncated gzip MEMBER still
-    fails at the Hadoop codec layer (file-level corruption is not a
-    row-level concern).
+    ``permissive``: unparseable lines join the quarantine branch with
+    every envelope field null, and so do records that fail DECRYPT or
+    transform (bad base64 ciphertext/key/IV, the key service refusing one
+    record's key, non-UTF-8 or invalid payload), with their envelope
+    fields.  Clean rows stay byte-identical to the strict run, which
+    raises on any of these.  A truncated gzip MEMBER still fails at the
+    Hadoop codec layer (file-level corruption is not a row-level concern).
 
     ``hit_acc``/``miss_acc``: key-cache accumulators (reference
     steps/ingesters.py:89-90,124-128), counted once per record decrypt."""
-    env = lines_df.withColumn(
-        "env", envelope_udf(collection, permissive=permissive)(F.col("value"))
-    )
-    if observation is not None:
-        env = env.observe(
-            observation,
-            F.count(F.lit(1)).alias("n_envelopes"),
-            F.count(F.when(F.col("env.db_object").isNull(), 1)).alias(
-                "n_quarantined"
-            ),
-        )
-    good = env.filter(F.col("env.db_object").isNotNull()).select("value", "env.*")
-    quarantined = env.filter(F.col("env.db_object").isNull()).select(
-        "value", "env.*"
-    )
-    proc = decrypt_process_udf(
+    udf = ingest_udf(
+        collection,
         key_service,
         audit=audit,
+        permissive=permissive,
         hit_acc=hit_acc,
         miss_acc=miss_acc,
-        permissive=permissive,
     )
-    payload = proc(
-        F.col("db_object"),
-        F.col("encrypted_encryption_key"),
-        F.col("initialisation_vector"),
-        F.col("key_encryption_key_id"),
-        F.col("db"),
-        F.col("collection"),
-        F.col("last_modified"),
-    )
-    # permissive keeps the raw line so failures can join the quarantine
-    keep = good.columns if permissive else [c for c in good.columns if c != "value"]
-    rows = good.withColumn("payload", payload).select(
-        *keep,
-        F.col("payload.val").alias("val"),
-        F.col("payload.is_delete").alias("is_delete"),
-    )
-    if not permissive:
-        return rows, quarantined
-    if decrypt_observation is not None:
-        rows = rows.observe(
-            decrypt_observation,
-            F.count(F.when(F.col("val").isNull(), 1)).alias("n_undecryptable"),
+    ing = lines_df.withColumn("ing", udf(F.col("value")))
+    outcome = F.col("ing.outcome")
+    if observation is not None:
+        ing = ing.observe(
+            observation,
+            F.count(F.lit(1)).alias("n_envelopes"),
+            F.count(F.when(outcome == QUARANTINED, 1)).alias("n_quarantined"),
+            F.count(F.when(outcome == UNDECRYPTABLE, 1)).alias("n_undecryptable"),
         )
-    undecryptable = rows.filter(F.col("val").isNull()).select(*quarantined.columns)
-    return (
-        rows.filter(F.col("val").isNotNull()).drop("value"),
-        quarantined.unionByName(undecryptable),
+    rows = ing.filter(outcome == GOOD).select(*(f"ing.{f}" for f in _ROW_FIELDS))
+    quarantined = ing.filter(outcome != GOOD).select(
+        "value", *(f"ing.{f}" for f in _ENVELOPE_FIELDS)
     )
+    return rows, quarantined
 
 
 def to_daily_rows(df: DataFrame, export_date: str) -> DataFrame:
@@ -177,7 +157,6 @@ def ingest_daily(
     miss_acc=None,
     observation=None,
     permissive: bool = False,
-    decrypt_observation=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Full daily pipeline over a landing path (gz auto-decompressed by
     the Hadoop codec); returns (rows, quarantined_envelopes).  The keyword
@@ -196,6 +175,5 @@ def ingest_daily(
         hit_acc=hit_acc,
         miss_acc=miss_acc,
         observation=observation,
-        decrypt_observation=decrypt_observation,
     )
     return to_daily_rows(rows, export_date), quarantined

@@ -123,9 +123,9 @@ class TestIngestDaily:
         """A day with 2 records whose crypto materials are corrupt (an
         AES key of invalid length; an IV of invalid length) completes in
         permissive mode: both divert to the quarantine branch with their
-        raw lines preserved, `decrypt_observation` counts them, and the
-        remaining rows are byte-identical to the all-clean run (VERDICT
-        r6 #3 done-criterion)."""
+        raw lines preserved, the observation's `n_undecryptable` counts
+        them, and the remaining rows are byte-identical to the all-clean
+        run (VERDICT r6 #3 done-criterion)."""
         import base64
 
         from pyspark.sql import Observation
@@ -152,19 +152,16 @@ class TestIngestDaily:
             IdentityKeyService(), "2023-05-02",
         )
         with pytest.raises(Exception):
-            # collect, not count: count() prunes the payload projection
-            # (even nondeterministic exprs) and would never decrypt
             rows_strict.collect()
 
         obs = Observation("parse_metrics2")
-        dobs = Observation("decrypt_metrics")
         rows, quarantined = ingest_daily(
             spark, src, "calculator:calculationParts",
             IdentityKeyService(), "2023-05-02",
-            observation=obs, permissive=True, decrypt_observation=dobs,
+            observation=obs, permissive=True,
         )
         got = sorted((r["id"], r["val"]) for r in rows.collect())
-        assert dobs.get["n_undecryptable"] == 2
+        assert obs.get["n_undecryptable"] == 2
         assert obs.get["n_quarantined"] == 0  # parse-level: all clean
         assert obs.get["n_envelopes"] == 8
 
@@ -189,6 +186,76 @@ class TestIngestDaily:
             if r["id"] not in bad_ids
         )
         assert got == want
+
+    def test_fused_chain_failure_paths(self, spark, tmp_path):
+        """One permissive day holding every failure kind the fused ingest
+        UDF sorts: bad JSON and a null dbObject (envelope-quarantined), a
+        bad-length IV (undecryptable) and 8 clean rows.  One Observation
+        counts all three outcomes, quarantine keeps the raw lines, the
+        ciphertext comes back only on the undecryptable row, the clean
+        rows equal the strict run's, and strict `rows.count()` runs the
+        UDF and raises."""
+        import base64
+
+        from pyspark.sql import Observation
+
+        lines, _ = make_batch(10, seed=737373, n_keys=2)
+        e = json.loads(lines[2])
+        e["message"]["dbObject"] = None
+        lines[2] = null_db = json.dumps(e)
+        e = json.loads(lines[5])
+        e["message"]["encryption"]["initialisationVector"] = (
+            base64.b64encode(b"8bytesiv").decode()
+        )
+        lines[5] = bad_iv = json.dumps(e)
+        bad_json = '{"message": {"_id": '
+        poisoned = lines[:4] + [bad_json] + lines[4:]
+        src = _write_lines(tmp_path, poisoned, name="fused.jsonl")
+        strict_src = _write_lines(
+            tmp_path, [ln for ln in lines if ln != bad_iv], name="strict.jsonl"
+        )
+
+        obs = Observation("fused_metrics")
+        hit_acc = spark.sparkContext.accumulator(0)
+        miss_acc = spark.sparkContext.accumulator(0)
+        rows, quarantined = ingest_daily(
+            spark, src, "calculator:calculationParts",
+            IdentityKeyService(), "2023-05-02",
+            hit_acc=hit_acc, miss_acc=miss_acc,
+            observation=obs, permissive=True,
+        )
+        got = sorted(tuple(r) for r in rows.collect())
+        assert obs.get == {
+            "n_envelopes": 11,
+            "n_quarantined": 2,
+            "n_undecryptable": 1,
+        }
+        # every record with a dbObject pays one key lookup, the
+        # undecryptable one included: 8 clean + 1 bad IV
+        assert hit_acc.value + miss_acc.value == 9
+
+        q = {r["value"]: r for r in quarantined.collect()}
+        assert set(q) == {bad_json, null_db, bad_iv}
+        assert [v for v, r in q.items() if r["db_object"] is not None] == [bad_iv]
+        assert q[bad_iv]["initialisation_vector"] == (
+            e["message"]["encryption"]["initialisationVector"]
+        )
+        assert q[bad_json]["id"] is None
+
+        strict_rows, strict_q = ingest_daily(
+            spark, strict_src, "calculator:calculationParts",
+            IdentityKeyService(), "2023-05-02",
+        )
+        assert len(got) == 8
+        assert got == sorted(tuple(r) for r in strict_rows.collect())
+        assert [r["value"] for r in strict_q.collect()] == [null_db]
+
+        poisoned_strict, _ = ingest_daily(
+            spark, src, "calculator:calculationParts",
+            IdentityKeyService(), "2023-05-02",
+        )
+        with pytest.raises(Exception):
+            poisoned_strict.count()
 
     def test_missing_db_object_quarantined(self, spark, tmp_path):
         lines, _ = make_batch(5)

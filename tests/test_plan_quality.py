@@ -54,15 +54,15 @@ def test_deciles_have_no_global_window_sort(spark):
 
 
 def test_cdi_python_stages_evaluate_once(spark, tmp_path):
-    """Each pandas UDF in the CDI chain must appear EXACTLY once in the
+    """Each Python UDF in the CDI chain must appear EXACTLY once in the
     plan.  A filter on an expanded UDF column gets the expression inlined
     + pushed and the whole upstream Python chain (fixture encrypt +
-    envelope parse) runs twice -- the round-3 plan audit measured that
-    doubling before the envelope UDF became an optimizer barrier
-    (asNondeterministic) and the quarantine split moved onto the packed
+    ingest) runs twice -- the round-3 plan audit measured that doubling
+    before the ingest UDF became an optimizer barrier
+    (asNondeterministic) and the quarantine split moved onto its packed
     struct.  Every caller of the shared ingest chain is checked: the two
-    registry pipelines (fixture encrypt + envelope + decrypt) and the two
-    benched file-reading plans (envelope + decrypt)."""
+    registry pipelines (fixture encrypt + fused ingest) and the two
+    benched file-reading plans (fused ingest)."""
     from dataworks_aws_corporate_data_ingestion_spark.workload import (
         _cdi_pipeline_from_files,
         _materialize_cdi_fixture,
@@ -72,7 +72,7 @@ def test_cdi_python_stages_evaluate_once(spark, tmp_path):
     for name in ("cdi_ingest_pipeline", "cdi_audit_pipeline"):
         plan = _plan(spark, name)
         n = plan.count("ArrowEvalPython")
-        assert n == 3, f"{name}: expected 3 Python stages, found {n}"
+        assert n == 2, f"{name}: expected 2 Python stages, found {n}"
 
     src = str(tmp_path / "stream_src")
     _materialize_cdi_fixture(spark, SF, src)
@@ -82,7 +82,7 @@ def test_cdi_python_stages_evaluate_once(spark, tmp_path):
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         n = plan.count("ArrowEvalPython")
-        assert n == 2, f"{name}: expected 2 Python stages, found {n}"
+        assert n == 1, f"{name}: expected 1 Python stage, found {n}"
 
 
 def test_asof_pit_form_is_join_free(spark):

@@ -6,7 +6,10 @@
    DuckDB -- row count, sorted column names, order-insensitive value hash.
 
 Exit 0 iff everything matches.
-Usage: python tools/driver_sim.py [sf_dir] [--json out.json] [names...]
+Usage: python tools/driver_sim.py [sf_dir] [--json out.json]
+       [--skip a,b,...] [names...]
+Query names (positional or --skip) that are not in the registry exit 2
+before any session starts.  The summary counts the queries checked.
 With --json, writes a CORRECTNESS_r{N}.json-shaped report (one object per
 query: rows_match / schema_match / hash_match / spark_rows / oracle_rows /
 err) so never-driver-sampled queries still get a committed hard signal.
@@ -23,7 +26,7 @@ import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 from dataworks_aws_corporate_data_ingestion_spark.caching import release_tracked  # noqa: E402
 
@@ -78,8 +81,8 @@ def value_hash(df: pd.DataFrame) -> str:
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
 
 
-def main() -> int:
-    args = sys.argv[1:]
+def main(argv: list[str] | None = None) -> int:
+    args = list(sys.argv[1:] if argv is None else argv)
     json_out = None
     if "--json" in args:
         i = args.index("--json")
@@ -104,6 +107,13 @@ def main() -> int:
         )
     sf_dir = args.pop(0) if args and args[0].startswith("/") else "/root/testdata/sf0.01"
     only = set(args)  # optional query names to restrict the run to
+    queries = entrymod.queries()
+    for what, names in (("--skip names", skip), ("query names", only)):
+        unknown = names - set(queries)
+        if unknown:
+            # a typo'd name must fail loudly, not silently check nothing
+            print(f"ERROR: {what} not in the registry: {sorted(unknown)}")
+            return 2
     # plain, like the driver -- by default.  The sf0.01 contract check
     # must mimic the round driver's unconfigured session exactly; the
     # LARGE-sf breadth sweeps (sf1.0 over the full registry) legitimately
@@ -149,16 +159,10 @@ def main() -> int:
                 f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
             )
 
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    unknown = skip - set(queries)
-    if unknown:
-        # a typo'd --skip must fail loudly, not silently "skip" nothing
-        print(f"ERROR: --skip names not in the registry: {sorted(unknown)}")
-        spark.stop()
-        return 2
     failures = []
     report: dict[str, dict] = {}
+    checked = 0
     for name, fn in sorted(queries.items()):
         if only and name not in only:
             continue
@@ -175,6 +179,7 @@ def main() -> int:
             "err": None,
         }
         report[name] = rec
+        checked += 1
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
@@ -212,7 +217,7 @@ def main() -> int:
         with open(json_out, "w") as f:
             json.dump(report, f, indent=2)
         print(f"wrote {json_out}")
-    print(f"{len(queries)} queries, {len(failures)} failures: {failures}")
+    print(f"{checked} queries, {len(failures)} failures: {failures}")
     return 1 if failures else 0
 
 
