@@ -6,7 +6,13 @@ and print ONE JSON line with per-query wall-clock seconds.
 Output schema: the driver-facing fields are unchanged ("queries" maps
 name -> best seconds); a "details" map adds, per query:
   best      best-of-N wall-clock seconds (same number as "queries")
-  median    median-of-N -- separates plan cost from host load spikes
+  median    median-of-N wall-clock seconds
+  cpu_s     median-of-N CPU seconds of the whole process tree (this
+            driver, the Spark JVM and its Python workers; perfbench's
+            cycles.tree_cpu_s).  On a VM, wall time follows hypervisor
+            steal while the tree's CPU follows the work the code does, so
+            a wall move with cpu_s held reads as the host, not the code
+            (tools/bench_diff.py classifies it so)
   plan_sha  sha256 (16 hex chars) of the normalised initial physical plan,
             so round-over-round diffs can tell "the plan changed" apart
             from "the host was loaded" (expression ids / codegen ids /
@@ -17,14 +23,10 @@ name -> best seconds); a "details" map adds, per query:
             API): run/CPU ms, input + shuffle MB, task count.  Bytes and
             task counts are repeat-invariant, so a diff can split "python
             stage slower" from "shuffle grew" without plan spelunking
-  load1_at_start / retried  host-noise evidence: 1-min loadavg when the
-            entry started, and whether its repeat set tripped the
-            median/best > 1.5 noise gate and was auto-re-run once (the
-            cleaner batch is recorded; best is min over both batches)
 
-A top-level "host" object records cpu count, loadavg at run start/end and
-the repeat count, so a committed BENCH artifact can prove (or disprove)
-"the host was loaded" without a separate adjudication trail.
+A top-level "host" object records the cpu count, the repeat count, the
+share of host CPU time stolen by the hypervisor over the run and the
+cache-sweep failure count.
 
 For queries with a materialised bench fixture (cdi_ingest_pipeline: the
 oracle-checked form encrypts its own input in-flight), the fixture is
@@ -35,16 +37,6 @@ gross_best/gross_median stay in the details.  (Rounds 4-8 attributed this
 by subtraction, gross best minus fixture-probe best; two noisy minimums
 subtracted gave r7 an impossible 0.081s and made r8 read as a 10x
 regression -- r8 verdict nit #1.)
-
-Per-entry load shield (r8 verdict item #2): the run-level gate below can't
-see external load that arrives MID-run (BENCH_r08 passed the gate at 3.71,
-then external load pushed per-entry load1 to 7.2-7.6).  So each read-query
-entry now checks the 1-min loadavg right before it starts; if it exceeds
-SPARK_GRAFT_BENCH_ENTRY_MAX_LOAD1 x a self-load allowance, the entry is
-REQUEUED to the end of the run (one retry, recorded as requeued_for_load
-with both load samples) instead of being timed under load.  Write benches
-are order-dependent (merge reads write_daily's output), so they
-briefly WAIT for the load to drop instead of requeueing.
 
 Hygiene: every repeat ends by draining the tracked-cache registry
 (operators persist multi-consumer intermediates they cannot unpersist
@@ -76,6 +68,13 @@ from dataworks_aws_corporate_data_ingestion_spark.workload import (
     WRITE_BENCH_PLAN_PROBES,
     WRITE_BENCHES,
 )
+
+_REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
+# perfbench's modules import each other flat, so its directory goes on the
+# path the way perfbench/run.py puts it there
+sys.path.insert(0, os.path.join(_REPO_ROOT, "perfbench"))
+from cycles import host_cpu_times, steal_share, tree_cpu_s  # noqa: E402
+from spans import SparkRest  # noqa: E402
 
 # strip per-session noise from plan strings so the sha is stable across
 # runs: expression ids (#123L), plan/codegen/subquery ids, object
@@ -131,24 +130,18 @@ def plan_sha(df) -> str | None:
     return hashlib.sha256(plan.encode("utf-8")).hexdigest()[:16]
 
 
-def _stages_json(spark) -> list[dict] | None:
+def _completed_stages(spark) -> list[dict] | None:
     """Completed-stage metrics from the local UI's REST status API --
-    the public, listener-free way to ask 'where did the time go'."""
-    import urllib.request
-
+    the public, listener-free way to ask 'where did the time go' -- or
+    None when the UI is off or unreachable."""
     try:
-        ui = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/stages?status=complete", timeout=5
-        ) as resp:
-            return json.loads(resp.read())
-    except Exception:
+        return SparkRest(spark).get("stages?status=complete")
+    except (OSError, ValueError):
         return None
 
 
 def _completed_stage_ids(spark) -> set[int]:
-    stages = _stages_json(spark)
+    stages = _completed_stages(spark)
     return {s["stageId"] for s in stages} if stages else set()
 
 
@@ -159,7 +152,7 @@ def _stage_metrics_since(spark, before_ids: set[int]) -> dict | None:
     got slower' from 'shuffle doubled' without re-deriving it from
     plans.  Bytes and task counts are repeat-invariant; times belong to
     the profiled repeat only."""
-    stages = _stages_json(spark)
+    stages = _completed_stages(spark)
     if stages is None:
         return None
     new = [s for s in stages if s["stageId"] not in before_ids]
@@ -229,369 +222,27 @@ def _end_repeat(spark) -> None:
             )
 
 
-def _loadavg() -> list[float] | None:
-    try:
-        return [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        return None
-
-
-# a repeat set whose median/best exceeds this carries host-load spikes the
-# best-of-N can't fully hide; such entries are re-run once and the cleaner
-# batch is recorded (r4/r5 lesson: two rounds of committed BENCH artifacts
-# carried load spikes the JSON could neither prove nor retry away)
-_NOISE_RATIO = 1.5
-
-
-def _load_gate() -> dict:
-    """Run-level host-load gate: refuse to emit numbers from a loaded host.
-
-    The per-entry median/best retry above cannot catch UNIFORMLY loaded
-    repeats -- when the host is busy for an entry's whole repeat set, best
-    and median rise together and the ratio stays clean (r7 lesson: the
-    committed BENCH_r07 started at load1 10.5 and overstated the write
-    family ~1.7x vs a quiet probe).  So the run itself is gated: before
-    any Spark work starts, poll the 1-min loadavg until it drops below
-    SPARK_GRAFT_BENCH_MAX_LOAD1 (default 4.0 on this 32-CPU host) or the
-    SPARK_GRAFT_BENCH_LOAD_WAIT_S budget (default 900s) runs out.  On
-    timeout the run ABORTS with exit code 75 (EX_TEMPFAIL) after printing
-    a distinct bench_load_gate_abort line -- no numbers beat wrong numbers.
-
-    Only the run START is gated: once the bench is running, local[32]
-    saturates the host with its own tasks, so mid-run loadavg measures us,
-    not external noise (per-entry gating would deadlock against our own
-    load; per-entry load1_at_start is still recorded as evidence)."""
-    threshold = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD1", "4.0"))
-    budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT_S", "900"))
-    poll_s = 15.0
-    waited = 0.0
-    load = _loadavg()
-    gate = {
-        "threshold": threshold,
-        "load1_at_gate": None if load is None else load[0],
-        "waited_s": 0.0,
-        "aborted": False,
-    }
-    while load is not None and load[0] > threshold and waited < budget_s:
-        step = min(poll_s, budget_s - waited)
-        time.sleep(step)
-        waited += step
-        load = _loadavg()
-    gate["waited_s"] = round(waited, 1)
-    gate["load1_at_gate_pass"] = None if load is None else load[0]
-    if load is not None and load[0] > threshold:
-        gate["aborted"] = True
-    return gate
-
-
-def _proc_stat_busy() -> tuple[int, int] | None:
-    """(busy_jiffies, total_jiffies) summed over all CPUs, from /proc/stat."""
-    try:
-        with open("/proc/stat") as f:
-            vals = [int(x) for x in f.readline().split()[1:]]
-        idle = vals[3] + vals[4]  # idle + iowait
-        return sum(vals) - idle, sum(vals)
-    except Exception:
-        return None
-
-
-def _external_busy_cores(sample_s: float = 0.25) -> float | None:
-    """Instantaneous system-wide busy cores, sampled while THIS bench sits
-    idle between entries -- so (minus ~a fifth of a core of JVM daemon
-    threads) everything measured is EXTERNAL load.  Loadavg cannot make
-    that distinction: its 1-min window still carries our own just-finished
-    repeat set, which is why the r4-r8 shields had to stay run-level.  A
-    /proc/stat delta across an idle gap is self-load-free, so it can gate
-    per entry without deadlocking against our own tasks."""
-    a = _proc_stat_busy()
-    if a is None:
-        return None
-    time.sleep(sample_s)
-    b = _proc_stat_busy()
-    if b is None or b[1] <= a[1]:
-        return None
-    return round((os.cpu_count() or 1) * (b[0] - a[0]) / (b[1] - a[1]), 2)
-
-
-# more than this many EXTERNAL busy cores at entry start => the timing
-# would be polluted; requeue (read queries) or wait (write benches)
-_ENTRY_EXT_CORES_MAX = float(
-    os.environ.get("SPARK_GRAFT_BENCH_ENTRY_MAX_EXT_CORES", "2.0")
-)
-# per-entry budget for waiting out an external-load spike on the retry /
-# write-bench path; after it expires the entry runs anyway (recorded)
-_ENTRY_LOAD_WAIT_S = float(os.environ.get("SPARK_GRAFT_BENCH_ENTRY_WAIT_S", "120"))
-
-
-def _entry_shield() -> dict:
-    """Pre-entry host-noise sample: loadavg (the judge-facing evidence
-    number) + instantaneous external busy cores (the actionable signal)."""
-    load1 = _loadavg()
-    ext = _external_busy_cores()
-    return {
-        "load1": None if load1 is None else load1[0],
-        "ext_busy_cores": ext,
-        "loaded": ext is not None and ext > _ENTRY_EXT_CORES_MAX,
-    }
-
-
-def _wait_for_quiet(budget_s: float) -> tuple[dict, float]:
-    """Poll until the external load drops below the shield threshold or
-    the budget runs out; returns (final shield sample, seconds waited)."""
-    waited = 0.0
-    shield = _entry_shield()
-    while shield["loaded"] and waited < budget_s:
-        step = min(10.0, budget_s - waited)
-        time.sleep(step)
-        waited += step
-        shield = _entry_shield()
-    return shield, round(waited, 1)
-
-
-def _run_batch(spark, run_once, repeats: int):
-    """One batch of timed repeats; stage metrics profiled on the last."""
-    times: list[float] = []
+def _timed_record(spark, run_once, repeats: int) -> dict:
+    """Best and median wall seconds and median process-tree CPU seconds
+    over `repeats` runs; stage metrics are profiled on the last run."""
+    walls: list[float] = []
+    cpus: list[float] = []
     stage_metrics = None
     for rep in range(repeats):
         before = _completed_stage_ids(spark) if rep == repeats - 1 else None
-        start = time.perf_counter()
+        cpu0, t0 = tree_cpu_s(), time.perf_counter()
         run_once()
-        times.append(time.perf_counter() - start)
+        walls.append(time.perf_counter() - t0)
+        cpus.append(tree_cpu_s() - cpu0)
         if before is not None:
             stage_metrics = _stage_metrics_since(spark, before)
         _end_repeat(spark)
-    return times, stage_metrics
-
-
-def _timed_record(spark, run_once, repeats: int) -> dict:
-    """Best-of-N timing with host-noise evidence and one auto-retry.
-
-    Records the 1-min loadavg at entry start; if the batch's median/best
-    ratio exceeds _NOISE_RATIO, the whole batch is re-run once and the
-    batch with the cleaner ratio supplies the median/stages while the
-    best is taken across both batches (the minimum over more samples is
-    never a worse estimate of plan cost).  `retried` marks entries whose
-    record includes the second batch."""
-    load1 = _loadavg()
-    times, stage_metrics = _run_batch(spark, run_once, repeats)
-    best = min(times)
-    retried = False
-    if statistics.median(times) / best > _NOISE_RATIO:
-        retried = True
-        times2, sm2 = _run_batch(spark, run_once, repeats)
-        best = min(best, min(times2))
-        if statistics.median(times2) / min(times2) < statistics.median(
-            times
-        ) / min(times):
-            times, stage_metrics = times2, sm2
-    rec = {
-        "best": round(best, 3),
-        "median": round(statistics.median(times), 3),
+    return {
+        "best": round(min(walls), 3),
+        "median": round(statistics.median(walls), 3),
+        "cpu_s": round(statistics.median(cpus), 2),
         "stages": stage_metrics,
-        "load1_at_start": None if load1 is None else load1[0],
     }
-    if retried:
-        rec["retried"] = True
-    return rec
-
-
-_REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
-
-
-def _anchor_ref() -> dict | None:
-    """The committed host-era calibration anchor (BENCH_ANCHOR.json):
-    a pinned, plan-stable probe whose quiet-host timing was recorded the
-    round the anchor was set.  Re-measuring the probe each run gives an
-    era_ratio = (probe now) / (probe at anchor-set time) that separates
-    'this host era is 1.3x slower' from 'this plan regressed' -- the
-    adjudication the r9 judge had to do by hand with a worktree A/B."""
-    try:
-        with open(os.path.join(_REPO_ROOT, "BENCH_ANCHOR.json")) as f:
-            return json.load(f)
-    except Exception:
-        return None
-
-
-def _measure_anchor(spark, sf_dir: str, sf: float, repeats: int) -> dict:
-    """Time the anchor probe under the same shield/record discipline as a
-    regular entry and compare to the committed reference.  The ratio is
-    only published when the probe's plan_sha matches the anchor's (a
-    changed probe plan would measure the change, not the era), the SF
-    matches (different data volume, different cost) and the host has the
-    anchor's CPU count (a different machine, not a different era)."""
-    ref = _anchor_ref()
-    probe = (ref or {}).get("probe", "q1_pricing_summary")
-    spec = QUERIES.get(probe)
-    anchor: dict = {"probe": probe, "ref": ref}
-    if spec is None:
-        anchor["comparable"] = False
-        anchor["reason"] = "probe not in registry"
-        return anchor
-    shield, waited = _wait_for_quiet(_ENTRY_LOAD_WAIT_S)
-    rec = _timed_record(
-        spark,
-        lambda: spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
-        repeats,
-    )
-    rec["plan_sha"] = plan_sha(spec.fn(spark, sf_dir))
-    _end_repeat(spark)
-    anchor.update(
-        {
-            "best": rec["best"],
-            "median": rec["median"],
-            "plan_sha": rec["plan_sha"],
-            "ext_busy_cores_at_start": shield["ext_busy_cores"],
-            "waited_for_quiet_s": waited,
-        }
-    )
-    if ref is None:
-        anchor["comparable"] = False
-        anchor["reason"] = "no committed BENCH_ANCHOR.json"
-    elif ref.get("sf") != sf:
-        anchor["comparable"] = False
-        anchor["reason"] = f"anchor set at sf={ref.get('sf')}, run is sf={sf}"
-    elif rec["plan_sha"] != ref.get("plan_sha"):
-        anchor["comparable"] = False
-        anchor["reason"] = "probe plan_sha changed since anchor was set"
-    elif ref.get("host_cpus") != os.cpu_count():
-        anchor["comparable"] = False
-        anchor["reason"] = (
-            f"anchor set on a {ref.get('host_cpus')}-cpu host,"
-            f" this host has {os.cpu_count()}"
-        )
-    elif not ref.get("ref_best_sec"):
-        anchor["comparable"] = False
-        anchor["reason"] = "anchor has no ref_best_sec"
-    else:
-        anchor["comparable"] = True
-        anchor["era_ratio"] = round(rec["best"] / ref["ref_best_sec"], 3)
-    return anchor
-
-
-def _prev_details() -> tuple[int, float, dict, dict | None] | None:
-    """The latest committed BENCH_DETAILS_r*.json other than this run's
-    own output file: the round-over-round reference the per-entry
-    classification below adjudicates against."""
-    import glob
-
-    out_path = os.path.abspath(_details_out_path())
-    cands = []
-    for f in glob.glob(os.path.join(_REPO_ROOT, "BENCH_DETAILS_r*.json")):
-        m = re.match(r"BENCH_DETAILS_r(\d+)\.json$", os.path.basename(f))
-        if m and os.path.abspath(f) != out_path:
-            cands.append((int(m.group(1)), f))
-    if not cands:
-        return None
-    rnd, path = max(cands)
-    try:
-        with open(path) as f:
-            obj = json.load(f)
-    except Exception:
-        return None
-    return (
-        rnd,
-        obj.get("sf"),
-        obj.get("details") or {},
-        (obj.get("host") or {}).get("anchor"),
-    )
-
-
-def classify(
-    old: dict | None,
-    new: dict | None,
-    ot: float,
-    nt: float,
-    thr: float,
-    era: float | None,
-) -> str:
-    """One entry's round-over-round class from its old/new details
-    records, old/new best seconds, the steady threshold and the era
-    ratio (None when no shared anchor) -- the ladder _classify_vs_prev
-    documents.  tools/bench_diff.py classifies with this same function."""
-    osha = (old or {}).get("plan_sha")
-    nsha = (new or {}).get("plan_sha")
-    if osha and nsha and osha != nsha:
-        return "PLAN-CHANGED"
-    rel = (nt - ot) / ot if ot else 0.0
-    if abs(rel) <= thr:
-        return "steady"
-    if era:
-        expected = ot * era
-        if expected and abs(nt - expected) / expected <= thr:
-            return "ERA-DRIFT"
-    nb, nm = (new or {}).get("best"), (new or {}).get("median")
-    if nb and nm and nm > nb * 1.8:
-        return "HOST-NOISE?"
-    return "FASTER" if rel < 0 else "SLOWER"
-
-
-def _classify_vs_prev(details: dict, anchor: dict, sf: float) -> None:
-    """Stamp each entry with its round-over-round adjudication
-    (tools/bench_diff.py semantics, r10 verdict item #5: noise victims
-    must self-classify in the committed artifact instead of needing a
-    hand A/B).  Adds per entry `vs_prev`: the reference round/seconds,
-    the anchor-blocked era ratio, and a class --
-
-      PLAN-CHANGED  plan_sha differs (the code asked for a new plan)
-      steady        same sha, |delta| within 15%
-      ERA-DRIFT     same sha, delta beyond 15% but explained by the two
-                    runs' anchor-probe era ratio
-      HOST-NOISE?   unexplained AND this run's median > 1.8x its best
-                    (a mid-repeat load spike the best couldn't hide)
-      FASTER/SLOWER unexplained plan-stable change -- the rows a human
-                    (or the driver's PERF diff) should actually read
-
-    Classification only runs when the reference is the SAME SF and both
-    runs carry comparable anchors against the same committed pin.
-
-    `pin_sha_match` cross-checks each entry's plan_sha against the
-    committed PLAN_SHAS.json pin: plan shas are context-sensitive for
-    fan_out/persist-family plans (measured r11: the driver's bench
-    environment and the builder's produce DIFFERENT shas for 13 such
-    entries at identical code, while same-environment runs are stable),
-    so a PLAN-CHANGED class against a reference produced in another
-    environment with pin_sha_match=true reads as cross-context sha
-    noise, not a real plan change."""
-    prev = _prev_details()
-    if prev is None:
-        return
-    rnd, prev_sf, prev_details, prev_anchor = prev
-    if prev_sf != sf:
-        return
-    pins = {}
-    try:
-        with open(os.path.join(_REPO_ROOT, "PLAN_SHAS.json")) as f:
-            pins = json.load(f).get("plan_shas") or {}
-    except Exception:
-        pass
-    era = None
-    if (
-        anchor
-        and prev_anchor
-        and anchor.get("comparable")
-        and prev_anchor.get("comparable")
-        and anchor.get("ref") == prev_anchor.get("ref")
-        and prev_anchor.get("era_ratio")
-    ):
-        era = anchor["era_ratio"] / prev_anchor["era_ratio"]
-    thr = 0.15
-    for name, rec in details.items():
-        old = prev_details.get(name)
-        if not isinstance(old, dict) or old.get("best") is None:
-            continue
-        ot, nt = old["best"], rec.get("best")
-        if not ot or not nt:
-            continue
-        rec["vs_prev"] = {
-            "ref_round": rnd,
-            "ref_best": ot,
-            "rel_delta": round((nt - ot) / ot, 3),
-            "era_ratio_vs_ref": None if era is None else round(era, 3),
-            "class": classify(old, rec, ot, nt, thr, era),
-            "pin_sha_match": (
-                None if name not in pins else pins[name] == rec.get("plan_sha")
-            ),
-        }
 
 
 def _details_out_path() -> str:
@@ -616,20 +267,6 @@ def _details_out_path() -> str:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    gate = _load_gate()
-    if gate["aborted"]:
-        # distinct, parseable abort record as the LAST line; exit 75 so a
-        # caller can tell "host too loaded" from a bench failure
-        print(
-            json.dumps(
-                {
-                    "metric": "bench_load_gate_abort",
-                    "load_gate": gate,
-                    "sf": sf,
-                }
-            )
-        )
-        sys.exit(75)
     spark = get_session(app_name="cdi-engine-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -648,13 +285,11 @@ def main() -> None:
 
     # best-of-N: the harness shares a host, so single-shot timings carry
     # external load spikes; the minimum is the cleanest estimate of what
-    # the plan itself costs.  Median is reported alongside so a diff can
-    # distinguish a loaded host (best stable, median up) from a slower
-    # plan (both up, plan_sha changed).
+    # the plan itself costs.  The median wall and the median tree CPU are
+    # reported alongside so a diff can tell a loaded host (wall up, CPU
+    # held) from a slower plan (both up, or plan_sha changed).
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
-    load_start = _loadavg()
-    anchor = _measure_anchor(spark, sf_dir, sf, repeats)
-    era_ratio = anchor.get("era_ratio") if anchor.get("comparable") else None
+    cpu_times_start = host_cpu_times()
     out_dir = tempfile.mkdtemp(prefix="cdi-bench-")
 
     def time_read_entry(name: str, spec) -> dict:
@@ -712,46 +347,16 @@ def main() -> None:
         return rec
 
     try:
-        deferred: list[tuple[str, object, dict]] = []
         for name, spec in bench_queries.items():
-            shield = _entry_shield()
-            if shield["loaded"]:
-                # external load at entry start: requeue to end of run
-                # rather than record a polluted timing (r8 verdict #2)
-                deferred.append((name, spec, shield))
-                continue
             rec = time_read_entry(name, spec)
-            rec["ext_busy_cores_at_start"] = shield["ext_busy_cores"]
             timings[name] = rec["best"]
             details[name] = rec
-        for name, spec, first in deferred:
-            shield, waited = _wait_for_quiet(_ENTRY_LOAD_WAIT_S)
-            rec = time_read_entry(name, spec)
-            rec["ext_busy_cores_at_start"] = shield["ext_busy_cores"]
-            rec["requeued_for_load"] = {
-                "first_attempt": first,
-                "retry_waited_s": waited,
-                "still_loaded_at_retry": shield["loaded"],
-            }
-            timings[name] = rec["best"]
-            details[name] = rec
-        # write-path headline ops (ordered: merge reads write_daily's
-        # output, so these WAIT for external load instead of requeueing)
+        # write-path headline ops, in order: merge reads write_daily's
+        # output
         for name, fn in WRITE_BENCHES.items():
-            shield = _entry_shield()
-            wait_rec = None
-            if shield["loaded"]:
-                shield, waited = _wait_for_quiet(_ENTRY_LOAD_WAIT_S)
-                wait_rec = {
-                    "waited_s": waited,
-                    "still_loaded_after_wait": shield["loaded"],
-                }
             rec = _timed_record(
                 spark, lambda: fn(spark, sf_dir, out_dir), repeats
             )
-            rec["ext_busy_cores_at_start"] = shield["ext_busy_cores"]
-            if wait_rec is not None:
-                rec["waited_for_load"] = wait_rec
             probe = WRITE_BENCH_PLAN_PROBES.get(name)
             # fingerprint the DataFrame the sink consumes; benches
             # without a cheap probe (mor: stateful table) stay null
@@ -766,22 +371,11 @@ def main() -> None:
         total = round(sum(timings.values()), 3)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
-    if era_ratio:
-        # raw numbers stay the headline; the era-normalised twin answers
-        # "how would this have read on the anchor-era host" so a
-        # round-over-round diff needs no manual host adjudication
-        for rec in details.values():
-            rec["best_era_norm"] = round(rec["best"] / era_ratio, 3)
-    _classify_vs_prev(details, anchor, sf)
-    load_end = _loadavg()
     host = {
         "cpus": os.cpu_count(),
-        "loadavg_start": load_start,
-        "loadavg_end": load_end,
         "repeats": repeats,
-        "load_gate": gate,
+        "steal_share": round(steal_share(cpu_times_start, host_cpu_times()), 4),
         "cache_sweep_failures": dict(_SWEEP_FAILURES),
-        "anchor": anchor,
     }
 
     details_obj = {

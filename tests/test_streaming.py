@@ -6,8 +6,6 @@ from __future__ import annotations
 import json
 import time
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from dataworks_aws_corporate_data_ingestion_spark.functions.crypto import IdentityKeyService
@@ -1015,79 +1013,6 @@ class TestEventTimeTimeoutSessions:
         # user 1's 12:00 session and user 3's are still open: not emitted
         assert all(u != 3 for u, *_ in got)
         assert len(got) == 2
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state-server protocol needs protobuf, "
-    "absent in this environment (streaming/tws.py is import-complete; "
-    "the applyInPandasWithState operators cover stateful streaming here)",
-)
-class TestTransformWithState:
-    """transformWithStateInPandas (Spark 4 named-state API, RocksDB
-    provider): per-user lifetime totals accumulate across micro-batches
-    and checkpoint restarts, and the final per-user row equals the batch
-    aggregate over all data."""
-
-    SCHEMA = (
-        "event_id bigint, ts timestamp, user_id bigint,"
-        " event_type string, value double"
-    )
-
-    def test_totals_accumulate_across_batches(self, spark, tmp_path):
-        import datetime as dt
-
-        from dataworks_aws_corporate_data_ingestion_spark.streaming.tws import (
-            running_totals_query,
-        )
-
-        delta = tmp_path / "events"
-        out = str(tmp_path / "totals")
-        ckpt = str(tmp_path / "ckpt")
-        delta.mkdir()
-        t0 = dt.datetime(2024, 1, 1, 9, 0)
-
-        def batch(rows):
-            spark.createDataFrame(rows, self.SCHEMA).write.mode(
-                "append"
-            ).parquet(str(delta))
-
-        batch(
-            [
-                (1, t0, 1, "view", 10.0),
-                (2, t0, 1, "view", 5.0),
-                (3, t0, 2, "view", 7.0),
-            ]
-        )
-        q = running_totals_query(spark, str(delta), out, ckpt)
-        q.awaitTermination(120)
-
-        batch([(4, t0, 1, "view", 2.5), (5, t0, 3, "view", 1.0)])
-        q = running_totals_query(spark, str(delta), out, ckpt)
-        q.awaitTermination(120)
-
-        rows = spark.read.parquet(out).collect()
-        # the LAST emission per user must equal the batch aggregate
-        latest = {}
-        for r in rows:
-            latest[r.user_id] = max(
-                latest.get(r.user_id, (0,)),
-                (r.n_events, r.total_value),
-            )
-        assert latest[1] == (3, 17.5)  # state restored across the restart
-        assert latest[2] == (1, 7.0)
-        assert latest[3] == (1, 1.0)
-        # user 1 emitted once per touched batch: 2 rows
-        assert sum(1 for r in rows if r.user_id == 1) == 2
 
 
 class TestSpanAdmission:

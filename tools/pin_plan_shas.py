@@ -7,7 +7,7 @@ exactly as bench.py does) and each write bench's plan probe.
 tests/test_plan_shas.py recomputes this table and diffs it, so a plan
 change in any benched entry fails CI with a readable diff -- decoupling
 plan regressions from timing noise: a BENCH delta with an UNCHANGED
-pinned sha is host/era, a failed pin is a real plan change that must be
+pinned sha is the host, a failed pin is a real plan change that must be
 either intended (re-run this tool, commit the new table alongside the
 change) or fixed.
 
