@@ -10,8 +10,17 @@ make it configurable -- AQE is that TODO resolved properly).
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import warnings
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Defaults chosen for the local test harness; on a real cluster these are
@@ -57,15 +66,65 @@ def default_master() -> str:
     return f"local[{cpus}]"
 
 
+_LOCAL_FS_SRC = os.path.join(os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
+_LOCAL_FS = "dataworks_aws_corporate_data_ingestion_spark.jvm.NioLocalFileSystem"
+
+
+@functools.cache
+def _local_fs_classes() -> str | None:
+    """The class directory of jvm/NioLocalFileSystem.java, compiled by the
+    local javac at first use into a cache keyed by the source and the Hadoop
+    jar it builds against; None, with one warning, where it cannot be had."""
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    jars = glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar"))
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    root = os.path.join(cache, "cdi-spark-engine")
+    try:
+        if not jars:
+            raise OSError(f"no hadoop-client-api jar in {spark_home}/jars")
+        with open(_LOCAL_FS_SRC, "rb") as f:
+            key = hashlib.sha256(f.read() + os.path.basename(jars[0]).encode())
+        out = os.path.join(root, f"nio-local-fs-{key.hexdigest()[:16]}")
+        if os.path.isdir(out):
+            return out
+        javac = shutil.which("javac")
+        if not javac:
+            raise OSError("no javac on PATH")
+        os.makedirs(root, exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=root)
+        try:
+            # class files any Spark 4 JVM (Java 17+) loads
+            cmd = [javac, "--release", "17", "-cp", jars[0], "-d", tmp, _LOCAL_FS_SRC]
+            subprocess.run(cmd, check=True, capture_output=True, timeout=300)
+            os.replace(tmp, out)
+        except OSError:
+            if not os.path.isdir(out):  # else a concurrent first run won
+                raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return out
+    except (OSError, subprocess.SubprocessError) as exc:
+        warnings.warn(f"stock local filesystem kept, one chmod fork per file: {exc}")
+        return None
+
+
 def _session_conf(master: str, extra_conf: dict[str, str] | None) -> dict[str, str]:
     conf = dict(_DEFAULTS, **{"spark.driver.memory": _default_driver_memory()})
-    if master == "local" or master.startswith("local["):
+    local = master == "local" or master.startswith("local[")
+    if local:
         # executors are driver threads, so a distributed listing job buys
         # no parallelism: list every partition directory on the driver
         conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(
             2**31 - 1
         )
     conf.update(extra_conf or {})
+    # without the native Hadoop library every local file and directory write
+    # forks chmod; a JVM already running cannot load the class that avoids it
+    if local and SparkContext._gateway is None and (classes := _local_fs_classes()):
+        conf.setdefault("spark.hadoop.fs.file.impl", _LOCAL_FS)
+        conf["spark.driver.extraClassPath"] = os.pathsep.join(
+            p for p in (conf.get("spark.driver.extraClassPath"), classes) if p
+        )
     return conf
 
 

@@ -23,7 +23,8 @@ def _bench_diff():
 
 
 # One synthetic (old, new) details pair per class of the ladder, at
-# threshold 0.15.  Records carry cpu_s, as bench.py writes them now.
+# threshold 0.15, and observed pairs under their entry's name.  Records
+# carry cpu_s, as bench.py writes them now.
 _LADDER = {
     "PLAN-CHANGED": ({"best": 1.0, "cpu_s": 2.0, "plan_sha": "a"},
                      {"best": 1.0, "median": 1.0, "cpu_s": 2.0, "plan_sha": "b"}),
@@ -37,14 +38,19 @@ _LADDER = {
                {"best": 0.5, "median": 0.5, "cpu_s": 1.0, "plan_sha": "a"}),
     "SLOWER": ({"best": 1.0, "cpu_s": 2.0, "plan_sha": "a"},
                {"best": 2.5, "median": 2.6, "cpu_s": 5.0, "plan_sha": "a"}),
+    # two unchanged runs: the wall rose while the CPU fell
+    "events_hourly_windows": ({"best": 0.26, "cpu_s": 0.55, "plan_sha": "a"},
+                              {"best": 0.31, "median": 0.32, "cpu_s": 0.40,
+                               "plan_sha": "a"}),
 }
+_WANT = {name: name for name in _LADDER} | {"events_hourly_windows": "HOST-DRIFT"}
 # The same pairs as artifacts written before bench.py recorded cpu_s: the
-# held-CPU rung cannot fire, so the host-drift pair reads as SLOWER.
+# CPU rung cannot fire, so the host-drift pairs read as SLOWER.
 _LADDER_NO_CPU = {
     name: tuple({k: v for k, v in rec.items() if k != "cpu_s"} for rec in pair)
     for name, pair in _LADDER.items()
 }
-_WANT_NO_CPU = {name: name for name in _LADDER} | {"HOST-DRIFT": "SLOWER"}
+_WANT_NO_CPU = _WANT | {"HOST-DRIFT": "SLOWER", "events_hourly_windows": "SLOWER"}
 
 
 class TestClassifyLadder:
@@ -53,7 +59,7 @@ class TestClassifyLadder:
 
     def test_classify_table(self):
         classify = _bench_diff().classify
-        for ladder, want in ((_LADDER, {n: n for n in _LADDER}),
+        for ladder, want in ((_LADDER, _WANT),
                              (_LADDER_NO_CPU, _WANT_NO_CPU)):
             got = {
                 name: classify(old, new, old["best"], new["best"], 0.15)
@@ -63,7 +69,7 @@ class TestClassifyLadder:
 
     def test_bench_diff_cli(self, tmp_path, monkeypatch, capsys):
         bench_diff = _bench_diff()
-        for ladder, want in ((_LADDER, {n: n for n in _LADDER}),
+        for ladder, want in ((_LADDER, _WANT),
                              (_LADDER_NO_CPU, _WANT_NO_CPU)):
             paths = []
             for side in (0, 1):

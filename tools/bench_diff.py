@@ -15,14 +15,15 @@ Classification per common query (`classify`):
                  the timing delta is attributable to the change
   steady         sha unchanged, |best wall delta| within threshold
   HOST-DRIFT     sha unchanged, best wall moved beyond threshold, but the
-                 median process-tree CPU (cpu_s) stayed within it -- the
-                 host got slower/faster (on a VM wall time follows
-                 hypervisor steal), the code did the same work.  Needs
-                 cpu_s in both files; older artifacts never take this rung
+                 median process-tree CPU (cpu_s) stayed within it or moved
+                 the other way -- the host got slower/faster (on a VM wall
+                 time follows hypervisor steal), the code did no more work
+                 in the direction the wall moved.  Needs cpu_s in both
+                 files; older artifacts never take this rung
   HOST-NOISE?    sha unchanged and the new median >> new best (a load
                  spike inside the repeat set)
   FASTER/SLOWER  sha unchanged, beyond threshold, NOT explained by a held
-                 CPU -- a genuine runtime change at constant plan
+                 or contrary CPU -- a genuine runtime change at constant plan
                  (data size, library, caching)
 
 Shas recorded before the round-4 context-free fingerprint fix are not
@@ -47,7 +48,7 @@ def classify(old: dict | None, new: dict | None, ot: float, nt: float, thr: floa
     if abs(rel) <= thr:
         return "steady"
     oc, nc = old.get("cpu_s"), new.get("cpu_s")
-    if oc and nc and abs(nc - oc) / oc <= thr:
+    if oc and nc and (abs(nc - oc) / oc <= thr or (nc - oc) * rel < 0):
         return "HOST-DRIFT"
     nb, nm = new.get("best"), new.get("median")
     if nb and nm and nm > nb * 1.8:
