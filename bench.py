@@ -19,6 +19,9 @@ name -> best seconds); a "details" map adds, per query:
             temp paths are normalised out; AQE's runtime re-plan is
             intentionally NOT captured -- the pre-execution plan is the
             stable fingerprint of what the code asked for)
+  jit_ms    milliseconds the JVM's JIT compilers spent over the timed
+            repeats (CompilationMXBean), so CPU a compiler thread spends
+            on code an earlier entry warmed reads as JIT, not as this plan
   stages    executor-side stage metrics for the final repeat (REST status
             API): run/CPU ms, input + shuffle MB, task count.  Bytes and
             task counts are repeat-invariant, so a diff can split "python
@@ -222,12 +225,20 @@ def _end_repeat(spark) -> None:
             )
 
 
+def _jit_ms(spark) -> int:
+    """Total milliseconds the driver JVM's JIT compilers have run."""
+    management = spark._jvm.java.lang.management.ManagementFactory
+    return management.getCompilationMXBean().getTotalCompilationTime()
+
+
 def _timed_record(spark, run_once, repeats: int) -> dict:
-    """Best and median wall seconds and median process-tree CPU seconds
-    over `repeats` runs; stage metrics are profiled on the last run."""
+    """Best and median wall seconds, median process-tree CPU seconds and
+    total JIT milliseconds over `repeats` runs; stage metrics are profiled
+    on the last run."""
     walls: list[float] = []
     cpus: list[float] = []
     stage_metrics = None
+    jit0 = _jit_ms(spark)
     for rep in range(repeats):
         before = _completed_stage_ids(spark) if rep == repeats - 1 else None
         cpu0, t0 = tree_cpu_s(), time.perf_counter()
@@ -241,6 +252,7 @@ def _timed_record(spark, run_once, repeats: int) -> dict:
         "best": round(min(walls), 3),
         "median": round(statistics.median(walls), 3),
         "cpu_s": round(statistics.median(cpus), 2),
+        "jit_ms": _jit_ms(spark) - jit0,
         "stages": stage_metrics,
     }
 

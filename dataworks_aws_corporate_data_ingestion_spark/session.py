@@ -66,15 +66,33 @@ def default_master() -> str:
     return f"local[{cpus}]"
 
 
-_LOCAL_FS_SRC = os.path.join(os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
+_LOCAL_FS_SRCS = [
+    os.path.join(os.path.dirname(__file__), "jvm", f)
+    for f in ("NioLocalFileSystem.java", "NioLocalFs.java")
+]
 _LOCAL_FS = "dataworks_aws_corporate_data_ingestion_spark.jvm.NioLocalFileSystem"
+_LOCAL_ABSTRACT_FS = "dataworks_aws_corporate_data_ingestion_spark.jvm.NioLocalFs"
+
+# C2 promotion thresholds ten times HotSpot's (four for the compile
+# threshold): a batch-lived JVM otherwise spends about half its CPU C2-
+# compiling the long tail of Spark, Parquet and Hadoop methods that cross
+# the stock 5,000-call mark once and never run hot; they stay in C1 code,
+# while the truly hot loops still reach C2.
+_JIT_OPTIONS = " ".join(
+    [
+        "-XX:Tier4InvocationThreshold=50000",
+        "-XX:Tier4MinInvocationThreshold=6000",
+        "-XX:Tier4CompileThreshold=60000",
+        "-XX:Tier4BackEdgeThreshold=400000",
+    ]
+)
 
 
 @functools.cache
 def _local_fs_classes() -> str | None:
-    """The class directory of jvm/NioLocalFileSystem.java, compiled by the
-    local javac at first use into a cache keyed by the source and the Hadoop
-    jar it builds against; None, with one warning, where it cannot be had."""
+    """The class directory of the jvm/ filesystems, compiled by the local
+    javac at first use into a cache keyed by the sources and the Hadoop jar
+    they build against; None, with one warning, where it cannot be had."""
     spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
     jars = glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar"))
     cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
@@ -82,8 +100,10 @@ def _local_fs_classes() -> str | None:
     try:
         if not jars:
             raise OSError(f"no hadoop-client-api jar in {spark_home}/jars")
-        with open(_LOCAL_FS_SRC, "rb") as f:
-            key = hashlib.sha256(f.read() + os.path.basename(jars[0]).encode())
+        key = hashlib.sha256(os.path.basename(jars[0]).encode())
+        for src in _LOCAL_FS_SRCS:
+            with open(src, "rb") as f:
+                key.update(f.read())
         out = os.path.join(root, f"nio-local-fs-{key.hexdigest()[:16]}")
         if os.path.isdir(out):
             return out
@@ -94,7 +114,7 @@ def _local_fs_classes() -> str | None:
         tmp = tempfile.mkdtemp(dir=root)
         try:
             # class files any Spark 4 JVM (Java 17+) loads
-            cmd = [javac, "--release", "17", "-cp", jars[0], "-d", tmp, _LOCAL_FS_SRC]
+            cmd = [javac, "--release", "17", "-cp", jars[0], "-d", tmp, *_LOCAL_FS_SRCS]
             subprocess.run(cmd, check=True, capture_output=True, timeout=300)
             os.replace(tmp, out)
         except OSError:
@@ -118,10 +138,19 @@ def _session_conf(master: str, extra_conf: dict[str, str] | None) -> dict[str, s
             2**31 - 1
         )
     conf.update(extra_conf or {})
-    # without the native Hadoop library every local file and directory write
-    # forks chmod; a JVM already running cannot load the class that avoids it
-    if local and SparkContext._gateway is None and (classes := _local_fs_classes()):
+    # JVM options and classes only reach a JVM that has not started yet
+    if not local or SparkContext._gateway is not None:
+        return conf
+    # before a caller's own options: the last of a repeated -XX flag wins, and
+    # the launcher puts every defaultJavaOptions before extraJavaOptions
+    conf["spark.driver.defaultJavaOptions"] = " ".join(
+        p for p in (_JIT_OPTIONS, conf.get("spark.driver.defaultJavaOptions")) if p
+    )
+    # without the native Hadoop library every local file and directory
+    # write forks chmod, through FileSystem and FileContext alike
+    if classes := _local_fs_classes():
         conf.setdefault("spark.hadoop.fs.file.impl", _LOCAL_FS)
+        conf.setdefault("spark.hadoop.fs.AbstractFileSystem.file.impl", _LOCAL_ABSTRACT_FS)
         conf["spark.driver.extraClassPath"] = os.pathsep.join(
             p for p in (conf.get("spark.driver.extraClassPath"), classes) if p
         )

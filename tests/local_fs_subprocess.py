@@ -1,18 +1,22 @@
 """Subprocess body for the local-filesystem spawn and mode test.
 
-Runs in its OWN interpreter because the filesystem class and the driver
-classpath are fixed when the JVM starts, and so is the PATH the JVM forks
-`chmod` from.  Usage:
+Runs in its OWN interpreter because the filesystem classes, the driver
+classpath and the JVM options are fixed when the JVM starts, and so is the
+PATH the JVM forks `chmod` from.  Usage:
 
     python tests/local_fs_subprocess.py engine|stock OUT_DIR
 
-`engine` writes through get_session's default local filesystem, `stock`
-through Hadoop's LocalFileSystem (the caller's own `fs.file.impl` wins).
-Both write the same 256-way id_part frame with sinks.writers.write_daily
-and print one JSON line: the filesystem class, the lines the `chmod`
-wrapper named by $CHMOD_LOG gained during the write, and every written
-path with its st_mode.  `engine` then sets 01777 on a scratch directory
-through the JVM's FileSystem and reports the mode it got.
+`engine` writes through get_session's default local filesystems, `stock`
+through Hadoop's LocalFileSystem and LocalFs (the caller's own
+`fs.file.impl` and `fs.AbstractFileSystem.file.impl` win).  Both write the
+same 256-way id_part frame with sinks.writers.write_daily, then run a
+trigger-once `rate` -> parquet query, whose checkpoint and sink log go
+through FileContext.  They print one JSON line: both filesystem classes,
+the lines the `chmod` wrapper named by $CHMOD_LOG gained during the write
+and during the query, every path the write left with its st_mode, and the
+JVM's input arguments.  `engine` passes its own extraJavaOptions, as a
+benchmark pointing java.io.tmpdir elsewhere does, then sets 01777 on a
+scratch directory through the JVM's FileSystem and reports the mode it got.
 """
 
 from __future__ import annotations
@@ -49,9 +53,14 @@ def main() -> int:
     }
     if side == "stock":
         conf["spark.hadoop.fs.file.impl"] = "org.apache.hadoop.fs.LocalFileSystem"
+        conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] = "org.apache.hadoop.fs.local.LocalFs"
+    else:
+        conf["spark.driver.extraJavaOptions"] = "-Dcdi.local.fs.side=engine"
     spark = get_session(app_name=f"local-fs-{side}", master="local[2]", extra_conf=conf)
     jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark._jsc.hadoopConfiguration())
+    hadoop_conf = spark._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(hadoop_conf)
+    fc = jvm.org.apache.hadoop.fs.FileContext.getLocalFSFileContext(hadoop_conf)
     frame = spark.range(2560).selectExpr(
         "id",
         "CAST(id % 256 AS INT) AS id_part",
@@ -62,12 +71,30 @@ def main() -> int:
     )
     before = _chmods()
     write_daily(frame, os.path.join(out, "daily"))
-    report = {"fs": fs.getClass().getName(), "chmods": _chmods() - before, "modes": {}}
+    report = {
+        "fs": fs.getClass().getName(),
+        "abstract_fs": fc.getDefaultFileSystem().getClass().getName(),
+        "chmods": _chmods() - before,
+        "modes": {},
+        "jvm_args": list(
+            jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+        ),
+    }
     for root, dirs, files in os.walk(out):
         for name in dirs + files:
             path = os.path.join(root, name)
             rel = _UUID.sub("<uuid>", os.path.relpath(path, out))
             report["modes"][rel] = os.stat(path).st_mode
+    before = _chmods()
+    query = (
+        spark.readStream.format("rate").option("rowsPerSecond", 10).load()
+        .writeStream.format("parquet")
+        .option("checkpointLocation", os.path.join(out, "stream", "checkpoint"))
+        .trigger(once=True)
+        .start(os.path.join(out, "stream", "sink"))
+    )
+    query.awaitTermination()
+    report["stream_chmods"] = _chmods() - before
     if side == "engine":
         shared = os.path.join(out, "shared")
         os.mkdir(shared)

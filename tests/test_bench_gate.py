@@ -101,6 +101,7 @@ class TestTimedRecord:
         )
         assert rec["cpu_s"] > 0
         assert rec["best"] <= rec["median"]
+        assert isinstance(rec["jit_ms"], int) and rec["jit_ms"] >= 0
 
 
 def _bench_imports(path: str) -> list[str]:

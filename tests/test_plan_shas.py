@@ -22,6 +22,8 @@ conftest session.
 
 from __future__ import annotations
 
+import importlib.util
+import json
 import os
 import subprocess
 import sys
@@ -29,6 +31,42 @@ import sys
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_check_exports_the_checkout_to_python_workers(monkeypatch, tmp_path, capsys):
+    """The Spark Python workers of a --check run from outside the checkout
+    must import the package: they see PYTHONPATH, not the tool's sys.path.
+    The session and the plan fingerprints are stubbed; only the tool's own
+    set-up runs."""
+    spec = importlib.util.spec_from_file_location(
+        "pin_plan_shas", os.path.join(REPO, "tools", "pin_plan_shas.py")
+    )
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    with open(tool.PIN_PATH) as f:
+        pinned = json.load(f)["plan_shas"]
+    seen = {}
+
+    class _Session:
+        sparkContext = type("Ctx", (), {"setLogLevel": lambda self, level: None})()
+
+        def stop(self):
+            pass
+
+    def fake_get_session(**kwargs):
+        seen["pythonpath"] = os.environ.get("PYTHONPATH", "")
+        return _Session()
+
+    from dataworks_aws_corporate_data_ingestion_spark import session
+
+    monkeypatch.setattr(session, "get_session", fake_get_session)
+    monkeypatch.setattr(tool, "compute_plan_shas", lambda spark, sf_dir: dict(pinned))
+    monkeypatch.setenv("PYTHONPATH", "/elsewhere")
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(sys, "argv", ["pin_plan_shas.py", "--check"])
+    assert tool.main() == 0
+    assert "PLAN_PIN_OK" in capsys.readouterr().out
+    assert seen["pythonpath"].split(os.pathsep) == [REPO, "/elsewhere"]
 
 
 @pytest.mark.slow

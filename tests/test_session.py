@@ -56,7 +56,10 @@ class TestPartitionListing:
 
 
 _FS_IMPL = "spark.hadoop.fs.file.impl"
+_ABSTRACT_FS_IMPL = "spark.hadoop.fs.AbstractFileSystem.file.impl"
 _CLASSPATH = "spark.driver.extraClassPath"
+_DEFAULT_OPTS = "spark.driver.defaultJavaOptions"
+_EXTRA_OPTS = "spark.driver.extraJavaOptions"
 
 
 @pytest.fixture
@@ -75,13 +78,14 @@ class TestLocalFileSystemConf:
         monkeypatch.setattr(session, "_local_fs_classes", lambda: "/cache/fs")
         conf = session._session_conf("local[4]", None)
         assert conf[_FS_IMPL] == session._LOCAL_FS
+        assert conf[_ABSTRACT_FS_IMPL] == session._LOCAL_ABSTRACT_FS
         assert conf[_CLASSPATH] == "/cache/fs"
 
     def test_other_masters_get_neither_key(self, fresh_jvm, monkeypatch):
         monkeypatch.setattr(session, "_local_fs_classes", lambda: "/cache/fs")
         for master in ("yarn", "spark://host:7077", "local-cluster[2,1,1024]"):
             conf = session._session_conf(master, None)
-            assert _FS_IMPL not in conf and _CLASSPATH not in conf
+            assert not {_FS_IMPL, _ABSTRACT_FS_IMPL, _CLASSPATH} & set(conf)
 
     def test_no_javac_keeps_the_stock_fs_and_warns_once(
         self, fresh_jvm, monkeypatch, tmp_path
@@ -92,7 +96,7 @@ class TestLocalFileSystemConf:
             warnings.simplefilter("always")
             confs = [session._session_conf("local[4]", None) for _ in range(2)]
         for conf in confs:
-            assert _FS_IMPL not in conf and _CLASSPATH not in conf
+            assert not {_FS_IMPL, _ABSTRACT_FS_IMPL, _CLASSPATH} & set(conf)
         assert [str(w.message) for w in caught] == [
             "stock local filesystem kept, one chmod fork per file: no javac on PATH"
         ]
@@ -106,14 +110,48 @@ class TestLocalFileSystemConf:
         monkeypatch.setattr(session, "_local_fs_classes", lambda: "/cache/fs")
         assert SparkContext._gateway is not None
         conf = session._session_conf("local[4]", None)
-        assert _FS_IMPL not in conf and _CLASSPATH not in conf
+        assert not {_FS_IMPL, _ABSTRACT_FS_IMPL, _CLASSPATH} & set(conf)
+
+
+class TestJvmOptions:
+    @pytest.fixture
+    def no_jvm(self, monkeypatch):
+        monkeypatch.setattr(SparkContext, "_gateway", None)
+        monkeypatch.setattr(session, "_local_fs_classes", lambda: None)
+
+    def test_local_masters_get_the_jit_options(self, no_jvm):
+        for master in ("local", "local[4]", "local[*]"):
+            opts = session._session_conf(master, None)[_DEFAULT_OPTS].split()
+            assert opts == session._JIT_OPTIONS.split()
+            assert all(o.startswith("-XX:Tier4") for o in opts)
+
+    def test_other_masters_get_none(self, no_jvm):
+        for master in ("yarn", "spark://host:7077", "local-cluster[2,1,1024]"):
+            assert _DEFAULT_OPTS not in session._session_conf(master, None)
+
+    def test_callers_default_options_are_joined_not_replaced(self, no_jvm):
+        conf = session._session_conf("local[4]", {_DEFAULT_OPTS: "-Xss4m"})
+        # the caller's come last, so a flag it repeats overrides the engine's
+        assert conf[_DEFAULT_OPTS] == f"{session._JIT_OPTIONS} -Xss4m"
+
+    def test_callers_extra_options_are_left_untouched(self, no_jvm):
+        conf = session._session_conf("local[4]", {_EXTRA_OPTS: "-Djava.io.tmpdir=/t"})
+        assert conf[_EXTRA_OPTS] == "-Djava.io.tmpdir=/t"
+        assert conf[_DEFAULT_OPTS] == session._JIT_OPTIONS
+
+    def test_a_running_jvm_gets_none(self, spark):
+        assert SparkContext._gateway is not None
+        conf = session._session_conf("local[4]", {_DEFAULT_OPTS: "-Xss4m"})
+        assert conf[_DEFAULT_OPTS] == "-Xss4m"
 
 
 @pytest.mark.skipif(shutil.which("javac") is None, reason="no javac: the stock FS is used")
 def test_local_writes_fork_no_chmod_and_keep_stock_modes(tmp_path):
     """A 256-way write_daily through get_session's filesystem forks no
     chmod and leaves the same files, .crc included, with the same modes as
-    Hadoop's stock LocalFileSystem; a sticky mode is kept."""
+    Hadoop's stock LocalFileSystem; a sticky mode is kept.  A streaming
+    query's FileContext writes fork none either, and the JVM started with
+    a caller's extraJavaOptions holds the engine's JIT options too."""
     real_chmod = shutil.which("chmod")
     bin_dir = tmp_path / "bin"
     bin_dir.mkdir()
@@ -141,8 +179,14 @@ def test_local_writes_fork_no_chmod_and_keep_stock_modes(tmp_path):
     engine, stock = reports["engine"], reports["stock"]
     assert engine["fs"] == session._LOCAL_FS
     assert stock["fs"] == "org.apache.hadoop.fs.LocalFileSystem"
+    assert engine["abstract_fs"] == session._LOCAL_ABSTRACT_FS
+    assert stock["abstract_fs"] == "org.apache.hadoop.fs.local.LocalFs"
     assert engine["chmods"] == 0
     assert stock["chmods"] > 256  # the wrapper sees the stock FS's forks
+    assert engine["stream_chmods"] == 0
+    assert stock["stream_chmods"] > 0
+    assert set(session._JIT_OPTIONS.split()) <= set(engine["jvm_args"])
+    assert "-Dcdi.local.fs.side=engine" in engine["jvm_args"]
     assert engine["modes"] == stock["modes"]
     modes = engine["modes"]
     dirs = [p for p, m in modes.items() if stat.S_ISDIR(m)]

@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """Time ONE registry query: best-of-N wall clock, median process-tree
-CPU, plan_sha and stage metrics, as a single JSON line.  The timing loop
-and plan fingerprint are bench.py's own (one definition), taken from the
-checkout this file sits in -- so for an interleaved A/B, run each
-checkout's own copy.
+CPU, JIT milliseconds, plan_sha and stage metrics, as a single JSON
+line.  The timing loop and plan fingerprint are bench.py's own (one
+definition), taken from the checkout this file sits in -- so for an
+interleaved A/B, run each checkout's own copy.
 
 Usage: python tools/bench_one.py QUERY_NAME [SF_DIR] [REPEATS]
 """

@@ -12,6 +12,9 @@ either intended (re-run this tool, commit the new table alongside the
 change) or fixed.
 
 Usage: python tools/pin_plan_shas.py [--sf-dir /root/testdata/sf0.1]
+
+Runs from any working directory: the checkout goes on PYTHONPATH too, so
+the Spark Python workers the benched UDFs start can import the package.
 """
 
 from __future__ import annotations
@@ -90,6 +93,10 @@ def main() -> int:
 
     from dataworks_aws_corporate_data_ingestion_spark.session import get_session
 
+    # Python workers inherit the environment, not this process's sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [REPO] + [p for p in [os.environ.get("PYTHONPATH")] if p]
+    )
     spark = get_session(app_name="cdi-plan-pin")
     spark.sparkContext.setLogLevel("ERROR")
     shas = compute_plan_shas(spark, sf_dir)
