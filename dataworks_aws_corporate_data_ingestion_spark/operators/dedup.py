@@ -379,20 +379,9 @@ def materialize_minhash_index(
     spark.sql(
         f"ALTER TABLE {prefix}_buckets SET TBLPROPERTIES ("
         f"'minhash.k'='{k}', 'minhash.bands'='{bands}', "
-        f"'minhash.rows'='{rows}', 'minhash.n_buckets'='{n_buckets}')"
+        f"'minhash.rows'='{rows}')"
     )
     return stored, spark.table(f"{prefix}_buckets")
-
-
-def _table_bucket_count(spark, table: str) -> int | None:
-    """Num Buckets of an existing bucketed table, from the catalog."""
-    try:
-        for row in spark.sql(f"DESCRIBE TABLE FORMATTED {table}").collect():
-            if row.col_name.strip() == "Num Buckets":
-                return int(row.data_type)
-    except Exception:
-        pass
-    return None
 
 
 _MINHASH_DEFAULTS = {"k": 3, "bands": 16, "rows": 4}
@@ -400,12 +389,13 @@ _MINHASH_DEFAULTS = {"k": 3, "bands": 16, "rows": 4}
 
 def index_params(
     spark, prefix: str, k: int | None, bands: int | None, rows: int | None
-) -> tuple[int, int, int, int]:
-    """Resolve (k, bands, rows, n_buckets) for an existing index: table
-    properties written at materialize time are authoritative; explicit
-    caller values that disagree raise instead of silently destroying
-    recall.  Pre-properties tables (or external catalogs that drop them)
-    fall back to DESCRIBE for n_buckets and the module defaults."""
+) -> tuple[int, int, int]:
+    """Resolve (k, bands, rows) for an existing index: table properties
+    written at materialize time are authoritative; explicit caller
+    values that disagree raise instead of silently destroying recall.
+    Pre-properties tables (or external catalogs that drop them) fall
+    back to the module defaults.  The bucket spec needs no resolving:
+    appends take it from the catalog (sinks.bucketing.insert_into)."""
     props: dict[str, str] = {}
     try:
         props = {
@@ -414,40 +404,20 @@ def index_params(
         }
     except Exception:
         pass
-    stored = (
-        {
-            "k": int(props["minhash.k"]),
-            "bands": int(props["minhash.bands"]),
-            "rows": int(props["minhash.rows"]),
-            "n_buckets": int(props["minhash.n_buckets"]),
-        }
-        if "minhash.k" in props
-        else None
-    )
-    resolved = {}
+    resolved = []
     for name, given in (("k", k), ("bands", bands), ("rows", rows)):
-        if stored is not None:
-            if given is not None and given != stored[name]:
-                raise ValueError(
-                    f"minhash index {prefix!r} was built with {name}="
-                    f"{stored[name]}, caller passed {name}={given}; "
-                    "mismatched parameters silently destroy recall"
-                )
-            resolved[name] = stored[name]
-        else:
-            resolved[name] = given if given is not None else _MINHASH_DEFAULTS[name]
-    n_buckets = (
-        stored["n_buckets"]
-        if stored is not None
-        else _table_bucket_count(spark, f"{prefix}_buckets")
-    )
-    if n_buckets is None:
-        raise ValueError(
-            f"cannot determine bucket count for {prefix}_buckets: no "
-            "minhash table properties and DESCRIBE gave no Num Buckets; "
-            "rebuild the index with materialize_minhash_index"
-        )
-    return resolved["k"], resolved["bands"], resolved["rows"], n_buckets
+        if "minhash.k" not in props:
+            resolved.append(given if given is not None else _MINHASH_DEFAULTS[name])
+            continue
+        stored = int(props[f"minhash.{name}"])
+        if given is not None and given != stored:
+            raise ValueError(
+                f"minhash index {prefix!r} was built with {name}="
+                f"{stored}, caller passed {name}={given}; "
+                "mismatched parameters silently destroy recall"
+            )
+        resolved.append(stored)
+    return tuple(resolved)
 
 
 def append_to_minhash_index(
@@ -462,27 +432,26 @@ def append_to_minhash_index(
 ) -> None:
     """Admit new docs into a materialised minhash index: append their
     shingle rows and band-bucket rows to the existing tables.  The
-    minhash parameters and bucketBy spec come from the index's OWN table
-    properties (see index_params; explicit mismatching arguments raise),
-    so new files land bucketed identically and later candidate joins keep
-    the delta-side-only exchange.  Caller is responsible for having
-    deduped `docs` first (admission order: check, then append)."""
-    k, bands, rows, n_buckets = index_params(spark, prefix, k, bands, rows)
+    minhash parameters come from the index's OWN table properties (see
+    index_params; explicit mismatching arguments raise) and the bucket
+    spec from the catalog (insert_into), so new files land bucketed
+    identically and later candidate joins keep the delta-side-only
+    exchange.  A missing index raises before anything is written.
+    Caller is responsible for having deduped `docs` first (admission
+    order: check, then append)."""
+    from ..sinks.bucketing import insert_into
+
+    k, bands, rows = index_params(spark, prefix, k, bands, rows)
     sh = fan_out(docs).select(
         F.col(id_col), word_shingles(F.col(text_col), k).alias("shingles")
     )
-    sh.write.mode("append").saveAsTable(f"{prefix}_shingles")
+    insert_into(sh, f"{prefix}_shingles")
     # buckets derive from the SAME frame we just appended (recomputing
     # from the table would re-shingle the whole corpus)
     buckets = lsh_band_buckets(
         minhash_signatures(sh), id_col=id_col, bands=bands, rows=rows
     )
-    (
-        buckets.write.mode("append")
-        .bucketBy(n_buckets, "band_id", "band_hash")
-        .sortBy("band_id", "band_hash")
-        .saveAsTable(f"{prefix}_buckets")
-    )
+    insert_into(buckets, f"{prefix}_buckets")
 
 
 def near_dup_pairs_against_index(
@@ -502,7 +471,7 @@ def near_dup_pairs_against_index(
     Output matches near_dup_pairs_minhash_incremental bit-for-bit.
     Minhash parameters resolve from the index's table properties;
     explicit mismatching arguments raise (see index_params)."""
-    k, bands, rows, _ = index_params(spark, prefix, k, bands, rows)
+    k, bands, rows = index_params(spark, prefix, k, bands, rows)
     delta_sh = tracked_persist(
         fan_out(delta).select(
             F.col(id_col), word_shingles(F.col(text_col), k).alias("shingles")

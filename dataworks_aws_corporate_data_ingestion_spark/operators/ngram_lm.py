@@ -202,10 +202,6 @@ def materialize_bigram_lm(
     unigrams, bigram_counts = train_bigram_lm(docs, text_col)
     write_bucketed(unigrams, f"{prefix}_uni", ["w1"], n_buckets)
     write_bucketed(bigram_counts, f"{prefix}_bi", ["w1"], n_buckets)
-    spark.sql(
-        f"ALTER TABLE {prefix}_uni SET TBLPROPERTIES"
-        f" ('lm.n_buckets'='{n_buckets}')"
-    )
     return spark.table(f"{prefix}_uni"), spark.table(f"{prefix}_bi")
 
 
@@ -218,7 +214,10 @@ def append_to_bigram_lm(
     delta against the stored tables equals retraining from scratch on
     corpus + delta, bit for bit (certified by `bigram_lm_incremental`).
     Frames read from tables being overwritten are pinned with eager
-    localCheckpoints (same discipline as append_to_search_index)."""
+    localCheckpoints (same discipline as append_to_search_index); the
+    overwrites keep the catalog's bucket spec (insert_into)."""
+    from ..sinks.bucketing import insert_into
+
     d_uni, d_bi = train_bigram_lm(delta, text_col)
     merged_uni = (
         spark.table(f"{prefix}_uni")
@@ -234,25 +233,5 @@ def append_to_bigram_lm(
         .agg(F.sum("c12").alias("c12"))
         .localCheckpoint(eager=True)
     )
-    n_buckets = 16
-    try:
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(
-                f"SHOW TBLPROPERTIES {prefix}_uni"
-            ).collect()
-        }
-        n_buckets = int(props.get("lm.n_buckets", n_buckets))
-    except Exception:
-        pass
-    for name, frame in ((f"{prefix}_uni", merged_uni), (f"{prefix}_bi", merged_bi)):
-        (
-            frame.write.mode("overwrite")
-            .bucketBy(n_buckets, "w1")
-            .sortBy("w1")
-            .saveAsTable(name)
-        )
-    spark.sql(
-        f"ALTER TABLE {prefix}_uni SET TBLPROPERTIES"
-        f" ('lm.n_buckets'='{n_buckets}')"
-    )
+    insert_into(merged_uni, f"{prefix}_uni", overwrite=True)
+    insert_into(merged_bi, f"{prefix}_bi", overwrite=True)

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import fan_out
+from ..sinks.bucketing import insert_into
 
 K1 = 1.2
 B = 0.75
@@ -118,13 +119,6 @@ def materialize_search_index(
 
     postings = build_postings(docs, id_col=id_col, text_col=text_col)
     write_bucketed(postings, f"{prefix}_postings", ["term"], n_buckets)
-    # pin the layout on the table so the append path can re-declare the
-    # same bucket spec without the caller carrying it (cf. the minhash
-    # index's parameter pinning, operators/dedup.py)
-    spark.sql(
-        f"ALTER TABLE {prefix}_postings SET TBLPROPERTIES"
-        f" ('bm25.n_buckets'='{n_buckets}')"
-    )
     indexed = spark.table(f"{prefix}_postings")
     # dims derive from the materialised postings (not the source corpus):
     # one bucketed-scan pass, and bit-identical to what searches will read
@@ -135,27 +129,6 @@ def materialize_search_index(
         indexed,
         spark.table(f"{prefix}_dfs"),
         spark.table(f"{prefix}_stats"),
-    )
-
-
-def _index_bucket_count(spark, prefix: str) -> int:
-    try:
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(f"SHOW TBLPROPERTIES {prefix}_postings").collect()
-        }
-        if "bm25.n_buckets" in props:
-            return int(props["bm25.n_buckets"])
-        for row in spark.sql(
-            f"DESCRIBE TABLE FORMATTED {prefix}_postings"
-        ).collect():
-            if row.col_name.strip() == "Num Buckets":
-                return int(row.data_type)
-    except Exception:
-        pass
-    raise ValueError(
-        f"cannot determine bucket count for {prefix}_postings; rebuild the"
-        " index with materialize_search_index"
     )
 
 
@@ -171,9 +144,10 @@ def append_to_search_index(
     (operators/dedup.py::append_to_minhash_index):
 
       * delta postings append to `{prefix}_postings` under the table's
-        own bucketBy(term) spec (read from its properties), so new files
-        land bucketed and repeat searches keep the exchange-free
-        postings side;
+        own bucket spec (insert_into takes it from the catalog), so new
+        files land bucketed and repeat searches keep the exchange-free
+        postings side; a missing index raises before anything is
+        written;
       * `{prefix}_dfs` becomes old + delta document frequencies -- a
         vocabulary-sized merge, never a corpus scan;
       * `{prefix}_stats` adds the delta's (n_docs, sum_dl) to the stored
@@ -186,16 +160,10 @@ def append_to_search_index(
     appending an existing doc double-counts its df/tf).  Cost scales
     with the delta: the corpus-sized postings table is written to, never
     read."""
-    n_buckets = _index_bucket_count(spark, prefix)
     delta = build_postings(docs, id_col=id_col, text_col=text_col).localCheckpoint(
         eager=True
     )
-    (
-        delta.write.mode("append")
-        .bucketBy(n_buckets, "term")
-        .sortBy("term")
-        .saveAsTable(f"{prefix}_postings")
-    )
+    insert_into(delta, f"{prefix}_postings")
     merged_dfs = (
         spark.table(f"{prefix}_dfs")
         .unionByName(term_stats(delta))
@@ -475,23 +443,13 @@ def compact_search_index(spark, prefix: str) -> None:
     tomb = _tombstone_table(prefix)
     if not spark.catalog.tableExists(tomb):
         return
-    n_buckets = _index_bucket_count(spark, prefix)
     ids = spark.table(tomb).select("doc_id").distinct()
     live = (
         spark.table(f"{prefix}_postings")
         .join(F.broadcast(ids), "doc_id", "left_anti")
         .localCheckpoint(eager=True)
     )
-    (
-        live.write.mode("overwrite")
-        .bucketBy(n_buckets, "term")
-        .sortBy("term")
-        .saveAsTable(f"{prefix}_postings")
-    )
-    spark.sql(
-        f"ALTER TABLE {prefix}_postings SET TBLPROPERTIES"
-        f" ('bm25.n_buckets'='{n_buckets}')"
-    )
+    insert_into(live, f"{prefix}_postings", overwrite=True)
     stored = spark.table(f"{prefix}_postings")
     for suffix, frame in (
         ("dfs", term_stats(stored)),

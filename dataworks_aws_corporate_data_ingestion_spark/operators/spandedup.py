@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
 from ..partitioning import fan_out
+from ..sinks.bucketing import insert_into, write_bucketed
 
 N_GRAM = 8
 MIN_DOCS = 2
@@ -389,23 +390,14 @@ def materialize_gram_index(
         .groupBy("gram_key")
         .agg(F.countDistinct("doc_id").alias("doc_freq"))
     )
-    name = f"{prefix}_grams"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    (
-        counts.write.bucketBy(n_buckets, "gram_key")
-        .sortBy("gram_key")
-        .format("parquet")
-        .mode("overwrite")
-        .saveAsTable(name)
-    )
-    return spark.table(name)
+    write_bucketed(counts, f"{prefix}_grams", ["gram_key"], n_buckets)
+    return spark.table(f"{prefix}_grams")
 
 
 def append_to_gram_index(
     spark,
     delta: DataFrame,
     prefix: str,
-    n_buckets: int = 32,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = N_GRAM,
@@ -414,7 +406,9 @@ def append_to_gram_index(
     distinct-doc counts over DISJOINT doc sets, so the merge is a
     bucket-local sum -- append-then-merge is bit-identical to a full
     rebuild over corpus+delta (asserted in tests, the bm25 append
-    contract)."""
+    contract).  The merged frame is pinned and overwrites the index in
+    place, keeping the catalog's bucket spec (insert_into): the index
+    table exists throughout."""
     name = f"{prefix}_grams"
     existing = spark.table(name)
     delta_counts = (
@@ -426,16 +420,7 @@ def append_to_gram_index(
         existing.unionByName(delta_counts)
         .groupBy("gram_key")
         .agg(F.sum("doc_freq").alias("doc_freq"))
+        .localCheckpoint(eager=True)
     )
-    tmp = f"{prefix}_grams_tmp"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    (
-        merged.write.bucketBy(n_buckets, "gram_key")
-        .sortBy("gram_key")
-        .format("parquet")
-        .mode("overwrite")
-        .saveAsTable(tmp)
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {name}")
+    insert_into(merged, name, overwrite=True)
     return spark.table(name)

@@ -13,6 +13,9 @@ Bucket counts should be sized so one bucket ~ one task's worth of data
 at the target scale (128-512 MB); both join sides must use the SAME
 count (or a multiple, letting Spark coalesce buckets).  sortBy within
 buckets additionally removes the join's per-partition sort.
+
+write_bucketed creates a bucketed table; every later write to it goes
+through insert_into, which takes the bucket spec from the catalog.
 """
 
 from __future__ import annotations
@@ -97,6 +100,22 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(*bucket_cols)
     writer.saveAsTable(table)
+
+
+def insert_into(df: DataFrame, table: str, overwrite: bool = False) -> None:
+    """Append df to (or overwrite) the EXISTING table `table`.  The one
+    write path for tables that already exist: insertInto takes the
+    bucket and sort spec from the catalog, so no caller re-declares or
+    looks up a bucket count (a saveAsTable append must repeat bucketBy
+    exactly, and raises "Specified bucketing does not match" otherwise).
+
+    insertInto matches columns by POSITION -- two same-typed columns
+    in another order would land swapped without an error -- so the
+    frame is selected by the table's column names first.  An overwrite
+    whose frame reads the table itself must be pinned before the call
+    (eager localCheckpoint)."""
+    columns = df.sparkSession.table(table).columns
+    df.select(*columns).write.insertInto(table, overwrite=overwrite)
 
 
 def bucketed_join(

@@ -58,6 +58,7 @@ from ..operators.bloomjoin import (
     materialize_bloom_index,
 )
 from .admission import (
+    append_state,
     batch_content_token,
     init_state_tables,
     refresh_state_tables,
@@ -123,10 +124,8 @@ def admit_dedup_batch(
         spark, admitted.select(F.col(fp_col).alias("fp")), "fp", prefix
     )
     if not token_committed(spark, f"{prefix}_fps", token):
-        admitted.select(
-            F.col(fp_col).alias("fp"), F.lit(token).alias("batch_token")
-        ).write.mode("append").format("parquet").saveAsTable(
-            f"{prefix}_fps"
+        append_state(
+            f"{prefix}_fps", admitted.select(F.col(fp_col).alias("fp")), token
         )
     refresh_state_tables(spark, f"{prefix}_fps", f"{prefix}_bloom")
     return admitted

@@ -42,12 +42,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import release_tracked
 from ..operators.dedup import (
     append_to_minhash_index,
     near_dup_pairs_against_index,
 )
-from .admission import refresh_state_tables
+from .admission import batch_writer, refresh_state_tables
 
 
 def admit_batch(
@@ -120,21 +119,12 @@ def dedup_admission_applier(
     write survivors to `{admitted_dir}/batch_id=N` (parquet, overwrite --
     a replayed batch converges instead of appending duplicates).  Each
     batch drains the tracked-persist registry it registered (delta
-    shingles/buckets inside near_dup_pairs_against_index); without the
-    drain a long-running stream accumulates leaked cached blocks."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            admitted = admit_batch(
-                spark, batch_df, prefix, id_col=id_col, text_col=text_col,
-                threshold=threshold,
-            )
-            admitted.write.mode("overwrite").parquet(
-                f"{admitted_dir}/batch_id={batch_id}"
-            )
-        finally:
-            # safe here: the write action above has completed (or failed);
-            # nothing downstream re-reads the batch's tracked frames
-            release_tracked()
-
-    return _apply
+    shingles/buckets inside near_dup_pairs_against_index), see
+    admission.batch_writer."""
+    return batch_writer(
+        lambda batch_df, _: admit_batch(
+            spark, batch_df, prefix, id_col=id_col, text_col=text_col,
+            threshold=threshold,
+        ),
+        admitted_dir,
+    )

@@ -4,8 +4,8 @@ the post-admission model.
 
 The streaming twin of the batch incremental LM maintenance
 (operators/ngram_lm.py::append_to_bigram_lm, certified append==retrain
-by the `bigram_lm_incremental` oracle), with the same catalog-as-state
-design as span_admission.py: cross-batch state is three tables --
+by the `bigram_lm_incremental` oracle), on admission.py's table layer
+like span_admission.py: cross-batch state is three tables --
 
   {prefix}_uni     (w1, c1, batch_token) partial unigram counts,
                    bucketed by w1; the LOGICAL count is SUM(c1) per
@@ -25,7 +25,7 @@ first attempt, so the (deterministic) scoring pass converges too.
 Crash atomicity (three appends cannot be one transaction): each batch
 derives a deterministic ``batch_token`` (foreachBatch's batch_id, else
 a content hash of the batch's doc-id set -- identical on replay) and
-BOTH count tables carry it.  A parquet saveAsTable append is job-atomic
+BOTH count tables carry it.  A parquet insertInto append is job-atomic
 (the committer publishes all files or none), so a token's presence in a
 count table is a per-table commit marker.  Appends run uni -> bi ->
 ledger; on replay each count table is appended ONLY if it lacks the
@@ -35,6 +35,8 @@ therefore heals without double-counting:
   crash before any append   -> replays as a plain fresh batch
   crash after uni only      -> replay appends bi + ledger
   crash after uni + bi      -> replay appends only the ledger
+
+A fully replayed batch (no fresh docs) appends nothing at all.
 
 Unlike span admission there is no subtraction step: scoring is defined
 against the post-admission model (the batch's own counts ALWAYS
@@ -46,9 +48,9 @@ Scale notes: per batch the exchanges are batch-sized (the batch's
 token/bigram keys grouped, then joined against the w1-bucketed model
 layout); the model grows by O(batch new vocabulary) rows per batch and
 stays vocabulary-sized -- megabytes against a 100 TB corpus -- while
-the corpus itself is never re-read.  Periodic compaction = re-grouping
-the partials over the same bucketed layout (only safe when no batches
-are in flight, or it must preserve the distinct batch_token set).
+the corpus itself is never re-read.  Periodic compaction
+(compact_lm_index) re-groups the partials over the same bucketed
+layout and keeps the distinct batch_token set.
 """
 
 from __future__ import annotations
@@ -56,16 +58,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import release_tracked
 from ..operators.ngram_lm import (
     score_documents_against_lm,
     train_bigram_lm,
 )
 from .admission import (
-    batch_content_token,
+    append_state,
+    batch_writer,
+    compact_counts,
+    init_state_tables,
+    probe_tokens,
+    read_counts,
     refresh_state_tables,
-    token_committed as _token_committed,
+    stream_token,
+    unledgered,
 )
+
+# (table suffix, count keys, counter) of the two count tables; the
+# first key is NULL exactly on compaction's marker rows
+_COUNTS = (("uni", ("w1",), "c1"), ("bi", ("w1", "w2"), "c12"))
 
 
 def init_lm_index(
@@ -74,39 +85,15 @@ def init_lm_index(
     """Create the (empty) count tables and admitted-doc ledger.
     Idempotent across sessions sharing a warehouse dir (orphaned
     leftover locations are cleared like write_bucketed does)."""
-    from ..sinks.bucketing import _clear_orphan_location
-
-    for name in (f"{prefix}_uni", f"{prefix}_bi", f"{prefix}_lmdocs"):
-        _clear_orphan_location(spark, name)
-    empty_uni = spark.createDataFrame(
-        [], "w1 string, c1 long, batch_token long"
+    init_state_tables(
+        spark,
+        {
+            f"{prefix}_uni": "w1 string, c1 long, batch_token long",
+            f"{prefix}_bi": "w1 string, w2 string, c12 long, batch_token long",
+            f"{prefix}_lmdocs": "doc_id long",
+        },
+        {f"{prefix}_uni": ("w1", n_buckets), f"{prefix}_bi": ("w1", n_buckets)},
     )
-    (
-        empty_uni.write.bucketBy(n_buckets, "w1")
-        .sortBy("w1")
-        .format("parquet")
-        .saveAsTable(f"{prefix}_uni")
-    )
-    empty_bi = spark.createDataFrame(
-        [], "w1 string, w2 string, c12 long, batch_token long"
-    )
-    (
-        empty_bi.write.bucketBy(n_buckets, "w1")
-        .sortBy("w1")
-        .format("parquet")
-        .saveAsTable(f"{prefix}_bi")
-    )
-    spark.createDataFrame([], "doc_id long").write.format(
-        "parquet"
-    ).saveAsTable(f"{prefix}_lmdocs")
-
-
-def _n_buckets(spark: SparkSession, prefix: str) -> int:
-    """Bucket count of the existing model tables (appends must match)."""
-    for row in spark.sql(f"DESCRIBE EXTENDED {prefix}_uni").collect():
-        if row.col_name == "Num Buckets":
-            return int(row.data_type)
-    return 16
 
 
 def read_lm_counts(
@@ -114,67 +101,24 @@ def read_lm_counts(
 ) -> tuple[DataFrame, DataFrame]:
     """Logical (unigrams(w1, c1), bigram_counts(w1, w2, c12)) views
     over the append-only partial counts."""
-    uni = (
-        spark.table(f"{prefix}_uni")
-        .filter(F.col("w1").isNotNull())
-        .groupBy("w1")
-        .agg(F.sum("c1").alias("c1"))
-    )
-    bi = (
-        spark.table(f"{prefix}_bi")
-        .filter(F.col("w1").isNotNull())
-        .groupBy("w1", "w2")
-        .agg(F.sum("c12").alias("c12"))
+    uni, bi = (
+        read_counts(spark, f"{prefix}_{suffix}", keys, cnt, "w1")
+        for suffix, keys, cnt in _COUNTS
     )
     return uni, bi
 
 
 def compact_lm_index(spark: SparkSession, prefix: str) -> dict:
-    """Fold the append-only count partials into one row per key.  The
-    distinct batch_token set MUST survive compaction in EACH table --
-    tokens are the per-table commit markers that make replayed/crashed
-    batches heal instead of double-counting -- so each token is
-    retained as a marker row (w1 NULL, zero count; a split() token is
-    never NULL, and read_lm_counts filters the markers out).  Only safe
-    when no batches are in flight (caller contract).  Returns
+    """Fold the append-only count partials into one row per key,
+    keeping EACH table's batch_token markers as marker rows (w1 NULL,
+    zero count; a split() token is never NULL).  Only safe when no
+    batches are in flight (caller contract).  Returns
     {'rows_before', 'rows_after'} summed over both tables."""
-    n_buckets = _n_buckets(spark, prefix)
-    rows_before = rows_after = 0
-    for name, keys, cnt in (
-        (f"{prefix}_uni", ["w1"], "c1"),
-        (f"{prefix}_bi", ["w1", "w2"], "c12"),
-    ):
-        t = spark.table(name)
-        rows_before += t.count()
-        folded = (
-            t.filter(F.col("w1").isNotNull())
-            .groupBy(*keys)
-            .agg(F.sum(cnt).alias(cnt))
-            .withColumn("batch_token", F.lit(None).cast("long"))
-        )
-        markers = (
-            t.select("batch_token")
-            .filter(F.col("batch_token").isNotNull())
-            .distinct()
-        )
-        for k in keys:
-            markers = markers.withColumn(k, F.lit(None).cast("string"))
-        markers = markers.withColumn(cnt, F.lit(0).cast("long")).select(
-            *keys, cnt, "batch_token"
-        )
-        compacted = folded.unionByName(markers).localCheckpoint(
-            eager=True
-        )
-        (
-            compacted.write.mode("overwrite")
-            .bucketBy(n_buckets, "w1")
-            .sortBy("w1")
-            .format("parquet")
-            .saveAsTable(name)
-        )
-        rows_after += compacted.count()
-    refresh_state_tables(spark, f"{prefix}_uni", f"{prefix}_bi")
-    return {"rows_before": rows_before, "rows_after": rows_after}
+    before = after = 0
+    for suffix, keys, cnt in _COUNTS:
+        b, a = compact_counts(spark, f"{prefix}_{suffix}", keys, cnt, "w1")
+        before, after = before + b, after + a
+    return {"rows_before": before, "rows_after": after}
 
 
 def admit_lm_batch(
@@ -191,52 +135,27 @@ def admit_lm_batch(
     post-admission model.  Replay-stable: a replayed batch appends
     nothing and rescoring the unchanged model reproduces the output
     bit-for-bit."""
-    state_tables = (f"{prefix}_uni", f"{prefix}_bi", f"{prefix}_lmdocs")
-    refresh_state_tables(spark, *state_tables)
-    if batch_token is None:
-        batch_token = batch_content_token(batch_df, id_col=id_col)
-    admitted_ids = spark.table(f"{prefix}_lmdocs").select("doc_id")
-    # pin fresh before the ledger (a table this function appends to)
-    # is touched -- same discipline as span_admission / search-index
-    # appends
-    fresh = batch_df.join(
-        admitted_ids,
-        batch_df[id_col] == admitted_ids["doc_id"],
-        "left_anti",
-    ).localCheckpoint(eager=True)
-
-    if fresh.limit(1).count() > 0:
-        d_uni, d_bi = train_bigram_lm(fresh, text_col)
-        n_buckets = _n_buckets(spark, prefix)
-        if not _token_committed(spark, f"{prefix}_uni", batch_token):
-            (
-                d_uni.withColumn("batch_token", F.lit(batch_token))
-                .write.mode("append")
-                .bucketBy(n_buckets, "w1")
-                .sortBy("w1")
-                .format("parquet")
-                .saveAsTable(f"{prefix}_uni")
-            )
-        if not _token_committed(spark, f"{prefix}_bi", batch_token):
-            (
-                d_bi.withColumn("batch_token", F.lit(batch_token))
-                .write.mode("append")
-                .bucketBy(n_buckets, "w1")
-                .sortBy("w1")
-                .format("parquet")
-                .saveAsTable(f"{prefix}_bi")
-            )
-        fresh.select(F.col(id_col).alias("doc_id")).write.mode(
-            "append"
-        ).format("parquet").saveAsTable(f"{prefix}_lmdocs")
+    uni, bi, ledger = (
+        f"{prefix}_uni", f"{prefix}_bi", f"{prefix}_lmdocs"
+    )
+    refresh_state_tables(spark, uni, bi, ledger)
+    fresh = unledgered(spark, batch_df, ledger, id_col)
+    if not fresh.isEmpty():
+        batch_token, _, done = probe_tokens(
+            spark, batch_df, id_col, (uni, bi), batch_token
+        )
+        for table, part in zip((uni, bi), train_bigram_lm(fresh, text_col)):
+            if table not in done:
+                append_state(table, part, batch_token)
+        append_state(ledger, fresh.select(F.col(id_col).alias("doc_id")))
         # scoring below re-reads the count tables this batch just
         # appended to -- under foreachBatch the implicit refresh landed
         # on the cloned session, so refresh the outer one explicitly
-        refresh_state_tables(spark, *state_tables)
+        refresh_state_tables(spark, uni, bi, ledger)
 
-    uni, bi = read_lm_counts(spark, prefix)
+    model_uni, model_bi = read_lm_counts(spark, prefix)
     return score_documents_against_lm(
-        batch_df, uni, bi, text_col=text_col, id_col=id_col
+        batch_df, model_uni, model_bi, text_col=text_col, id_col=id_col
     )
 
 
@@ -250,24 +169,14 @@ def lm_admission_applier(
     """foreachBatch hook: admit the micro-batch's counts and write its
     familiarity report to `{scored_dir}/batch_id=N` (overwrite --
     replays converge)."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            # stream batch ids are stable across replays of the same
-            # offsets; offset them past the 62-bit content-token range
-            # so mixed direct/stream use of one model cannot collide
-            scored = admit_lm_batch(
-                spark,
-                batch_df,
-                prefix,
-                id_col=id_col,
-                text_col=text_col,
-                batch_token=(1 << 62) + batch_id,
-            )
-            scored.write.mode("overwrite").parquet(
-                f"{scored_dir}/batch_id={batch_id}"
-            )
-        finally:
-            release_tracked()
-
-    return _apply
+    return batch_writer(
+        lambda batch_df, batch_id: admit_lm_batch(
+            spark,
+            batch_df,
+            prefix,
+            id_col=id_col,
+            text_col=text_col,
+            batch_token=stream_token(batch_id),
+        ),
+        scored_dir,
+    )

@@ -2,20 +2,18 @@
 every document seen before it, then folds its own grams into the index.
 
 The streaming twin of the batch incremental span dedup
-(operators/spandedup.py::mask_duplicated_spans_incremental), with the
-same catalog-as-state design as dedup_admission.py: cross-batch state
-is two append-only tables --
+(operators/spandedup.py::mask_duplicated_spans_incremental).  The
+cross-batch state is two append-only tables on admission.py's table
+layer --
 
   {prefix}_grams     (gram_key, doc_freq, batch_token) partial counts,
                      bucketed by gram_key; the LOGICAL count is
                      SUM(doc_freq) per key (read_gram_counts), so a
                      batch admission is a cheap bucketed APPEND of
                      batch-sized rows, never an index rewrite.
-                     Periodic compaction = the batch
-                     materialize_gram_index over the same layout (only
-                     safe when no batches are in flight, or it must
-                     preserve the distinct batch_token set -- tokens
-                     are the crash-recovery markers below).
+                     compact_span_index folds the partials and keeps
+                     the distinct batch_token set (tokens are the
+                     crash-recovery markers below).
   {prefix}_spandocs  (doc_id) admitted ids -- the replay ledger.
 
 Replay idempotence (at-least-once delivery): a replayed batch's docs
@@ -31,7 +29,7 @@ so a replay replaces rather than duplicates.
 Crash atomicity (the two appends cannot be one transaction): each
 batch derives a deterministic ``batch_token`` (foreachBatch's batch_id,
 else a content hash of the batch's doc ids -- identical on replay) and
-the gram rows CARRY it.  A parquet saveAsTable append is job-atomic
+the gram rows CARRY it.  A parquet insertInto append is job-atomic
 (the committer publishes all files or none), so the token's presence in
 {prefix}_grams is a commit marker for the gram append itself.  The
 recovery rule in admit_span_batch: docs whose counts are already in the
@@ -41,6 +39,7 @@ but before the ledger append therefore cannot double-count -- the
 replay sees its own token, skips the gram re-append, subtracts the
 full batch contribution for masking, and completes the missing ledger
 append; a crash before the gram append replays as a plain fresh batch.
+A fully replayed batch (no fresh docs) appends nothing at all.
 
 Scale notes: per batch the exchanges are batch-sized (the batch's gram
 keys + one join against the bucketed index layout); the span merge and
@@ -53,14 +52,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import release_tracked
 from ..operators.spandedup import (
     MIN_DOCS,
     N_GRAM,
     mask_duplicated_spans_incremental,
     ngram_positions,
 )
-from .admission import batch_content_token, refresh_state_tables
+from .admission import (
+    append_state,
+    batch_writer,
+    compact_counts,
+    init_state_tables,
+    probe_tokens,
+    read_counts,
+    refresh_state_tables,
+    stream_token,
+    unledgered,
+)
 
 
 def init_span_index(
@@ -69,84 +77,35 @@ def init_span_index(
     """Create the (empty) gram-count and admitted-doc tables.
     Idempotent across sessions sharing a warehouse dir (orphaned
     leftover locations are cleared like write_bucketed does)."""
-    from ..sinks.bucketing import _clear_orphan_location
-
-    for name in (f"{prefix}_grams", f"{prefix}_spandocs"):
-        _clear_orphan_location(spark, name)
-    empty_grams = spark.createDataFrame(
-        [], "gram_key long, doc_freq long, batch_token long"
+    init_state_tables(
+        spark,
+        {
+            f"{prefix}_grams": "gram_key long, doc_freq long, batch_token long",
+            f"{prefix}_spandocs": "doc_id long",
+        },
+        {f"{prefix}_grams": ("gram_key", n_buckets)},
     )
-    (
-        empty_grams.write.bucketBy(n_buckets, "gram_key")
-        .sortBy("gram_key")
-        .format("parquet")
-        .saveAsTable(f"{prefix}_grams")
-    )
-    spark.createDataFrame([], "doc_id long").write.format(
-        "parquet"
-    ).saveAsTable(f"{prefix}_spandocs")
-
-
-def _n_buckets(spark: SparkSession, prefix: str) -> int:
-    """Bucket count of the existing index table (appends must match)."""
-    for row in spark.sql(
-        f"DESCRIBE EXTENDED {prefix}_grams"
-    ).collect():
-        if row.col_name == "Num Buckets":
-            return int(row.data_type)
-    return 32
 
 
 def read_gram_counts(spark: SparkSession, prefix: str) -> DataFrame:
     """Logical (gram_key, doc_freq) view over the append-only partial
     counts.  NULL gram_keys are compaction's token-marker rows (zero
     count, no gram) -- excluded here."""
-    return (
-        spark.table(f"{prefix}_grams")
-        .filter(F.col("gram_key").isNotNull())
-        .groupBy("gram_key")
-        .agg(F.sum("doc_freq").alias("doc_freq"))
+    return read_counts(
+        spark, f"{prefix}_grams", ("gram_key",), "doc_freq", "gram_key"
     )
 
 
 def compact_span_index(spark: SparkSession, prefix: str) -> dict:
-    """Fold the append-only gram partials into one row per gram_key.
-    The distinct batch_token set MUST survive compaction -- tokens are
-    the commit markers that make replayed/crashed batches heal instead
-    of double-counting -- so each token is retained as a marker row
-    (gram_key NULL, doc_freq 0; NULL can never collide with a real
-    xxhash64 gram key, and read_gram_counts filters it out).  Only safe
+    """Fold the append-only gram partials into one row per gram_key,
+    keeping each batch_token as a marker row (gram_key NULL, doc_freq 0;
+    NULL can never collide with a real xxhash64 gram key).  Only safe
     when no batches are in flight (caller contract, same as the search
     index's compact).  Returns {'rows_before', 'rows_after'}."""
-    grams = spark.table(f"{prefix}_grams")
-    rows_before = grams.count()
-    folded = (
-        grams.filter(F.col("gram_key").isNotNull())
-        .groupBy("gram_key")
-        .agg(F.sum("doc_freq").alias("doc_freq"))
-        .withColumn("batch_token", F.lit(None).cast("long"))
+    before, after = compact_counts(
+        spark, f"{prefix}_grams", ("gram_key",), "doc_freq", "gram_key"
     )
-    markers = (
-        grams.select("batch_token")
-        .filter(F.col("batch_token").isNotNull())
-        .distinct()
-        .select(
-            F.lit(None).cast("long").alias("gram_key"),
-            F.lit(0).cast("long").alias("doc_freq"),
-            "batch_token",
-        )
-    )
-    compacted = folded.unionByName(markers).localCheckpoint(eager=True)
-    n_buckets = _n_buckets(spark, prefix)
-    (
-        compacted.write.mode("overwrite")
-        .bucketBy(n_buckets, "gram_key")
-        .sortBy("gram_key")
-        .format("parquet")
-        .saveAsTable(f"{prefix}_grams")
-    )
-    refresh_state_tables(spark, f"{prefix}_grams")
-    return {"rows_before": rows_before, "rows_after": compacted.count()}
+    return {"rows_before": before, "rows_after": after}
 
 
 def admit_span_batch(
@@ -165,27 +124,15 @@ def admit_span_batch(
     the gram append carries `batch_token` as its own commit marker, so
     a crash between the gram append and the ledger append cannot
     double-count on replay (see module docstring)."""
-    refresh_state_tables(spark, f"{prefix}_grams", f"{prefix}_spandocs")
-    if batch_token is None:
-        batch_token = batch_content_token(batch_df, id_col=id_col)
-    # has this batch's gram contribution already been committed?  The
-    # token scan is column-pruned + footer-min/max-pruned parquet; the
-    # table holds one distinct token per admitted batch.
-    grams_committed = (
-        spark.table(f"{prefix}_grams")
-        .filter(F.col("batch_token") == F.lit(batch_token))
-        .limit(1)
-        .count()
-        > 0
+    grams, ledger = f"{prefix}_grams", f"{prefix}_spandocs"
+    refresh_state_tables(spark, grams, ledger)
+    # has this batch's gram contribution already been committed?  One
+    # job derives the token and probes the gram table's markers.
+    batch_token, _, done = probe_tokens(
+        spark, batch_df, id_col, (grams,), batch_token
     )
-    admitted_ids = spark.table(f"{prefix}_spandocs").select(
-        F.col("doc_id")
-    )
-    fresh = batch_df.join(
-        admitted_ids,
-        batch_df[id_col] == admitted_ids["doc_id"],
-        "left_anti",
-    ).localCheckpoint(eager=True)
+    grams_committed = grams in done
+    fresh = unledgered(spark, batch_df, ledger, id_col)
     replayed = batch_df.join(
         fresh.select(F.col(id_col).alias("__f")),
         batch_df[id_col] == F.col("__f"),
@@ -227,26 +174,19 @@ def admit_span_batch(
         corpus_gram_counts=corpus_counts,
     ).localCheckpoint(eager=True)
 
-    if not grams_committed:
-        fresh_counts = (
-            ngram_positions(fresh, text_col, id_col, n)
-            .groupBy("gram_key")
-            .agg(F.countDistinct("doc_id").alias("doc_freq"))
-            .withColumn("batch_token", F.lit(batch_token))
-        )
-        (
-            fresh_counts.write.mode("append")
-            .bucketBy(_n_buckets(spark, prefix), "gram_key")
-            .sortBy("gram_key")
-            .format("parquet")
-            .saveAsTable(f"{prefix}_grams")
-        )
-    fresh.select(F.col(id_col).alias("doc_id")).write.mode(
-        "append"
-    ).format("parquet").saveAsTable(f"{prefix}_spandocs")
-    # leave the OUTER session's view fresh too: under foreachBatch the
-    # appends above implicitly refreshed only the cloned session
-    refresh_state_tables(spark, f"{prefix}_grams", f"{prefix}_spandocs")
+    if not fresh.isEmpty():
+        if not grams_committed:
+            append_state(
+                grams,
+                ngram_positions(fresh, text_col, id_col, n)
+                .groupBy("gram_key")
+                .agg(F.countDistinct("doc_id").alias("doc_freq")),
+                batch_token,
+            )
+        append_state(ledger, fresh.select(F.col(id_col).alias("doc_id")))
+        # leave the OUTER session's view fresh too: under foreachBatch
+        # the appends above implicitly refreshed only the cloned session
+        refresh_state_tables(spark, grams, ledger)
     return masked
 
 
@@ -260,24 +200,14 @@ def span_admission_applier(
     """foreachBatch hook: mask the micro-batch against everything seen
     so far and write the report to `{masked_dir}/batch_id=N` (overwrite
     -- replays converge)."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            # stream batch ids are stable across replays of the same
-            # offsets; offset them past the 62-bit content-token range
-            # so mixed direct/stream use of one index cannot collide
-            masked = admit_span_batch(
-                spark,
-                batch_df,
-                prefix,
-                id_col=id_col,
-                text_col=text_col,
-                batch_token=(1 << 62) + batch_id,
-            )
-            masked.write.mode("overwrite").parquet(
-                f"{masked_dir}/batch_id={batch_id}"
-            )
-        finally:
-            release_tracked()
-
-    return _apply
+    return batch_writer(
+        lambda batch_df, batch_id: admit_span_batch(
+            spark,
+            batch_df,
+            prefix,
+            id_col=id_col,
+            text_col=text_col,
+            batch_token=stream_token(batch_id),
+        ),
+        masked_dir,
+    )

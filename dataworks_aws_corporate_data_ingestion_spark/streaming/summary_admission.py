@@ -63,6 +63,7 @@ from .admission import (
     compact_index,
     init_state_tables,
     probe_with_summary,
+    read_counts,
     read_ledger_total,
     refresh_state_tables,
 )
@@ -201,11 +202,8 @@ def read_state(
     row."""
     data, meta = _tables(spec, prefix)
     refresh_state_tables(spark, data)
-    state = (
-        spark.table(data)
-        .filter(F.col(spec.marker).isNotNull())
-        .groupBy(*spec.cells)
-        .agg(F.sum(spec.counter).cast("bigint").alias(spec.alias))
+    state = read_counts(
+        spark, data, spec.cells, spec.counter, spec.marker, spec.alias
     )
     return state, read_ledger_total(spark, meta)
 

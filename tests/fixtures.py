@@ -1,5 +1,6 @@
 """Synthetic encrypted-envelope fixture generator (shape documented in
-FIXTURES.md section 1; built independently with this engine's own crypto)."""
+FIXTURES.md section 1; built independently with this engine's own crypto),
+and jvm_rows for small literal batches."""
 
 from __future__ import annotations
 
@@ -83,3 +84,27 @@ def make_batch(
         )
         payloads.append(payload)
     return lines, payloads
+
+
+def jvm_rows(spark, rows, schema: str):
+    """`rows` (tuples in `schema`'s DDL column order) as a relation the
+    JVM holds itself: inline() over an array of literal structs.
+    spark.createDataFrame(list) ships pickled rows that every job over
+    the frame decodes again, which made each admission-suite job about
+    twice as slow as over spark.range.  A datetime goes in as its ISO
+    string cast to the column type, so a timestamp_ntz keeps its wall
+    clock whatever the session time zone."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    fields = StructType.fromDDL(schema).fields
+
+    def _lit(v, field):
+        if isinstance(v, datetime):
+            v = v.isoformat(sep=" ")
+        return F.lit(v).cast(field.dataType).alias(field.name)
+
+    structs = [F.struct(*map(_lit, row, fields)) for row in rows]
+    return spark.range(1).select(F.inline(F.array(*structs)))

@@ -25,12 +25,14 @@ from dataworks_aws_corporate_data_ingestion_spark.streaming.admission import (
     token_committed,
     tokens_committed,
 )
+from tests.fixtures import jvm_rows
 
 pytestmark = pytest.mark.slow
 
 
 def _batch(spark, n=40, start=0):
-    return spark.createDataFrame(
+    return jvm_rows(
+        spark,
         [(start + i, f"k{i % 5}", i % 3) for i in range(n)],
         "doc_id bigint, key string, w bigint",
     ).repartition(3)

@@ -7,8 +7,19 @@ import pytest
 
 from dataworks_aws_corporate_data_ingestion_spark.sinks.bucketing import (
     bucketed_join,
+    insert_into,
     write_bucketed,
 )
+
+
+def bucket_spec(spark, table) -> tuple[str, str, str]:
+    """(Num Buckets, Bucket Columns, Sort Columns) as the catalog
+    records them."""
+    rows = {
+        r.col_name.strip(): r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    }
+    return rows["Num Buckets"], rows["Bucket Columns"], rows["Sort Columns"]
 
 
 @pytest.fixture()
@@ -60,6 +71,72 @@ class TestBucketedJoin:
             .sum("o_totalprice")
         )
         plan = agg._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+
+
+class TestInsertInto:
+    """insert_into, the one write path for an existing bucketed table:
+    the catalog's bucket spec survives appends and overwrites, and
+    columns land by name although insertInto itself matches them by
+    position."""
+
+    @pytest.fixture()
+    def table(self, spark):
+        from pyspark.sql import functions as F
+
+        write_bucketed(
+            spark.range(10).select(
+                F.col("id").alias("k"),
+                (F.col("id") + 100).alias("a"),
+                (F.col("id") * 10).alias("b"),
+            ),
+            "t_ins",
+            ["k"],
+            4,
+        )
+        yield "t_ins"
+        spark.sql("DROP TABLE IF EXISTS t_ins")
+
+    def test_reordered_same_typed_columns_land_by_name(self, spark, table):
+        from pyspark.sql import functions as F
+
+        # all three columns are bigint: a positional insert would swap
+        # them silently
+        insert_into(
+            spark.range(10, 20).select(
+                (F.col("id") * 10).alias("b"),
+                F.col("id").alias("k"),
+                (F.col("id") + 100).alias("a"),
+            ),
+            table,
+        )
+        rows = spark.table(table).collect()
+        assert sorted(r.k for r in rows) == list(range(20))
+        assert all(r.a == r.k + 100 and r.b == r.k * 10 for r in rows)
+
+    def test_append_and_overwrite_keep_bucket_spec(self, spark, table):
+        from pyspark.sql import functions as F
+
+        spec = bucket_spec(spark, table)
+        assert spec == ("4", "[`k`]", "[`k`]")
+        insert_into(
+            spark.range(10, 20).select(
+                F.col("id").alias("k"), F.col("id").alias("a"), F.col("id").alias("b")
+            ),
+            table,
+        )
+        assert bucket_spec(spark, table) == spec
+        pinned = spark.table(table).filter("k % 2 = 0").localCheckpoint(eager=True)
+        insert_into(pinned, table, overwrite=True)
+        assert bucket_spec(spark, table) == spec
+        assert sorted(r.k for r in spark.table(table).collect()) == list(
+            range(0, 20, 2)
+        )
+        # the rewritten files are read as buckets: no exchange on k
+        plan = (
+            spark.table(table).groupBy("k").count()
+            ._jdf.queryExecution().executedPlan().toString()
+        )
         assert "Exchange" not in plan, plan
 
 
@@ -215,13 +292,11 @@ class TestSearchIndexAppend:
         assert n_exchanges == 1, plan
         assert "PushedFilters: [In(term" in plan, plan
         # layout metadata intact
-        from dataworks_aws_corporate_data_ingestion_spark.operators.search import (
-            _index_bucket_count,
-        )
-
-        assert _index_bucket_count(spark, "t_bm25a") == 4
+        assert bucket_spec(spark, "t_bm25a_postings")[0] == "4"
 
     def test_append_to_missing_index_fails_loudly(self, spark):
+        from pyspark.errors import AnalysisException
+
         from dataworks_aws_corporate_data_ingestion_spark.operators.search import (
             append_to_search_index,
         )
@@ -229,8 +304,12 @@ class TestSearchIndexAppend:
         docs = spark.createDataFrame(
             [(1, "hello world")], "doc_id bigint, text string"
         )
-        with pytest.raises(ValueError, match="cannot determine bucket count"):
+        with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
             append_to_search_index(spark, docs, "t_bm25_missing")
+        assert not any(
+            t.name.startswith("t_bm25_missing")
+            for t in spark.catalog.listTables()
+        )
 
 
 class TestMinhashIndex:
@@ -273,9 +352,10 @@ class TestMinhashIndex:
         assert got == want
 
     def test_mismatched_minhash_params_fail_loudly(self, spark, index):
-        """The index pins (k, bands, rows, n_buckets) as table properties
-        at materialize time; query/append paths that pass different
-        explicit values must raise, not silently destroy recall."""
+        """The index pins (k, bands, rows) as table properties at
+        materialize time and its bucket spec in the catalog; query/append
+        paths that pass different explicit values must raise, not
+        silently destroy recall."""
         from dataworks_aws_corporate_data_ingestion_spark.operators.dedup import (
             append_to_minhash_index,
             index_params,
@@ -283,7 +363,8 @@ class TestMinhashIndex:
         )
 
         docs = index
-        assert index_params(spark, "t_mh", None, None, None) == (3, 16, 4, 4)
+        assert index_params(spark, "t_mh", None, None, None) == (3, 16, 4)
+        assert bucket_spec(spark, "t_mh_buckets")[0] == "4"
         delta = docs.filter("doc_id % 10 = 0")
         with pytest.raises(ValueError, match="bands=16, caller passed bands=8"):
             near_dup_pairs_against_index(spark, delta, "t_mh", bands=8)
@@ -480,7 +561,6 @@ class TestSearchIndexDeletion:
         searches from the stored tables alone), drop the tombstone
         table, and preserve the bucket spec for later appends."""
         from dataworks_aws_corporate_data_ingestion_spark.operators.search import (
-            _index_bucket_count,
             compact_search_index,
             delete_from_search_index,
             live_index_frames,
@@ -505,4 +585,4 @@ class TestSearchIndexDeletion:
         assert got == want
         # live_index_frames with no tombstone table = the stored index
         assert self._search(spark, live_index_frames(spark, "t_bm25d")) == got
-        assert _index_bucket_count(spark, "t_bm25d") == 4
+        assert bucket_spec(spark, "t_bm25d_postings")[0] == "4"

@@ -20,6 +20,7 @@ from dataworks_aws_corporate_data_ingestion_spark.streaming.summary_admission im
     init,
     read_state,
 )
+from tests.fixtures import jvm_rows
 
 pytestmark = pytest.mark.slow
 
@@ -33,7 +34,8 @@ BATCHES = [
 
 
 def _batch_df(spark, keys, start_id=0):
-    return spark.createDataFrame(
+    return jvm_rows(
+        spark,
         [(start_id + i, k) for i, k in enumerate(keys)],
         "event_id bigint, key string",
     ).repartition(2)
@@ -68,7 +70,8 @@ class TestAdmission:
                     spark, CMS, df, "t_ca1", _summary(df),
                     id_col="event_id",
                 )
-                corpus = spark.createDataFrame(
+                corpus = jvm_rows(
+                    spark,
                     seen, "event_id bigint, key string"
                 )
                 got, n = _state_rows(spark, "t_ca1")
@@ -112,7 +115,8 @@ class TestAdmission:
                 for r in part
             ]
             rows.append((None, None, 0, token))
-            spark.createDataFrame(
+            jvm_rows(
+                spark,
                 rows, "row int, col long, c long, batch_token long"
             ).write.mode("append").format("parquet").saveAsTable(
                 "t_ca3_cms"
@@ -236,7 +240,8 @@ class TestWeightedAdmission:
                 rows = [(sid + i, k, w) for i, (k, w) in enumerate(b)]
                 sid += 10000
                 seen.extend(rows)
-                df = spark.createDataFrame(
+                df = jvm_rows(
+                    spark,
                     rows, "event_id bigint, key string, w long"
                 ).repartition(2)
                 admit(
@@ -244,7 +249,8 @@ class TestWeightedAdmission:
                     _summary(df, "w"),
                     id_col="event_id", weight_col="w",
                 )
-                corpus = spark.createDataFrame(
+                corpus = jvm_rows(
+                    spark,
                     seen, "event_id bigint, key string, w long"
                 )
                 got, mass = _state_rows(spark, "t_caw1")

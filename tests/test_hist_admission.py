@@ -23,6 +23,7 @@ from dataworks_aws_corporate_data_ingestion_spark.streaming.summary_admission im
     quantile_bins_from_state,
     read_state,
 )
+from tests.fixtures import jvm_rows
 
 pytestmark = pytest.mark.slow
 
@@ -40,7 +41,8 @@ BATCHES = [
 
 
 def _batch_df(spark, rows, start_id=0):
-    return spark.createDataFrame(
+    return jvm_rows(
+        spark,
         [
             (start_id + i, datetime.fromisoformat(ts), v)
             for i, (ts, v) in enumerate(rows)
@@ -85,7 +87,8 @@ class TestAdmission:
                     spark, HIST, df, "t_qh1", _summary(df),
                     id_col="event_id",
                 )
-                corpus = spark.createDataFrame(
+                corpus = jvm_rows(
+                    spark,
                     seen, "event_id bigint, ts timestamp_ntz, value double"
                 )
                 got, n = _state_rows(spark, "t_qh1")
@@ -136,7 +139,8 @@ class TestAdmission:
                 (r["day"], int(r["bin"]), int(r["n"]), token) for r in part
             ]
             rows.append((None, None, 0, token))
-            spark.createDataFrame(
+            jvm_rows(
+                spark,
                 rows, "day date, bin long, n long, batch_token long"
             ).write.mode("append").format("parquet").saveAsTable(
                 "t_qh3_hist"
@@ -225,7 +229,8 @@ class TestAdmission:
             # the max (999, clamped) lands in the top bin
             assert picks[1.0] == BINS - 1
             # ledger divergence: poison the meta table, the read raises
-            spark.createDataFrame(
+            jvm_rows(
+                spark,
                 [(7, 999999)], "n_rows long, batch_token long"
             ).write.mode("append").format("parquet").saveAsTable(
                 "t_qh5_meta"

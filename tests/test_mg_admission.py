@@ -23,6 +23,7 @@ from dataworks_aws_corporate_data_ingestion_spark.streaming.summary_admission im
     init,
     read_state,
 )
+from tests.fixtures import jvm_rows
 
 pytestmark = pytest.mark.slow
 
@@ -38,7 +39,8 @@ BATCHES = [
 
 
 def _batch_df(spark, rows, start_id=0):
-    return spark.createDataFrame(
+    return jvm_rows(
+        spark,
         [(start_id + i, r[0]) for i, r in enumerate(rows)],
         "event_id bigint, key string",
     ).repartition(3)
@@ -76,7 +78,8 @@ class TestAdmission:
                     spark, MG, df, "t_mg1", _summary(df),
                     id_col="event_id", k=K,
                 )
-                corpus = spark.createDataFrame(
+                corpus = jvm_rows(
+                    spark,
                     seen, "event_id bigint, key string"
                 )
                 got = sorted(
@@ -134,7 +137,8 @@ class TestAdmission:
             state = _mg_reduce(state, K)
             rows = [(key[0], c, token) for key, c in state.items()]
             rows.append((None, 0, token))
-            spark.createDataFrame(
+            jvm_rows(
+                spark,
                 rows, "key string, c long, batch_token long"
             ).write.mode("append").format("parquet").saveAsTable("t_mg3_mg")
             _, n_before = read_state(spark, MG, "t_mg3")
@@ -287,14 +291,16 @@ class TestWeightedAdmission:
                 rows = [(sid + i, k, w) for i, (k, w) in enumerate(b)]
                 sid += 10000
                 seen.extend(rows)
-                df = spark.createDataFrame(
+                df = jvm_rows(
+                    spark,
                     rows, "event_id bigint, key string, w long"
                 ).repartition(3)
                 admit(
                     spark, MG, df, "t_mgw1", _summary(df, "w"),
                     id_col="event_id", weight_col="w", k=K,
                 )
-                corpus = spark.createDataFrame(
+                corpus = jvm_rows(
+                    spark,
                     seen, "event_id bigint, key string, w long"
                 )
                 got = sorted(

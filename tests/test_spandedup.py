@@ -334,9 +334,7 @@ class TestIncrementalSpans:
         full, corpus, delta = self._split(spark)
         try:
             materialize_gram_index(spark, corpus, "spandedup_t2", n_buckets=4)
-            appended = append_to_gram_index(
-                spark, delta, "spandedup_t2", n_buckets=4
-            )
+            appended = append_to_gram_index(spark, delta, "spandedup_t2")
             rebuilt = materialize_gram_index(
                 spark, full, "spandedup_t3", n_buckets=4
             )
