@@ -15,6 +15,12 @@ Layout:
     plans/      -- SQL interpolation runner, job-state store, date-range runner
     streaming/  -- structured-streaming ingest + windowed/stateful ops
     multimodal/ -- binary-column (image/audio) plumbing with stubbed codecs
+    zipcache    -- lazy zipimport invalidation for the Python workers,
+                   installed on import (see its docstring)
 """
+
+from . import zipcache
+
+zipcache.install()
 
 __version__ = "0.1.0"

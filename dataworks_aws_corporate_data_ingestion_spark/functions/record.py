@@ -89,6 +89,31 @@ def canonical_json(value) -> str:
     return json.dumps(value, ensure_ascii=False, separators=(",", ":"), sort_keys=True)
 
 
+def canonical_dumps(value, floats: bool) -> str:
+    """canonical_json's exact bytes, through orjson's sort-keys dump when
+    it can: same compact separators, same UTF-8-order key sort, same
+    escape set (pinned in tests/test_record.py).  `floats` says the value
+    may hold a float, which goes to the stdlib encoder (orjson writes
+    1e16, not 1e+16, and null for NaN); >64-bit ints and lone surrogates
+    make orjson raise TypeError and fall back too."""
+    if _orjson is not None and not floats:
+        try:
+            return _orjson.dumps(value, option=_orjson.OPT_SORT_KEYS).decode("utf-8")
+        except TypeError:
+            pass
+    return canonical_json(value)
+
+
+def _holds_float(value) -> bool:
+    """Whether a parsed JSON value holds a float anywhere: canonical_dumps'
+    `floats` for a value that did not come through the fused walk."""
+    for v in value.values() if type(value) is dict else value:
+        t = type(v)
+        if t is float or ((t is dict or t is list) and _holds_float(v)):
+            return True
+    return False
+
+
 def is_date_string(value: str) -> bool:
     lv = len(value)
     if lv != 24 and lv != 28:  # the only lengths DATE_PATTERN can match
@@ -512,19 +537,7 @@ def process_parsed(obj, db: str = "", collection: str = "") -> tuple[str, bool]:
             obj2["_id"] = {"$oid": str(_id)}
         ser = sanitise_text(dumps_intermediate(obj2), db, collection)
         return finalise_record(ser), is_delete
-    if _orjson is not None and not risky[1]:
-        # byte-identical to canonical_json for float-free values: same
-        # compact separators, same UTF-8-order key sort, same escape set
-        # (verified exhaustively in tests); big ints / lone surrogates
-        # raise TypeError and fall back to the stdlib encoder
-        try:
-            return (
-                _orjson.dumps(out, option=_orjson.OPT_SORT_KEYS).decode("utf-8"),
-                is_delete,
-            )
-        except TypeError:
-            pass
-    return canonical_json(out), is_delete
+    return canonical_dumps(out, risky[1]), is_delete
 
 
 def process_record(record: str, db: str = "", collection: str = "") -> tuple[str, bool]:
@@ -580,7 +593,7 @@ def parse_envelope(line: str, configured_collection: str | None = None) -> Parse
         db, collection = configured_collection.split(":")
     _id = message["_id"]
     if isinstance(_id, dict):
-        _id = canonical_json(_id)
+        _id = canonical_dumps(_id, _holds_float(_id))
     else:
         _id = str(_id)
     enc = message.get("encryption") or {}

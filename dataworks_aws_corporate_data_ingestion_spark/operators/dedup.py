@@ -438,20 +438,37 @@ def append_to_minhash_index(
     identically and later candidate joins keep the delta-side-only
     exchange.  A missing index raises before anything is written.
     Caller is responsible for having deduped `docs` first (admission
-    order: check, then append)."""
+    order: check, then append).
+
+    The buckets land first and a doc's shingles row marks it indexed
+    (streaming/dedup_admission.py reads that table), so a crash between
+    the two appends leaves bucket rows without shingles: the replay sees
+    the doc as fresh again, and its bucket append skips docs that
+    already have bucket rows."""
     from ..sinks.bucketing import insert_into
 
     k, bands, rows = index_params(spark, prefix, k, bands, rows)
     sh = fan_out(docs).select(
         F.col(id_col), word_shingles(F.col(text_col), k).alias("shingles")
     )
-    insert_into(sh, f"{prefix}_shingles")
-    # buckets derive from the SAME frame we just appended (recomputing
-    # from the table would re-shingle the whole corpus)
+    # buckets derive from the delta's own shingles (recomputing from the
+    # table would re-shingle the whole corpus)
     buckets = lsh_band_buckets(
         minhash_signatures(sh), id_col=id_col, bands=bands, rows=rows
     )
-    insert_into(buckets, f"{prefix}_buckets")
+    # the delta's ids that already have bucket rows: a scan of the id
+    # column probing a broadcast of the batch's ids, so the corpus side
+    # is never shuffled
+    bucketed = (
+        spark.table(f"{prefix}_buckets")
+        .select(id_col)
+        .join(F.broadcast(docs.select(id_col)), id_col, "left_semi")
+    )
+    insert_into(
+        buckets.join(F.broadcast(bucketed), id_col, "left_anti"),
+        f"{prefix}_buckets",
+    )
+    insert_into(sh, f"{prefix}_shingles")
 
 
 def near_dup_pairs_against_index(

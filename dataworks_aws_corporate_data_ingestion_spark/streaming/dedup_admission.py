@@ -27,7 +27,12 @@ are exactly the survivors of the previous attempt, fresh docs re-derive
 the same verdicts -- and the admitted sink writes each batch to its own
 `batch_id=N` subdirectory with overwrite, so a replay converges to the
 same files instead of appending duplicates.  The index append only ever
-receives fresh survivors, so index rows never duplicate either.
+receives fresh survivors, so index rows never duplicate either.  A doc
+counts as indexed once its shingles row exists, which the index append
+writes after the bucket rows: a crash between the two leaves the doc
+fresh for the replay, whose self-matches the candidate join drops and
+whose bucket append skips the rows already written
+(operators/dedup.py::append_to_minhash_index).
 
 Scale notes: per batch the cost is the incremental shape -- candidates
 scale with the batch, never the corpus; the index append is a bucketed

@@ -1,6 +1,7 @@
 """Span and LM admission on admission.py's table layer, in the fast
 tier: a fully replayed batch writes nothing, and a crash at every
-append of the round heals on replay to the uncrashed state.
+append of the round heals on replay to the uncrashed state.  Minhash
+dedup admission gets the same crash at each of its index appends.
 
 The crash is injected by making the family's shared append
 (admission.append_state, as the family module calls it) raise on its
@@ -19,9 +20,16 @@ from typing import NamedTuple
 import pytest
 from pyspark.sql import functions as F
 
+from dataworks_aws_corporate_data_ingestion_spark.operators.dedup import (
+    materialize_minhash_index,
+)
+from dataworks_aws_corporate_data_ingestion_spark.sinks import bucketing
 from dataworks_aws_corporate_data_ingestion_spark.streaming import (
     lm_admission,
     span_admission,
+)
+from dataworks_aws_corporate_data_ingestion_spark.streaming.dedup_admission import (
+    admit_batch,
 )
 
 SHARED = " ".join(f"s{i}" for i in range(12))
@@ -199,3 +207,87 @@ def test_crash_at_each_append_heals(spark, reference, name, k):
         assert _state(spark, fam, prefix) == state
     finally:
         _drop(spark, fam, prefix)
+
+
+def _mh_docs(spark, lo, hi, edit_of=None):
+    """Docs lo..hi-1 of 40 words each, no word shared between docs.
+    With edit_of, every doc is that doc with its last word changed: one
+    of 38 shingles differs, a jaccard of 37/39 against the original."""
+    src = F.col("id") if edit_of is None else F.lit(edit_of)
+    words = F.transform(
+        F.sequence(F.lit(0), F.lit(39)),
+        lambda j: F.when(
+            F.lit(edit_of is not None) & (j == 39), F.lit("edited")
+        ).otherwise(F.format_string("w%d_%d", src, j)),
+    )
+    return spark.range(lo, hi).select(
+        F.col("id").alias("doc_id"), F.array_join(words, " ").alias("text")
+    )
+
+
+def _mh_index(spark, prefix):
+    """(bucket rows, shingle rows) with repeats, sorted."""
+    return (
+        _rows(spark.table(f"{prefix}_buckets")),
+        _rows(spark.table(f"{prefix}_shingles").select(
+            "doc_id", F.sort_array("shingles")
+        )),
+    )
+
+
+def _mh_run(spark, prefix, crash_at=None):
+    """Index docs 0-3; admit batch 1 (docs 4-7), crashing its k-th index
+    append and replaying when crash_at=k; then admit batch 2: doc 8, a
+    one-word edit of doc 7, and the fresh doc 9.  Returns the two
+    admitted id lists, the index after batch 1 and after batch 2, and
+    the appended tables in call order."""
+    calls = []
+    real = bucketing.insert_into
+
+    def crashing(df, table, *args, **kwargs):
+        calls.append(table)
+        if len(calls) == crash_at:
+            raise _Crash(table)
+        real(df, table, *args, **kwargs)
+
+    def admitted(batch):
+        return sorted(r.doc_id for r in admit_batch(spark, batch, prefix).collect())
+
+    try:
+        materialize_minhash_index(spark, _mh_docs(spark, 0, 4), prefix, n_buckets=4)
+        b1 = _mh_docs(spark, 4, 8)
+        if crash_at is not None:
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(bucketing, "insert_into", crashing)
+                with pytest.raises(_Crash):
+                    admit_batch(spark, b1, prefix)
+        out1, index1 = admitted(b1), _mh_index(spark, prefix)
+        b2 = _mh_docs(spark, 8, 9, edit_of=7).unionByName(_mh_docs(spark, 9, 10))
+        return out1, admitted(b2), index1, _mh_index(spark, prefix), calls
+    finally:
+        for t in ("shingles", "buckets"):
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+
+
+@pytest.fixture(scope="module")
+def mh_reference(spark):
+    """The uncrashed minhash run: doc 8 rejected, each other doc
+    indexed once (16 bands, one bucket row each)."""
+    want = _mh_run(spark, "t_ca_mh_ref")
+    assert want[:2] == ([4, 5, 6, 7], [9])
+    buckets, shingles = want[3]
+    assert len(buckets) == len(set(buckets)) == 9 * 16
+    assert [r[0] for r in shingles] == [*range(8), 9]
+    return want
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_minhash_crash_at_each_index_append_heals(spark, mh_reference, k):
+    """Crash batch 1's index append at its k-th table (buckets, then
+    shingles), then replay: the admitted docs and every doc's bucket
+    and shingle rows equal an uncrashed run's, with no duplicates, and
+    a one-word edit of a crashed doc is rejected in the next batch."""
+    want = mh_reference
+    got = _mh_run(spark, f"t_ca_mh_k{k}", crash_at=k)
+    assert got[4] == ["t_ca_mh_k%d_%s" % (k, t) for t in ("buckets", "shingles")][:k]
+    assert got[:4] == want[:4]

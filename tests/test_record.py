@@ -238,6 +238,33 @@ class TestEnvelope:
         line = json.dumps({"message": {"_id": 42, "dbObject": "c"}})
         assert record.parse_envelope(line).id == "42"
 
+    # adversarial object ids: floats orjson formats differently (1e16,
+    # 1e-07, NaN), ints past 64 bits, non-ASCII, lone surrogates and
+    # escapes, nested and mixed
+    ADVERSARIAL_IDS = [
+        {"$oid": "5d1db6b5c0b5e5a8b5b5b5b5"},
+        {"b": 1e16, "a": 1e-07},
+        {"x": [{"y": [0.1, 2.5]}]},
+        {"n": float("nan"), "i": float("inf")},
+        {"big": 2**70, "neg": -(2**64), "max": 2**63 - 1},
+        {"z": [{"deep": 10**30}]},
+        {"é": "漢字🎉", "Z": "\u2028", "": "\x00\x1f\"\\/"},
+        {"lone": "\ud800", "pair": "a\udfffb"},
+        {"\udc80key": 1},
+        {"a": {"c": {"e": [None, True, False, -0, 7]}, "b": []}, "10": {}, "2": "x"},
+    ]
+
+    @pytest.mark.parametrize("value", ADVERSARIAL_IDS, ids=range(len(ADVERSARIAL_IDS)))
+    def test_object_id_bytes_match_canonical_json(self, value):
+        """The orjson sort-keys path (with its float, big-int and
+        surrogate fallbacks) writes canonical_json's exact bytes, both
+        called directly and on an id that came through the envelope
+        parser."""
+        want = record.canonical_json(value)
+        assert record.canonical_dumps(value, record._holds_float(value)) == want
+        line = json.dumps({"message": {"_id": value, "dbObject": "c"}})
+        assert record.parse_envelope(line).id == want
+
 
 class TestFullChainParity:
     """End-to-end text fixture: the canonical output form documented in
