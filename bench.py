@@ -80,9 +80,11 @@ from cycles import host_cpu_times, steal_share, tree_cpu_s  # noqa: E402
 from spans import SparkRest  # noqa: E402
 
 # strip per-session noise from plan strings so the sha is stable across
-# runs: expression ids (#123L), plan/codegen/subquery ids, object
-# addresses, temp output dirs, and statistics annotations
+# runs: the catalog warehouse location (<cwd>/spark-warehouse by default),
+# expression ids (#123L), plan/codegen/subquery ids, object addresses,
+# temp output dirs, and statistics annotations
 _PLAN_NOISE = [
+    (re.compile(r"file:[^,\[\]\n]*?/spark-warehouse/"), "file:<warehouse>/"),
     (re.compile(r"#\d+"), "#x"),
     # higher-order-function lambda variables carry a session-global
     # counter in their NAME (lambda x_1 / lambda y_10 vs x_15 / y_24),
@@ -128,6 +130,11 @@ def plan_sha(df) -> str | None:
                     conf.set(k, v)
     except Exception:
         return None
+    return plan_text_sha(plan)
+
+
+def plan_text_sha(plan: str) -> str:
+    """16-hex-char sha of a rendered plan after `_PLAN_NOISE` is stripped."""
     for pat, rep in _PLAN_NOISE:
         plan = pat.sub(rep, plan)
     return hashlib.sha256(plan.encode("utf-8")).hexdigest()[:16]

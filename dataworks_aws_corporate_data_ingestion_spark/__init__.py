@@ -9,7 +9,8 @@ Layout:
     functions/  -- scalar-function surface (canonical JSON, dates, crypto,
                    sanitise, audit transform, text analysis, vector math)
     sources/    -- readers (JSONL envelope, schema'd ORC/Parquet, test tables)
-    sinks/      -- range-clustered partitioned writers
+    sinks/      -- range-clustered partitioned writers and the
+                   explicit-schema readers of what they store
     operators/  -- dedup (exact/window/minhash/simhash), snapshot merge,
                    similarity search, rollups
     plans/      -- SQL interpolation runner, job-state store, date-range runner

@@ -13,6 +13,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sinks.writers import SNAPSHOT_COLUMNS
+
 
 def latest_by_key(
     df: DataFrame,
@@ -48,7 +50,7 @@ def merge_snapshot(
     discipline -- the range exchange resamples into nearly-sorted runs, and
     the per-partition sort is cheap.  Skewed ids are split by AQE.
     """
-    cols = [F.col(c) for c in ("id", "db_type", "val", "id_part")]
+    cols = [F.col(c) for c in SNAPSHOT_COLUMNS]
     unioned = snapshot.select(*cols).unionAll(dailies.select(*cols))
     return latest_by_key(
         unioned.repartitionByRange(*keys), keys, order_by or [F.col("db_type").asc()]

@@ -41,10 +41,8 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .merge import merge_snapshot
+from ..sinks.writers import SNAPSHOT_COLUMNS, daily_layout
 from .mor_store import ManifestConflict
-
-COLUMNS = ("id", "db_type", "val", "id_part")
 
 
 def _base_dir(table_dir: str) -> str:
@@ -158,7 +156,7 @@ def write_delta(df: DataFrame, table_dir: str, max_retries: int = 5) -> str:
     # (delta_fraction) never have to re-scan data files
     obs = Observation()
     (
-        df.select(*COLUMNS)
+        df.select(*SNAPSHOT_COLUMNS)
         .observe(obs, F.count(F.lit(1)).alias("rows"))
         .write.mode("errorifexists")
         .parquet(batch_dir)
@@ -220,14 +218,14 @@ def read_merged(
     if state["base"]:
         frames.append(
             spark.read.parquet(_base_dir(table_dir))
-            .select(*COLUMNS)
+            .select(*SNAPSHOT_COLUMNS)
             .withColumn("__gen", F.lit(0))
         )
     deltas = _deltas_dir(table_dir)
     for gen, batch in enumerate(state["deltas"], start=1):
         frames.append(
             spark.read.parquet(os.path.join(deltas, batch))
-            .select(*COLUMNS)
+            .select(*SNAPSHOT_COLUMNS)
             .withColumn("__gen", F.lit(gen))
         )
     if not frames:
@@ -244,7 +242,7 @@ def read_merged(
         unioned.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .filter(F.col("db_type") != "DELETE")  # tombstones resolve at read
-        .select(*COLUMNS)
+        .select(*SNAPSHOT_COLUMNS)
     )
 
 
@@ -300,8 +298,7 @@ def compact(spark: SparkSession, table_dir: str) -> None:
         # observe sits ABOVE the range exchange: repartitionByRange runs a
         # boundary-sampling pass over its child, which would double-count
         # an observation placed below it
-        merged.repartitionByRange("id_part", "id")
-        .sortWithinPartitions("id")
+        daily_layout(merged)
         .observe(obs, F.count(F.lit(1)).alias("rows"))
         .write.mode("overwrite")
         .parquet(staging)

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sinks.writers import read_snapshot
+
 _MAX_BUCKETS = 256
 
 
@@ -93,10 +95,8 @@ def purge_keys(
             "purged bigint",
         )
 
-    snap = (
-        spark.read.format(fmt)
-        .load(snapshot_path)
-        .filter(F.col("id_part").isin(parts))
+    snap = read_snapshot(spark, snapshot_path, fmt).filter(
+        F.col("id_part").isin(parts)
     )
     remaining = snap.join(
         F.broadcast(kp.select("id")), "id", "left_anti"

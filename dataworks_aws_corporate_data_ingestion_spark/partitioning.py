@@ -18,13 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Round-robin repartition iff df has fewer partitions than
-    min_parts (default: the session's defaultParallelism)."""
-    target = (
-        min_parts
-        or df.sparkSession.sparkContext.defaultParallelism
-    )
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition iff df has fewer partitions than the
+    session's defaultParallelism."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

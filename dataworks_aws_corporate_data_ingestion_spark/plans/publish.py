@@ -21,6 +21,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..sinks.writers import read_snapshot
 from .sqlrunner import SqlRunner
 
 
@@ -43,11 +44,8 @@ def publish_snapshot_tables(
     (the reference's exact trick); per-table output re-clusters by range on
     (id_part, id) so downstream scans prune.  AQE sizes the exchange (the
     reference hard-coded 1024)."""
-    source = (
-        spark.read.schema("id string, id_part string, db_type string, val string")
-        .format(snapshot_format)
-        .load(snapshot_path)
-        .persist(StorageLevel.DISK_ONLY)
+    source = read_snapshot(spark, snapshot_path, snapshot_format).persist(
+        StorageLevel.DISK_ONLY
     )
     try:
         for spec in tables:

@@ -24,7 +24,14 @@ from pyspark.sql import functions as F
 from ..functions.crypto import IdentityKeyService, KeyService
 from ..operators.ingest import ingest_daily
 from ..operators.merge import merge_snapshot
-from ..sinks.writers import write_daily, write_jsonl, write_snapshot
+from ..sinks.writers import (
+    SNAPSHOT_COLUMNS,
+    read_daily,
+    read_snapshot,
+    write_daily,
+    write_jsonl,
+    write_snapshot,
+)
 from . import state as state_mod
 from .publish import TableSpec, publish_snapshot_tables
 from .state import JobStatus, LocalStateStore, StateStore
@@ -142,20 +149,47 @@ def read_dailies_since(
     the same predicate and still references only partition columns, so
     FileSourceStrategy prunes whole day directories -- no data files for
     already-merged days are opened (assert via .inputFiles() in tests)."""
-    schema = (
-        "id string, db_type string, val string, export_year int,"
-        " export_month int, export_day int, id_part string"
-    )
     return (
-        spark.read.schema(schema)
-        .format(fmt)
-        .load(daily_root)
+        read_daily(spark, daily_root, fmt)
         .filter(
             F.make_date("export_year", "export_month", "export_day")
             > F.lit(cutoff_date).cast("date")
         )
-        .select("id", "db_type", "val", "id_part")
+        .select(*SNAPSHOT_COLUMNS)
     )
+
+
+def export_snapshot(
+    spark: SparkSession,
+    store: StateStore,
+    prev: JobStatus | None,
+    deltas: DataFrame,
+    *,
+    status_key: str,
+    product: str,
+    as_of: str,
+    prefix: str,
+    fmt: str,
+    compression: str,
+) -> str:
+    """The export step of both lineages (`run_update` and the stream
+    handoff, streaming/merge.py): merge `deltas` onto the export `prev`
+    names (an empty snapshot when None), write the result at `prefix`,
+    and record it under `status_key` -- IN_PROGRESS first, then FAILED
+    or, only once the snapshot write has landed, COMPLETED with the
+    prefix.  A crashed merge can therefore never be picked up as "latest
+    completed" by the next cycle.  Returns `prefix`."""
+    snapshot = read_snapshot(spark, prev.export_prefix if prev else None, fmt)
+    base = dict(correlation_id=status_key, data_product=product, date=as_of)
+    store.put(JobStatus(status=state_mod.IN_PROGRESS, export_prefix=prefix, **base))
+    try:
+        merged = merge_snapshot(snapshot, deltas)
+        write_snapshot(merged, prefix, fmt=fmt, compression=compression)
+    except Exception:
+        store.put(JobStatus(status=state_mod.FAILED, **base))
+        raise
+    store.put(JobStatus(status=state_mod.COMPLETED, export_prefix=prefix, **base))
+    return prefix
 
 
 def run_update(spark: SparkSession, cfg: EngineConfig, as_of: str | None = None) -> str:
@@ -170,48 +204,35 @@ def run_update(spark: SparkSession, cfg: EngineConfig, as_of: str | None = None)
       4. write the new snapshot under {exports_root}/{as_of} (:456-457)
       5. record the new export prefix in the state store (:391-395)
 
-    Returns the new export prefix.  Divergence from the reference: with no
-    previous export it bootstraps from an empty snapshot (first export)
-    instead of a hard-coded fallback prefix (:368-370); and the COMPLETED
-    status carrying the new prefix is written after the snapshot write
-    lands, not before the merge starts, so a crashed merge can never be
-    picked up as "latest completed" by the next cycle."""
+    Steps 2-5 are `export_snapshot`.  Returns the new export prefix.
+    Divergence from the reference: with no previous export it bootstraps
+    from an empty snapshot (first export) instead of a hard-coded
+    fallback prefix (:368-370); and the COMPLETED status carrying the new
+    prefix is written after the snapshot write lands, not before the
+    merge starts."""
     spec = cfg.collection
     store: StateStore = LocalStateStore(cfg.state_path)
-    product = f"CDI-{spec.name}"
+    product = state_mod.data_product(spec.name)
     as_of = as_of or cfg.end_date
-    new_prefix = f"{spec.resolved_exports_root()}/{as_of}"
-    base = dict(correlation_id=cfg.correlation_id, data_product=product, date=as_of)
-
     prev = store.latest_completed_export(product)
-    snap_schema = "id string, db_type string, val string, id_part string"
-    if prev is not None:
-        dailies = read_dailies_since(
-            spark, spec.output_root, prev.date, fmt=spec.sink_format
-        )
-        snapshot = (
-            spark.read.schema(snap_schema)
-            .format(spec.sink_format)
-            .load(prev.export_prefix)
-            .select("id", "db_type", "val", "id_part")
-        )
-    else:
-        dailies = read_dailies_since(
-            spark, spec.output_root, "1970-01-01", fmt=spec.sink_format
-        )
-        snapshot = spark.createDataFrame([], snap_schema)
-
-    store.put(JobStatus(status=state_mod.IN_PROGRESS, export_prefix=new_prefix, **base))
-    try:
-        merged = merge_snapshot(snapshot, dailies)
-        write_snapshot(
-            merged, new_prefix, fmt=spec.sink_format, compression=spec.compression
-        )
-    except Exception:
-        store.put(JobStatus(status=state_mod.FAILED, **base))
-        raise
-    store.put(JobStatus(status=state_mod.COMPLETED, export_prefix=new_prefix, **base))
-    return new_prefix
+    dailies = read_dailies_since(
+        spark,
+        spec.output_root,
+        prev.date if prev is not None else "1970-01-01",
+        fmt=spec.sink_format,
+    )
+    return export_snapshot(
+        spark,
+        store,
+        prev,
+        dailies,
+        status_key=cfg.correlation_id,
+        product=product,
+        as_of=as_of,
+        prefix=f"{spec.resolved_exports_root()}/{as_of}",
+        fmt=spec.sink_format,
+        compression=spec.compression,
+    )
 
 
 def export_to_hive(
@@ -224,7 +245,7 @@ def export_to_hive(
         return
     if export_prefix is None:
         prev = LocalStateStore(cfg.state_path).latest_completed_export(
-            f"CDI-{spec.name}"
+            state_mod.data_product(spec.name)
         )
         if prev is None:
             raise ValueError(f"no completed export to publish for {spec.name}")
@@ -241,7 +262,7 @@ def run_range(spark: SparkSession, cfg: EngineConfig) -> None:
     collection update merges AND publishes; force-export-to-hive publishes
     the latest export without merging)."""
     store: StateStore = LocalStateStore(cfg.state_path)
-    product = f"CDI-{cfg.collection.name}"
+    product = state_mod.data_product(cfg.collection.name)
     for date in date_range(cfg.start_date, cfg.end_date):
         base = dict(
             correlation_id=cfg.correlation_id, data_product=product, date=date

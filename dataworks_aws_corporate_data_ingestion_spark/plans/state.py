@@ -20,6 +20,11 @@ COMPLETED = "COMPLETED"
 FAILED = "FAILED"
 
 
+def data_product(collection: str) -> str:
+    """The state-store product key of a collection ("db:collection")."""
+    return f"CDI-{collection}"
+
+
 @dataclass(frozen=True)
 class JobStatus:
     correlation_id: str

@@ -28,10 +28,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_DAILY_SCHEMA = (
-    "id string, db_type string, val string, export_year int,"
-    " export_month int, export_day int, id_part string"
-)
+from ..sinks.writers import read_daily, read_snapshot
 
 
 def id_part_of(record_id: str) -> str:
@@ -71,9 +68,7 @@ def record_timeline(
     """
     part = id_part_of(record_id)
     dailies = (
-        spark.read.schema(_DAILY_SCHEMA)
-        .format(daily_fmt)
-        .load(daily_root)
+        read_daily(spark, daily_root, daily_fmt)
         .filter(
             (F.col("id_part") == part) & (F.col("id") == record_id)
         )
@@ -89,8 +84,7 @@ def record_timeline(
     if snapshot_root is None:
         return dailies.orderBy("event_date")
     snap = (
-        spark.read.format(snapshot_fmt)
-        .load(snapshot_root)
+        read_snapshot(spark, snapshot_root, snapshot_fmt)
         # id_part is the PARTITION column here: whole-bucket prune
         .filter((F.col("id_part") == part) & (F.col("id") == record_id))
         .select(

@@ -1,4 +1,5 @@
-"""Range-clustered partitioned writers.
+"""The stored layout of dailies and snapshots: range-clustered
+partitioned writers and the explicit-schema readers that match them.
 
 The write-layout contract is a first-class part of the engine (reference
 docs/data-storage.md:101-103): daily deltas and snapshots are partitioned
@@ -6,13 +7,49 @@ by `id_part`, range-clustered and sorted by `(id_part, id)` so the NEXT
 merge's range exchange and ORC/parquet stripe pruning stay cheap.  At 10 TB
 this discipline is the difference between a planned merge and a blind
 re-shuffle of the world.
+
+Every read of a stored daily or snapshot goes through `read_daily` /
+`read_snapshot`: with no schema, Spark infers an all-digit `id_part`
+directory name as INT (`id_part=07` reads as 7), and every string
+comparison against it then misses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 DAILY_PARTITIONS = ("export_year", "export_month", "export_day", "id_part")
+SNAPSHOT_COLUMNS = ("id", "db_type", "val", "id_part")
+SNAPSHOT_SCHEMA = "id string, db_type string, val string, id_part string"
+DAILY_SCHEMA = (
+    "id string, db_type string, val string, export_year int,"
+    " export_month int, export_day int, id_part string"
+)
+
+
+def daily_layout(df: DataFrame) -> DataFrame:
+    """The daily clustering: range partitions on (id_part, id), each
+    sorted by id."""
+    return df.repartitionByRange("id_part", "id").sortWithinPartitions("id")
+
+
+def read_daily(spark: SparkSession, root: str, fmt: str = "orc") -> DataFrame:
+    """Every stored daily under `root`, partition columns typed by
+    DAILY_SCHEMA."""
+    return spark.read.schema(DAILY_SCHEMA).format(fmt).load(root)
+
+
+def read_snapshot(spark: SparkSession, path: str | None, fmt: str = "orc") -> DataFrame:
+    """The snapshot at `path` as SNAPSHOT_COLUMNS; an empty snapshot when
+    `path` is None (no previous export)."""
+    if path is None:
+        return spark.createDataFrame([], SNAPSHOT_SCHEMA)
+    return (
+        spark.read.schema(SNAPSHOT_SCHEMA)
+        .format(fmt)
+        .load(path)
+        .select(*SNAPSHOT_COLUMNS)
+    )
 
 
 def write_daily(
@@ -23,8 +60,8 @@ def write_daily(
     stabilize: bool = False,
 ) -> None:
     """Daily-delta write (reference steps/ingesters.py:534-538):
-    repartitionByRange(id_part, id) + sortWithinPartitions(id) + dynamic
-    partition overwrite, so re-runs replace only the day they touch.
+    `daily_layout` + dynamic partition overwrite, so re-runs replace only
+    the day they touch.
 
     ``stabilize``: the range partitioner runs a boundary-SAMPLING job
     over its child before the write job, i.e. the input chain executes
@@ -44,8 +81,7 @@ def write_daily(
         df = handle
     try:
         (
-            df.repartitionByRange("id_part", "id")
-            .sortWithinPartitions("id")
+            daily_layout(df)
             .write.option("partitionOverwriteMode", "dynamic")
             .partitionBy(*DAILY_PARTITIONS)
             .format(fmt)

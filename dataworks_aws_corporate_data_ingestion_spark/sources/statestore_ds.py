@@ -8,14 +8,12 @@ Python DataSource V2 API (`spark.read.format("cdi_state")`):
 
 * `schema()` declares the JobStatus columns (late schema imposition on a
   schemaless JSONL log -- same F16 discipline as the envelope parse).
-* `partitions()` splits the read by status value, so a filtered audit
-  (`WHERE status='FAILED'`) still parallelises and each task emits only
-  its slice.  Each task resolves last-writer-wins per (correlation_id,
-  data_product, date) over the whole log and then keeps the winners
-  whose status matches its partition; a catch-all partition carries any
-  winner whose status is outside the known triple -- so the union over
-  the partitions equals the LocalStateStore view exactly, with no
-  cross-partition duplicates and no silently-dropped novel statuses.
+* `read()` is one task that takes the log through
+  `LocalStateStore.entries()`, so the table view and the driver-side
+  store share one last-writer-wins rule per (correlation_id,
+  data_product, date), novel status values included.  The log is
+  small; a filtered audit (`WHERE status='FAILED'`) filters the one
+  task's rows.
 
 The path is validated on the DRIVER at reader construction: a missing
 log is a loud error, not an empty table (an absent-on-executor path on
@@ -25,10 +23,9 @@ genuinely want empty-on-missing opt in with option("allow_missing",
 
 This is the idiomatic Spark-4 answer for small/medium external systems
 with no native connector (REST services, DynamoDB scans, job queues):
-a few dozen lines of Python, partition-parallel, and the result is a
-first-class DataFrame that joins/filters like any table.  At real scale
-the same class shape partitions by segment ids (DynamoDB parallel scan
-segments) instead of enum values.
+a few dozen lines of Python, and the result is a first-class DataFrame
+that joins/filters like any table.  At real scale the same class shape
+would return one partition per DynamoDB parallel-scan segment.
 
 Reference: steps/dynamodb.py:7-62 (table shape), steps/ingesters.py:
 343-370 (scan usage).
@@ -36,9 +33,9 @@ Reference: steps/dynamodb.py:7-62 (table shape), steps/ingesters.py:
 
 from __future__ import annotations
 
-import json
+import os
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -46,6 +43,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..plans.state import LocalStateStore
 
 STATE_SCHEMA = StructType(
     [
@@ -60,16 +59,6 @@ STATE_SCHEMA = StructType(
     ]
 )
 
-_STATUSES = ("IN_PROGRESS", "COMPLETED", "FAILED")
-
-# sentinel partition value: winners whose status is NOT in _STATUSES
-_OTHER = "__OTHER__"
-
-
-class _StatusPartition(InputPartition):
-    def __init__(self, status: str):
-        self.status = status
-
 
 class StateStoreReader(DataSourceReader):
     def __init__(self, options: dict):
@@ -80,8 +69,6 @@ class StateStoreReader(DataSourceReader):
             "true",
             "1",
         )
-        import os
-
         if not os.path.exists(path) and not allow_missing:
             raise FileNotFoundError(
                 f"cdi_state log not found at {path!r}; pass "
@@ -89,50 +76,21 @@ class StateStoreReader(DataSourceReader):
             )
         self._path = path
 
-    def partitions(self):
-        return [_StatusPartition(s) for s in (*_STATUSES, _OTHER)]
-
-    def read(self, partition: _StatusPartition):
-        # each task resolves last-writer-wins over the full (small) log,
-        # then emits only the winners whose status matches its slice --
-        # the union across the partitions (incl. the catch-all) is
-        # exactly the LWW view
-        current: dict[tuple, dict] = {}
-        try:
-            fd = open(self._path)
-        except FileNotFoundError:
-            # only reachable under allow_missing (driver validated above)
-            return
-        with fd:
-            for line in fd:
-                if line.strip():
-                    rec = json.loads(line)
-                    key = (
-                        rec.get("correlation_id"),
-                        rec.get("data_product"),
-                        rec.get("date"),
-                    )
-                    current[key] = rec
-        for rec in current.values():
-            status = rec.get("status")
-            if partition.status == _OTHER:
-                if status in _STATUSES:
-                    continue
-            elif status != partition.status:
-                continue
+    def read(self, partition):
+        # entries() reads an absent log as empty: only reachable under
+        # allow_missing (the driver validated above)
+        for e in LocalStateStore(self._path).entries():
             # explicit None checks: `or` would also catch a legitimate
             # 0, silently rewriting run_id 0 -> 1 / updated_at 0 -> 0.0
-            rid = rec.get("run_id")
-            upd = rec.get("updated_at")
             yield (
-                rec.get("correlation_id"),
-                rec.get("data_product"),
-                rec.get("date"),
-                status,
-                int(rid) if rid is not None else 1,
-                rec.get("cluster_id", ""),
-                rec.get("export_prefix"),
-                float(upd) if upd is not None else 0.0,
+                e.correlation_id,
+                e.data_product,
+                e.date,
+                e.status,
+                int(e.run_id) if e.run_id is not None else 1,
+                e.cluster_id,
+                e.export_prefix,
+                float(e.updated_at) if e.updated_at is not None else 0.0,
             )
 
 

@@ -1,90 +1,34 @@
-"""Streaming snapshot maintenance: the weekly batch merge as a
-foreachBatch upsert.
+"""Streaming snapshot maintenance: the weekly export step as a
+foreachBatch handoff on the shared export lineage.
 
 The reference rebuilds its 10 TB snapshot weekly (union + window dedup,
-steps/ingesters.py:429-457).  The streaming twin applies the SAME merge
-operator incrementally: each micro-batch of deltas merges into the
-current snapshot and atomically replaces it.  foreachBatch is the right
-primitive because the merge needs a full-snapshot read per batch --
-not expressible as a stateful streaming aggregate without holding the
-snapshot in state store memory.
+steps/ingesters.py:429-457).  The streaming twin applies the SAME export
+step (`plans.runner.export_snapshot`) per micro-batch: each batch of
+deltas merges onto the newest COMPLETED export in the state store and
+records its own export prefix, so stream and weekly `run_update`
+interleave on one lineage.  foreachBatch is the right primitive because
+the merge needs a full-snapshot read per batch -- not expressible as a
+stateful streaming aggregate without holding the snapshot in state store
+memory.
 
 Scale notes: per-batch cost is |snapshot| + |batch| through one range
 exchange -- identical to the batch merge; trigger cadence therefore sets
 the cost/freshness trade (the reference chose weekly; availableNow here
-gives catch-up-then-stop semantics).  The swap is write-new -> atomic
-rename, so readers never see a half-written snapshot.
+gives catch-up-then-stop semantics).  Each batch writes a new export
+prefix and publishes it only by its COMPLETED record, so readers never
+see a half-written snapshot.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.merge import merge_snapshot
-from ..plans import state as state_mod
-from ..plans.state import JobStatus, LocalStateStore
-from ..sinks.writers import write_snapshot
-
-SNAPSHOT_COLUMNS = ("id", "db_type", "val", "id_part")
-SNAPSHOT_SCHEMA = "id string, db_type string, val string, id_part string"
-
-
-def upsert_batch(
-    spark: SparkSession, batch_df: DataFrame, snapshot_dir: str
-) -> None:
-    """Merge one micro-batch of delta rows into the parquet snapshot at
-    `snapshot_dir` (created if absent), atomically."""
-    cols = list(SNAPSHOT_COLUMNS)
-    if os.path.exists(snapshot_dir):
-        current = spark.read.parquet(snapshot_dir).select(*cols)
-        merged = merge_snapshot(current, batch_df.select(*cols))
-    else:
-        merged = merge_snapshot(
-            batch_df.sparkSession.createDataFrame([], batch_df.select(*cols).schema),
-            batch_df.select(*cols),
-        )
-    staging = f"{snapshot_dir}.staging-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    old = f"{snapshot_dir}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(snapshot_dir):
-        os.rename(snapshot_dir, old)
-    os.rename(staging, snapshot_dir)
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
-
-
-def streaming_merge_query(
-    spark: SparkSession,
-    delta_dir: str,
-    snapshot_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Maintain a deduplicated snapshot from a stream of delta parquet
-    files: readStream -> foreachBatch(upsert).  Exactly-once per file via
-    the checkpoint; the merge itself is idempotent (latest-per-key), so
-    a replayed batch converges to the same snapshot."""
-    deltas = spark.readStream.schema(
-        "id string, db_type string, val string, id_part string"
-    ).parquet(delta_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_batch(spark, batch_df, snapshot_dir)
-
-    writer = (
-        deltas.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+from ..plans.runner import export_snapshot
+from ..plans.state import LocalStateStore, data_product
+from ..sinks.writers import SNAPSHOT_SCHEMA
 
 
 def _batch_export_prefix(exports_root: str, as_of: str, batch_id: int) -> str:
@@ -120,49 +64,27 @@ def apply_handoff_batch(
     if batch_df.isEmpty():
         return None
     store = LocalStateStore(state_path)
-    product = f"CDI-{collection}"
+    product = data_product(collection)
     prefix = _batch_export_prefix(exports_root, as_of, batch_id)
     prev = store.latest_completed_export(product)
     if prev is not None and prev.export_prefix == prefix:
         return prefix  # replayed batch: already committed
-    if prev is not None:
-        current = (
-            spark.read.schema(SNAPSHOT_SCHEMA)
-            .format(fmt)
-            .load(prev.export_prefix)
-            .select(*SNAPSHOT_COLUMNS)
-        )
-    else:
-        current = spark.createDataFrame([], SNAPSHOT_SCHEMA)
-    # IN_PROGRESS/FAILED audit entries live on a PER-BATCH key: on the
-    # shared pointer key they would overwrite the previous batch's
-    # COMPLETED record (LocalStateStore is latest-per-key), so a failed or
-    # crashed batch would un-publish the last good export and the retry
-    # would merge onto a stale snapshot, silently dropping today's earlier
-    # batches.  Only COMPLETED ever lands on the shared key.
-    audit_base = dict(
-        correlation_id=f"stream-{collection}/b{batch_id:06d}",
-        data_product=product,
-        date=as_of,
-    )
-    store.put(
-        JobStatus(status=state_mod.IN_PROGRESS, export_prefix=prefix, **audit_base)
-    )
-    try:
-        merged = merge_snapshot(current, batch_df.select(*SNAPSHOT_COLUMNS))
-        write_snapshot(merged, prefix, fmt=fmt, compression=compression)
-    except Exception:
-        store.put(JobStatus(status=state_mod.FAILED, **audit_base))
-        raise
-    store.put(JobStatus(status=state_mod.COMPLETED, export_prefix=prefix, **audit_base))
-    store.put(
-        JobStatus(
-            status=state_mod.COMPLETED,
-            export_prefix=prefix,
-            correlation_id=f"stream-{collection}",
-            data_product=product,
-            date=as_of,
-        )
+    # every status of a batch lives on its OWN key: LocalStateStore is
+    # latest-per-key, so an IN_PROGRESS or FAILED record on a key shared
+    # across batches would overwrite the previous batch's COMPLETED
+    # record, un-publish the last good export, and the retry would merge
+    # onto a stale snapshot, silently dropping today's earlier batches
+    export_snapshot(
+        spark,
+        store,
+        prev,
+        batch_df,
+        status_key=f"stream-{collection}/b{batch_id:06d}",
+        product=product,
+        as_of=as_of,
+        prefix=prefix,
+        fmt=fmt,
+        compression=compression,
     )
     if (
         prune_superseded

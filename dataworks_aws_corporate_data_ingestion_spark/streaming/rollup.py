@@ -6,9 +6,9 @@ then ADD them into the stored rollup (sum-merge on the group keys).
 Works for any commutative-associative aggregate (counts, sums, min/max,
 sketches); averages are stored as (sum, count) and finalised at read.
 
-Same foreachBatch + atomic-swap skeleton as streaming/merge.py -- the
-difference is the merge operator: additive combine instead of
-latest-per-key.  foreachBatch is AT-LEAST-once (a crash between the swap
+A foreachBatch sink that swaps the stored rollup atomically (write a
+staging directory, then rename it into place); the merge operator is an
+additive combine.  foreachBatch is AT-LEAST-once (a crash between the swap
 and the checkpoint commit replays the micro-batch), and an additive merge
 is not idempotent -- so the sink makes itself idempotent on batch_id: the
 last-applied id is written into the rollup directory as part of the same

@@ -454,12 +454,10 @@ def _bench_merge_write(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     dataset written by _bench_write_daily, union with itself as a stand-in
     snapshot, window-dedup, write the new snapshot."""
     from .operators.merge import merge_snapshot
-    from .sinks.writers import write_snapshot
+    from .sinks.writers import SNAPSHOT_COLUMNS, read_daily, write_snapshot
 
-    daily = spark.read.orc(f"{out_dir}/daily")
-    cols = ("id", "db_type", "val", "id_part")
-    merged = merge_snapshot(daily.select(*cols), daily.select(*cols))
-    write_snapshot(merged, f"{out_dir}/snapshot")
+    daily = read_daily(spark, f"{out_dir}/daily", "orc").select(*SNAPSHOT_COLUMNS)
+    write_snapshot(merge_snapshot(daily, daily), f"{out_dir}/snapshot")
 
 
 def _bench_mor_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
@@ -471,17 +469,15 @@ def _bench_mor_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     import shutil
 
     from .operators import mor
+    from .sinks.writers import SNAPSHOT_COLUMNS, read_daily
 
     table = f"{out_dir}/mor"
-    daily = spark.read.orc(f"{out_dir}/daily")
-    cols = ("id", "db_type", "val", "id_part")
+    daily = read_daily(spark, f"{out_dir}/daily", "orc").select(*SNAPSHOT_COLUMNS)
     if mor.current_state(table)["deltas"] or not mor.current_state(table)["base"]:
         shutil.rmtree(table, ignore_errors=True)
-        mor.write_delta(daily.select(*cols), table)
+        mor.write_delta(daily, table)
         mor.compact(spark, table)
-    mor.write_delta(
-        daily.select(*cols).sample(fraction=0.01, seed=42), table
-    )
+    mor.write_delta(daily.sample(fraction=0.01, seed=42), table)
     mor.read_merged(spark, table).write.format("noop").mode("overwrite").save()
     # restore steady state for the next repeat
     mor.clear_deltas(table)
@@ -499,8 +495,9 @@ def _bench_update_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     import shutil
 
     from .plans.runner import CollectionSpec, EngineConfig, run_update
-    from .plans.state import COMPLETED, JobStatus, LocalStateStore
+    from .plans.state import COMPLETED, JobStatus, LocalStateStore, data_product
 
+    collection = "calculator:calculationParts"
     state_path = f"{out_dir}/update_state.jsonl"
     exports_root = f"{out_dir}/update_exports"
     shutil.rmtree(exports_root, ignore_errors=True)
@@ -509,7 +506,7 @@ def _bench_update_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     LocalStateStore(state_path).put(
         JobStatus(
             correlation_id="bench",
-            data_product="CDI-calculator:calculationParts",
+            data_product=data_product(collection),
             date="2024-01-10",
             status=COMPLETED,
             export_prefix=f"{out_dir}/snapshot",
@@ -520,7 +517,7 @@ def _bench_update_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         start_date="2024-01-15",
         end_date="2024-01-15",
         collection=CollectionSpec(
-            name="calculator:calculationParts",
+            name=collection,
             source_root="unused",
             output_root=f"{out_dir}/daily",
             exports_root=exports_root,
@@ -631,32 +628,26 @@ WRITE_BENCH_PLAN_PROBES: dict[str, Callable[[SparkSession, str, str], DataFrame]
 
 
 def _probe_write_daily(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
-    return (
-        _daily_rows_from_events(spark, sf_dir)
-        .repartitionByRange("id_part", "id")
-        .sortWithinPartitions("id")
-    )
+    from .sinks.writers import daily_layout
+
+    return daily_layout(_daily_rows_from_events(spark, sf_dir))
 
 
 def _probe_merge_write(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
     from .operators.merge import merge_snapshot
+    from .sinks.writers import SNAPSHOT_COLUMNS, read_daily
 
-    daily = spark.read.orc(f"{out_dir}/daily")
-    cols = ("id", "db_type", "val", "id_part")
-    return merge_snapshot(daily.select(*cols), daily.select(*cols))
+    daily = read_daily(spark, f"{out_dir}/daily", "orc").select(*SNAPSHOT_COLUMNS)
+    return merge_snapshot(daily, daily)
 
 
 def _probe_update_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
     from .operators.merge import merge_snapshot
     from .plans.runner import read_dailies_since
+    from .sinks.writers import read_snapshot
 
     dailies = read_dailies_since(spark, f"{out_dir}/daily", "2024-01-10", fmt="orc")
-    snapshot = (
-        spark.read.schema("id string, db_type string, val string, id_part string")
-        .orc(f"{out_dir}/snapshot")
-        .select("id", "db_type", "val", "id_part")
-    )
-    return merge_snapshot(snapshot, dailies)
+    return merge_snapshot(read_snapshot(spark, f"{out_dir}/snapshot", "orc"), dailies)
 
 
 def _probe_mor_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
@@ -668,11 +659,11 @@ def _probe_mor_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFram
     probe runs OUTSIDE the timed repeats, so it cannot reintroduce the
     round-3 probe-inside-the-timing regression."""
     from .operators import mor
+    from .sinks.writers import SNAPSHOT_COLUMNS, read_daily
 
     table = f"{out_dir}/mor"
-    daily = spark.read.orc(f"{out_dir}/daily")
-    cols = ("id", "db_type", "val", "id_part")
-    mor.write_delta(daily.select(*cols).sample(fraction=0.01, seed=42), table)
+    daily = read_daily(spark, f"{out_dir}/daily", "orc").select(*SNAPSHOT_COLUMNS)
+    mor.write_delta(daily.sample(fraction=0.01, seed=42), table)
     merged = mor.read_merged(spark, table)
     # force the physical plan NOW, while the delta files exist:
     # QueryExecution.executedPlan is a cached lazy val, so the later

@@ -85,17 +85,15 @@ def rtbf_purge_certificate_query(
     the purge itself is partition-surgical (2 of 256 buckets read and
     rewritten); certificate counts are count-only scans."""
     from ..operators.purge import purge_keys
-    from ..sinks.writers import write_snapshot
+    from ..sinks.writers import SNAPSHOT_COLUMNS, read_snapshot, write_snapshot
 
     snap = _cert_dir("rtbf", sf_dir)
-    rows = _daily_rows_from_events(spark, sf_dir).select(
-        "id", "db_type", "val", "id_part"
-    )
+    rows = _daily_rows_from_events(spark, sf_dir).select(*SNAPSHOT_COLUMNS)
     write_snapshot(rows, snap, fmt="parquet", compression="snappy")
 
-    n_before = spark.read.parquet(snap).count()
+    n_before = read_snapshot(spark, snap, "parquet").count()
     keys = (
-        spark.read.parquet(snap)
+        read_snapshot(spark, snap, "parquet")
         .filter(F.col("id_part").isin("00", "ab"))
         .select("id", "id_part")
         .distinct()
@@ -107,7 +105,7 @@ def rtbf_purge_certificate_query(
         r.rows_before - r.rows_after == r.purged for r in audit
     )
 
-    after = spark.read.parquet(snap)
+    after = read_snapshot(spark, snap, "parquet")
     n_after = after.count()
     n_leftover = after.filter(
         F.substring("id", 1, 2).isin("00", "ab")
@@ -160,7 +158,12 @@ def record_timeline_certificate_query(
     back empty/short and flips the hash."""
     from ..operators.merge import merge_snapshot
     from ..plans.timeline import record_timeline
-    from ..sinks.writers import write_daily, write_snapshot
+    from ..sinks.writers import (
+        SNAPSHOT_COLUMNS,
+        read_daily,
+        write_daily,
+        write_snapshot,
+    )
 
     root = _cert_dir("timeline", sf_dir)
     daily_root = os.path.join(root, "daily")
@@ -169,8 +172,7 @@ def record_timeline_certificate_query(
     write_daily(
         rows, daily_root, fmt="parquet", compression="snappy", stabilize=False
     )
-    cols = ("id", "db_type", "val", "id_part")
-    daily = spark.read.parquet(daily_root).select(*cols)
+    daily = read_daily(spark, daily_root, "parquet").select(*SNAPSHOT_COLUMNS)
     write_snapshot(
         merge_snapshot(daily, daily),
         snap_root,

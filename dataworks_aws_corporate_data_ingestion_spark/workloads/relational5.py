@@ -398,6 +398,7 @@ def snapshot_merge_by_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange + one window; only the ORDER BY inside the window differs,
     so the write-layout/AQE story carries over unchanged."""
     from ..operators.merge import latest_by_key
+    from ..sinks.writers import SNAPSHOT_COLUMNS
 
     e = load_table(spark, "events", sf_dir).select(
         F.col("user_id").cast("string").alias("id"),
@@ -411,7 +412,7 @@ def snapshot_merge_by_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered = e.repartitionByRange("id_part", "id")
     return latest_by_key(
         clustered, ("id_part", "id"), [F.col("lm").desc(), F.col("val").desc()]
-    ).select("id", "db_type", "val", "id_part")
+    ).select(*SNAPSHOT_COLUMNS)
 
 
 @register(

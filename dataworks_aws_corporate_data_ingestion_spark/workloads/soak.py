@@ -68,7 +68,6 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.crypto import IdentityKeyService
 from ..partitioning import fan_out
 from ..sources.tables import load_table
 from ..workload import register
@@ -171,6 +170,7 @@ def multi_day_soak_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_dailies_since,
         run_range,
     )
+    from ..sinks.writers import read_snapshot
 
     base = _soak_dir(sf_dir)
     # the state store APPENDS and the runner consults it for the latest
@@ -224,11 +224,9 @@ def multi_day_soak_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # 4. purge every id in the certificate bucket from the final export.
-    # Explicit schema on every read-back: partition-directory type
-    # inference must never get the chance to read id_part "00" as INT 0.
-    snap_schema = "id string, db_type string, val string, id_part string"
+    # read_snapshot's explicit schema keeps id_part "00" a string.
     final_prefix = os.path.join(base, "exports", "2024-03-07")
-    snap = spark.read.schema(snap_schema).parquet(final_prefix)
+    snap = read_snapshot(spark, final_prefix, "parquet")
     keys = snap.filter(F.col("id_part") == PURGED_BUCKET).select("id", "id_part")
     n_keys = keys.count()  # BEFORE the purge rewrites the bucket it reads
     audit = purge_keys(spark, final_prefix, keys, fmt="parquet")
@@ -239,6 +237,6 @@ def multi_day_soak_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # 5. the end state, to be hashed against the oracle
-    return spark.read.schema(snap_schema).parquet(final_prefix).select(
+    return read_snapshot(spark, final_prefix, "parquet").select(
         "id", "id_part", "db_type", "val"
     )

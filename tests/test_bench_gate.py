@@ -104,6 +104,22 @@ class TestTimedRecord:
         assert isinstance(rec["jit_ms"], int) and rec["jit_ms"] >= 0
 
 
+def test_plan_sha_ignores_the_warehouse_location():
+    """A catalog table's scan names its warehouse directory, which defaults
+    to <cwd>/spark-warehouse: the same plan run from two working
+    directories must get one sha, and a different table must not."""
+    scan = (
+        "FileScan parquet spark_catalog.default.{table}[k#4L] Batched: true,"
+        " Format: Parquet, Location: InMemoryFileIndex(1 paths)"
+        "[file:{cwd}/spark-warehouse/{table}], PartitionFilters: []"
+    )
+    here = scan.format(cwd="/home/a/checkout", table="t_mg")
+    there = scan.format(cwd="/srv/other dir/run-2", table="t_mg")
+    other = scan.format(cwd="/home/a/checkout", table="t_cms")
+    assert bench.plan_text_sha(here) == bench.plan_text_sha(there)
+    assert bench.plan_text_sha(here) != bench.plan_text_sha(other)
+
+
 def _bench_imports(path: str) -> list[str]:
     names = []
     for node in ast.walk(ast.parse(open(path).read(), filename=path)):

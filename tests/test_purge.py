@@ -19,6 +19,7 @@ from dataworks_aws_corporate_data_ingestion_spark.operators.purge import (
     purge_keys,
 )
 from dataworks_aws_corporate_data_ingestion_spark.sinks.writers import (
+    read_snapshot,
     write_snapshot,
 )
 
@@ -148,3 +149,30 @@ class TestPurgeKeys:
         audit = purge_keys(spark, snap_path, keys, fmt="parquet")
         assert audit.count() == 0
         assert spark.read.parquet(snap_path).count() == 15
+
+    def test_all_digit_partitions_stay_strings(self, spark, tmp_path):
+        # Spark infers an all-digit partition directory as INT
+        # (id_part=07 -> 7), so a schema-less read matches no string
+        # id_part and purges nothing
+        snap = str(tmp_path / "digits")
+        write_snapshot(
+            spark.createDataFrame(
+                [
+                    (_wrapped_id(part, n), part, "INSERT", "{}")
+                    for part, n in (("07", 0), ("07", 1), ("12", 0))
+                ],
+                "id string, id_part string, db_type string, val string",
+            ),
+            snap,
+            fmt="parquet",
+            compression="snappy",
+        )
+        gone = _wrapped_id("07", 0)
+        keys = spark.createDataFrame([(gone,)], "id string")
+        audit = purge_keys(spark, snap, keys, fmt="parquet").collect()
+        assert [(r.id_part, r.purged) for r in audit] == [("07", 1)]
+        ids = {r.id for r in read_snapshot(spark, snap, "parquet").collect()}
+        assert ids == {_wrapped_id("07", 1), _wrapped_id("12", 0)}
+        assert sorted(
+            d for d in os.listdir(snap) if d.startswith("id_part=")
+        ) == ["id_part=07", "id_part=12"]

@@ -135,48 +135,6 @@ class TestSessionWindows:
         assert got == want and len(got) > 0
 
 
-class TestStreamingMerge:
-    def test_incremental_upserts_converge_to_batch_merge(self, spark, tmp_path):
-        from dataworks_aws_corporate_data_ingestion_spark.streaming.merge import (
-            streaming_merge_query,
-        )
-
-        delta_dir = tmp_path / "deltas"
-        snap_dir = str(tmp_path / "snapshot")
-        ckpt = str(tmp_path / "ckpt")
-        delta_dir.mkdir()
-
-        def rows(*triples):
-            return spark.createDataFrame(
-                [(i, t, v, i[:2]) for i, t, v in triples],
-                "id string, db_type string, val string, id_part string",
-            )
-
-        # batch 1: two inserts
-        rows(("aa1", "INSERT", "v1"), ("bb2", "INSERT", "v2")).write.mode(
-            "append"
-        ).parquet(str(delta_dir))
-        q = streaming_merge_query(spark, str(delta_dir), snap_dir, ckpt)
-        q.awaitTermination(120)
-
-        # batch 2: delete key aa1, update bb2, add cc3
-        rows(
-            ("aa1", "DELETE", "v1"), ("bb2", "INSERT", "v9"), ("cc3", "INSERT", "v3")
-        ).write.mode("append").parquet(str(delta_dir))
-        q = streaming_merge_query(spark, str(delta_dir), snap_dir, ckpt)
-        q.awaitTermination(120)
-
-        snap = {
-            r["id"]: (r["db_type"], r["val"])
-            for r in spark.read.parquet(snap_dir).collect()
-        }
-        # DELETE beats INSERT per key (reference merge rule); bb2 keeps one
-        # row (window picks deterministically), cc3 arrives new
-        assert snap["aa1"][0] == "DELETE"
-        assert snap["cc3"] == ("INSERT", "v3")
-        assert set(snap) == {"aa1", "bb2", "cc3"}
-
-
 class TestContinuousRollup:
     def test_incremental_equals_batch_recompute(self, spark, tmp_path):
         import datetime as dt
@@ -672,6 +630,7 @@ class TestStreamingBatchHandoff:
     def test_replay_is_noop_and_failure_keeps_pointer(
         self, spark, tmp_path, monkeypatch
     ):
+        import dataworks_aws_corporate_data_ingestion_spark.plans.runner as runner
         import dataworks_aws_corporate_data_ingestion_spark.streaming.merge as sm
         from dataworks_aws_corporate_data_ingestion_spark.plans.state import (
             LocalStateStore,
@@ -697,7 +656,9 @@ class TestStreamingBatchHandoff:
         def _boom(*a, **k):
             raise RuntimeError("disk full")
 
-        monkeypatch.setattr(sm, "write_snapshot", _boom)
+        # the export step the stream shares with run_update writes through
+        # plans.runner's write_snapshot
+        monkeypatch.setattr(runner, "write_snapshot", _boom)
         b1 = self._rows(spark, ("bb2", "INSERT", "v2"))
         try:
             sm.apply_handoff_batch(spark, b1, 1, **kw)

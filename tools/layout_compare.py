@@ -13,8 +13,7 @@ counts how many files three representative scans must open:
 
 Prints one JSON line for ROUND_NOTES.  Parquet for both sides so the
 file-stats reader is common; the partitioned side keeps write_daily's
-exact clustering discipline (repartitionByRange(id_part, id) +
-sortWithinPartitions + partitionBy day/id_part).
+exact clustering discipline: it is written by `write_daily` itself.
 
 Usage: python tools/layout_compare.py [sf_dir] [n_days]
 """
@@ -37,7 +36,7 @@ from dataworks_aws_corporate_data_ingestion_spark.operators.zorder import (  # n
     write_daily_flat_zordered,
 )
 from dataworks_aws_corporate_data_ingestion_spark.session import get_session  # noqa: E402
-from dataworks_aws_corporate_data_ingestion_spark.sources.tables import load_table  # noqa: E402
+from dataworks_aws_corporate_data_ingestion_spark.sinks.writers import write_daily  # noqa: E402
 from dataworks_aws_corporate_data_ingestion_spark.workload import (  # noqa: E402
     _daily_rows_from_events,
 )
@@ -59,14 +58,7 @@ def main() -> int:
     out = tempfile.mkdtemp(prefix="layout-compare-")
     part_path, z_path = f"{out}/partitioned", f"{out}/zordered"
     try:
-        # partitioned side: write_daily's exact discipline, parquet codec
-        (
-            rows.repartitionByRange("id_part", "id")
-            .sortWithinPartitions("id")
-            .write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("export_year", "export_month", "export_day", "id_part")
-            .parquet(part_path, mode="overwrite")
-        )
+        write_daily(rows, part_path, fmt="parquet", compression="snappy")
         write_daily_flat_zordered(rows, z_path, base_date="2024-01-01")
 
         # common numeric dimensions for box stats: day + id prefix rank
