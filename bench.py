@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
-"""Headline benchmark: run the bench-flagged workload queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and print ONE JSON line with per-query wall-clock seconds.
+"""Headline benchmark: time every bench entry at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], print a
+details line, then ONE headline JSON line with per-entry seconds.
 
 Output schema: the driver-facing fields are unchanged ("queries" maps
 name -> best seconds); a "details" map adds, per query:
-  best      best-of-N wall-clock seconds (same number as "queries")
-  median    median-of-N wall-clock seconds
+  best      best-of-N seconds (same number as "queries"): wall clock,
+            or the engine seconds of an entry that times itself
+  median    median-of-N of the same seconds
   cpu_s     median-of-N CPU seconds of the whole process tree (this
             driver, the Spark JVM and its Python workers; perfbench's
             cycles.tree_cpu_s).  On a VM, wall time follows hypervisor
@@ -31,15 +32,17 @@ A top-level "host" object records the cpu count, the repeat count, the
 share of host CPU time stolen by the hypervisor over the run and the
 cache-sweep failure count.
 
-For queries with a materialised bench fixture (cdi_ingest_pipeline: the
-oracle-checked form encrypts its own input in-flight), the fixture is
-written ONCE per run to a temp dir and the HEADLINE number is a DIRECT
-best-of-N timing of the production pipeline over the written files -- the
-cost the engine charges the user.  The in-flight fixture-inclusive
-gross_best/gross_median stay in the details.  (Rounds 4-8 attributed this
-by subtraction, gross best minus fixture-probe best; two noisy minimums
-subtracted gave r7 an impossible 0.081s and made r8 read as a 10x
-regression -- r8 verdict nit #1.)
+The entries are workload.bench_entries(): the bench=True registry
+queries, then the write paths.  Each entry's untimed `prepare` writes
+what it reads (cdi_ingest_pipeline's encrypted fixture, the daily
+dataset, the snapshot, the merge-on-read base, the stream landing
+directory), so the headline times only the entry's `run`:
+cdi_ingest_pipeline is the production pipeline over its materialised
+fixture, the cost the engine charges the user.  An entry whose `run`
+times itself (the streaming drain) reports those engine seconds as
+best/median and its wall clock as gross_best/gross_median.
+tools/bench_one.py, tools/pin_plan_shas.py and tools/scale_decade.py
+time and fingerprint entries through the same `time_entry`.
 
 Hygiene: every repeat ends by draining the tracked-cache registry
 (operators persist multi-consumer intermediates they cannot unpersist
@@ -64,15 +67,12 @@ import tempfile
 
 from dataworks_aws_corporate_data_ingestion_spark.caching import release_tracked
 from dataworks_aws_corporate_data_ingestion_spark.session import get_session
-from dataworks_aws_corporate_data_ingestion_spark.workload import (
-    BENCH_FIXTURES,
-    QUERIES,
-    WRITE_BENCH_ENRICHERS,
-    WRITE_BENCH_PLAN_PROBES,
-    WRITE_BENCHES,
-)
+from dataworks_aws_corporate_data_ingestion_spark.workload import bench_entries
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
+# the warm-up scale factor: big enough to run every plan, small enough to
+# cost seconds
+SF_WARM = "/root/testdata/sf0.001"
 # perfbench's modules import each other flat, so its directory goes on the
 # path the way perfbench/run.py puts it there
 sys.path.insert(0, os.path.join(_REPO_ROOT, "perfbench"))
@@ -239,29 +239,64 @@ def _jit_ms(spark) -> int:
 
 
 def _timed_record(spark, run_once, repeats: int) -> dict:
-    """Best and median wall seconds, median process-tree CPU seconds and
-    total JIT milliseconds over `repeats` runs; stage metrics are profiled
-    on the last run."""
+    """Best and median seconds, median process-tree CPU seconds and total
+    JIT milliseconds over `repeats` runs; stage metrics are profiled on
+    the last run.  When `run_once` returns seconds (an entry that times
+    its own engine work), best/median come from those and the wall clock
+    goes to gross_best/gross_median."""
     walls: list[float] = []
+    engine: list[float] = []
     cpus: list[float] = []
     stage_metrics = None
     jit0 = _jit_ms(spark)
     for rep in range(repeats):
         before = _completed_stage_ids(spark) if rep == repeats - 1 else None
         cpu0, t0 = tree_cpu_s(), time.perf_counter()
-        run_once()
+        secs = run_once()
         walls.append(time.perf_counter() - t0)
         cpus.append(tree_cpu_s() - cpu0)
+        if secs is not None:
+            engine.append(secs)
         if before is not None:
             stage_metrics = _stage_metrics_since(spark, before)
         _end_repeat(spark)
-    return {
-        "best": round(min(walls), 3),
-        "median": round(statistics.median(walls), 3),
+    headline = engine or walls
+    rec = {
+        "best": round(min(headline), 3),
+        "median": round(statistics.median(headline), 3),
         "cpu_s": round(statistics.median(cpus), 2),
         "jit_ms": _jit_ms(spark) - jit0,
         "stages": stage_metrics,
     }
+    if engine:
+        rec["gross_best"] = round(min(walls), 3)
+        rec["gross_median"] = round(statistics.median(walls), 3)
+    return rec
+
+
+def warm_up(spark, entries, sf_dir: str, work_dir: str) -> None:
+    """Run each entry once, untimed, at `sf_dir`: a plan's first
+    execution pays JVM codegen and Python-worker spin-up, which would
+    otherwise be charged to whichever entry hits it first."""
+    for entry in entries:
+        entry.prepare(spark, sf_dir, work_dir)
+        entry.run(spark, sf_dir, work_dir)
+    _end_repeat(spark)
+
+
+def time_entry(spark, entry, sf_dir: str, work_dir: str, repeats: int) -> dict:
+    """One bench entry: its untimed prepare, `repeats` timed runs (none
+    for a fingerprint only) and the plan_sha of its plan."""
+    entry.prepare(spark, sf_dir, work_dir)
+    _end_repeat(spark)
+    rec = (
+        _timed_record(spark, lambda: entry.run(spark, sf_dir, work_dir), repeats)
+        if repeats
+        else {}
+    )
+    rec["plan_sha"] = plan_sha(entry.plan(spark, sf_dir, work_dir))
+    _end_repeat(spark)
+    return rec
 
 
 def _details_out_path() -> str:
@@ -289,18 +324,9 @@ def main() -> None:
     spark = get_session(app_name="cdi-engine-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    bench_queries = {n: s for n, s in QUERIES.items() if s.bench}
+    entries = bench_entries()
     timings: dict[str, float] = {}
     details: dict[str, dict] = {}
-
-    # warm every benched plan once at the smallest SF: first execution pays
-    # JVM codegen + Python-UDF worker spin-up, which would otherwise be
-    # charged to whichever query happens to hit it first
-    for spec in bench_queries.values():
-        spec.fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
-    _end_repeat(spark)
 
     # best-of-N: the harness shares a host, so single-shot timings carry
     # external load spikes; the minimum is the cleanest estimate of what
@@ -308,83 +334,18 @@ def main() -> None:
     # reported alongside so a diff can tell a loaded host (wall up, CPU
     # held) from a slower plan (both up, or plan_sha changed).
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
-    cpu_times_start = host_cpu_times()
     out_dir = tempfile.mkdtemp(prefix="cdi-bench-")
-
-    def time_read_entry(name: str, spec) -> dict:
-        """Best-of-N one read query.  Entries with a materialised bench
-        fixture (BENCH_FIXTURES) get a DIRECT headline timing of the
-        production pipeline over files written once per run; the in-flight
-        gross timing is kept in the details for comparability."""
-        fix = BENCH_FIXTURES.get(name)
-        if fix is None:
-            rec = _timed_record(
-                spark,
-                lambda: spec.fn(spark, sf_dir)
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
-                repeats,
-            )
-            rec["plan_sha"] = plan_sha(spec.fn(spark, sf_dir))
-            _end_repeat(spark)
-            return rec
-        fix_dir = os.path.join(out_dir, "fixtures", name)
-        start = time.perf_counter()
-        fix["materialize"](spark, sf_dir, fix_dir)
-        fixture_sec = round(time.perf_counter() - start, 3)
-        _end_repeat(spark)
-        # one untimed warm run: the file-scan plan differs from the
-        # in-flight plan the global warmup loop compiled
-        fix["pipeline"](spark, fix_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        _end_repeat(spark)
-        rec = _timed_record(
-            spark,
-            lambda: fix["pipeline"](spark, fix_dir)
-            .write.format("noop")
-            .mode("overwrite")
-            .save(),
-            repeats,
-        )
-        rec["plan_sha"] = plan_sha(fix["pipeline"](spark, fix_dir))
-        rec["fixture_materialize_sec"] = fixture_sec
-        rec["direct_over_materialized_fixture"] = True
-        _end_repeat(spark)
-        gross = _timed_record(
-            spark,
-            lambda: spec.fn(spark, sf_dir)
-            .write.format("noop")
-            .mode("overwrite")
-            .save(),
-            repeats,
-        )
-        rec["gross_best"] = gross["best"]
-        rec["gross_median"] = gross["median"]
-        _end_repeat(spark)
-        return rec
-
     try:
-        for name, spec in bench_queries.items():
-            rec = time_read_entry(name, spec)
-            timings[name] = rec["best"]
-            details[name] = rec
-        # write-path headline ops, in order: merge reads write_daily's
-        # output
-        for name, fn in WRITE_BENCHES.items():
-            rec = _timed_record(
-                spark, lambda: fn(spark, sf_dir, out_dir), repeats
-            )
-            probe = WRITE_BENCH_PLAN_PROBES.get(name)
-            # fingerprint the DataFrame the sink consumes; benches
-            # without a cheap probe (mor: stateful table) stay null
-            rec["plan_sha"] = (
-                plan_sha(probe(spark, sf_dir, out_dir)) if probe else None
-            )
-            enrich = WRITE_BENCH_ENRICHERS.get(name)
-            if enrich is not None:
-                enrich(spark, sf_dir, out_dir, rec)
+        # read entries warm at the smallest SF; write entries are not warmed
+        warm_up(
+            spark,
+            [e for e in entries.values() if e.warm],
+            SF_WARM,
+            os.path.join(out_dir, "warm"),
+        )
+        cpu_times_start = host_cpu_times()
+        for name, entry in entries.items():
+            rec = time_entry(spark, entry, sf_dir, out_dir, repeats)
             timings[name] = rec["best"]
             details[name] = rec
         total = round(sum(timings.values()), 3)

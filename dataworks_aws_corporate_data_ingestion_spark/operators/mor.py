@@ -16,14 +16,14 @@ Layout:
 
 The manifest is the committed table state -- object-store directory
 listing is neither atomic nor consistent, so readers resolve the batch
-set from `_manifest.json` (committed via a compare-and-swap keyed on the
-carried version -- locally an O_EXCL lock + rename, on S3 one
-conditional PUT) and fall back to sorted directory listing only for
-pre-manifest tables.  Once a manifest exists, compaction is a single
-manifest commit: base swaps and delta removal become garbage collection,
-not correctness.  Delta appends are concurrent-writer safe (they commute
-and auto-retry on conflict); compaction remains single-writer and
-surfaces ManifestConflict if it loses a race.
+set from `_manifest.json`, committed via a compare-and-swap keyed on the
+carried version (an O_EXCL lock + rename).  A table with no manifest is
+empty: batch directories no manifest names are crash orphans, never
+data.  Compaction is a single manifest commit: base swaps and delta
+removal become garbage collection, not correctness.  Delta appends are
+concurrent-writer safe (they commute and auto-retry on conflict);
+compaction remains single-writer and surfaces ManifestConflict if it
+loses a race.
 
 Delete semantics follow the reference: DELETE rows win over INSERT for
 the same key (db_type ascending), so deletions tombstone at read time
@@ -41,8 +41,11 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks.writers import SNAPSHOT_COLUMNS, daily_layout
-from .mor_store import ManifestConflict
+from ..sinks.writers import SNAPSHOT_COLUMNS, daily_layout, read_snapshot
+
+
+class ManifestConflict(RuntimeError):
+    """Another writer committed first: the manifest's version moved."""
 
 
 def _base_dir(table_dir: str) -> str:
@@ -58,7 +61,7 @@ def _manifest_path(table_dir: str) -> str:
 
 
 def read_manifest(table_dir: str) -> dict | None:
-    """The committed table view, or None for a pre-manifest table."""
+    """The committed table view, or None before the first commit."""
     path = _manifest_path(table_dir)
     if not os.path.exists(path):
         return None
@@ -66,25 +69,11 @@ def read_manifest(table_dir: str) -> dict | None:
         return json.load(fh)
 
 
-def _listed_state(table_dir: str) -> dict:
-    """Recovery view from directory listing (pre-manifest tables only;
-    batch names sort in arrival order by construction)."""
-    deltas = _deltas_dir(table_dir)
-    return {
-        "version": 0,
-        "base": os.path.exists(_base_dir(table_dir)),
-        "deltas": sorted(os.listdir(deltas)) if os.path.exists(deltas) else [],
-    }
-
-
 def _commit_manifest(table_dir: str, state: dict) -> None:
     """Compare-and-swap commit: the new state lands iff the stored
     manifest still carries ``state['version'] - 1``; otherwise
-    ManifestConflict.  Locally the CAS is a short-lived O_EXCL lock file
-    around verify+rename; on an object store the SAME protocol is one
-    conditional PUT (S3 If-Match on the manifest ETag / If-None-Match
-    for version 1) -- the carried ``version`` exists precisely so every
-    backend can express the precondition.
+    ManifestConflict.  The CAS is a short-lived O_EXCL lock file around
+    verify+rename.
 
     Each commit also lands an immutable `_manifest.v{N}.json` snapshot --
     the time-travel log.  Snapshots are bytes-sized; compaction's GC is
@@ -131,7 +120,8 @@ def read_manifest_version(table_dir: str, version: int) -> dict | None:
 
 
 def current_state(table_dir: str) -> dict:
-    return read_manifest(table_dir) or _listed_state(table_dir)
+    """The committed view; an empty table before the first commit."""
+    return read_manifest(table_dir) or {"version": 0, "base": False, "deltas": []}
 
 
 def write_delta(df: DataFrame, table_dir: str, max_retries: int = 5) -> str:
@@ -144,11 +134,9 @@ def write_delta(df: DataFrame, table_dir: str, max_retries: int = 5) -> str:
     the parquet batch itself is already durable and never rewritten.
     Compaction does NOT commute and propagates its conflict instead.
 
-    Batch names carry a monotonic nanosecond prefix so the pre-manifest
-    fallback (sorted listing) still yields arrival order; the committed
-    order is the manifest's list.  The batch is invisible to readers
-    until the manifest commit -- a crash between the two leaves an
-    orphan directory, not a torn table."""
+    The committed order is the manifest's list.  The batch is invisible
+    to readers until the manifest commit -- a crash between the two
+    leaves an orphan directory, not a torn table."""
     batch_name = f"batch-{time.time_ns():020d}-{uuid.uuid4().hex[:6]}"
     batch_dir = os.path.join(_deltas_dir(table_dir), batch_name)
     # row count piggybacks on the write job via observe -- zero extra
@@ -165,15 +153,9 @@ def write_delta(df: DataFrame, table_dir: str, max_retries: int = 5) -> str:
     last: ManifestConflict | None = None
     for _ in range(max_retries):
         state = current_state(table_dir)
-        # pre-manifest fallback lists the just-written batch already --
-        # drop it so the append below stays idempotent across retries
-        deltas = [b for b in state["deltas"] if b != batch_name]
-        state["version"] = int(state.get("version", 0)) + 1
-        state["deltas"] = deltas + [batch_name]
-        state["delta_rows"] = {
-            **{b: n for b, n in state.get("delta_rows", {}).items() if b in deltas},
-            batch_name: n_rows,
-        }
+        state["version"] = int(state["version"]) + 1
+        state["deltas"] = state["deltas"] + [batch_name]
+        state["delta_rows"] = {**state.get("delta_rows", {}), batch_name: n_rows}
         try:
             _commit_manifest(table_dir, state)
             return batch_dir
@@ -199,7 +181,8 @@ def read_merged(
 ) -> DataFrame:
     """The logical snapshot: base + deltas through the latest-per-key
     merge.  Later delta batches beat earlier ones and all deltas beat
-    base; within a batch, DELETE beats INSERT (reference rule).
+    base; within a batch, DELETE beats INSERT (reference rule).  A table
+    with nothing committed reads as an empty snapshot.
 
     `version` time-travels to an earlier committed view.  History is
     valid back to the most recent compaction -- compaction rewrites base
@@ -229,7 +212,7 @@ def read_merged(
             .withColumn("__gen", F.lit(gen))
         )
     if not frames:
-        raise FileNotFoundError(f"no base or deltas under {table_dir}")
+        return read_snapshot(spark, None)
     unioned = frames[0]
     for f in frames[1:]:
         unioned = unioned.unionByName(f)
@@ -263,27 +246,11 @@ def delta_fraction(spark: SparkSession, table_dir: str) -> float:
     """Deltas-to-base row ratio -- the compaction trigger metric.
 
     Counts ride in the manifest (written by observe at append/compact
-    time), so for any manifest-era table this is pure metadata
-    arithmetic: zero Spark jobs, zero data-file reads.  Pre-manifest
-    tables (or manifests written before counts existed) fall back to
-    counting -- one union scan for all deltas, not a job per batch."""
+    time), so this is pure metadata arithmetic: zero Spark jobs, zero
+    data-file reads."""
     state = current_state(table_dir)
-    delta_rows = state.get("delta_rows", {})
-    if all(b in delta_rows for b in state["deltas"]):
-        n_delta = sum(int(delta_rows[b]) for b in state["deltas"])
-    else:
-        deltas = _deltas_dir(table_dir)
-        paths = [os.path.join(deltas, b) for b in state["deltas"]]
-        n_delta = spark.read.parquet(*paths).count() if paths else 0
-    if state.get("base_rows") is not None:
-        n_base = int(state["base_rows"])
-    else:
-        n_base = (
-            spark.read.parquet(_base_dir(table_dir)).count()
-            if state["base"]
-            else 0
-        )
-    return n_delta / max(n_base, 1)
+    n_delta = sum(int(n) for n in state.get("delta_rows", {}).values())
+    return n_delta / max(int(state.get("base_rows", 0)), 1)
 
 
 def compact(spark: SparkSession, table_dir: str) -> None:

@@ -398,14 +398,15 @@ def rewrite_dailies_zordered(
     fmt: str = "parquet",
 ) -> None:
     """Periodic re-layout: read the accumulated directory-partitioned
-    dailies (partition columns materialise from the paths) and rewrite
-    them as one flat z-ordered dataset -- files sized by data volume
-    with day AND id ranges skippable via min/max stats.  Row-preserving;
-    measured prunability trade-offs in SCALE.md 'Daily layout choice'."""
+    dailies (partition columns typed by read_daily) and rewrite them as
+    one flat z-ordered dataset -- files sized by data volume with day AND
+    id ranges skippable via min/max stats.  Row-preserving; measured
+    prunability trade-offs in SCALE.md 'Daily layout choice'."""
     from ..operators.zorder import write_daily_flat_zordered
 
-    dailies = spark.read.format(fmt).load(dailies_root)
-    write_daily_flat_zordered(dailies, dest, base_date=base_date)
+    write_daily_flat_zordered(
+        read_daily(spark, dailies_root, fmt), dest, base_date=base_date
+    )
 
 
 if __name__ == "__main__":

@@ -23,6 +23,8 @@ Conventions (critical for the value-hash correctness gate):
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -39,7 +41,7 @@ class QuerySpec:
 
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None
-    bench: bool = False  # include in bench.py headline timings
+    bench: bool = False  # a bench entry (bench_entries below)
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
@@ -348,52 +350,77 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Write-path benchmarks: the reference's headline operations END in a
-# partitioned, range-clustered write (steps/ingesters.py:534-538 daily,
-# :451-457 merge) -- the write discipline IS the operator, so bench.py
-# times these alongside the read queries.  Not oracle-checkable (sinks
-# produce files, not result sets); correctness lives in
-# tests/test_ingest_pipeline.py round-trips.
+# Bench entries: what bench.py, tools/bench_one.py, tools/pin_plan_shas.py
+# and tools/scale_decade.py time and fingerprint, one table for all four.
+# The bench=True registry queries time their result into the noop sink.
+# The reference's headline operations END in a partitioned, range-clustered
+# write (steps/ingesters.py:534-538 daily, :451-457 merge) -- the write
+# discipline IS the operator -- so the write paths are entries too.  They
+# are not oracle-checkable (sinks produce files, not result sets);
+# correctness lives in tests/test_ingest_pipeline.py round-trips.
 # ---------------------------------------------------------------------------
 
-# Materialised bench fixtures: for benched queries whose oracle-checked
-# form constructs its own test fixture in-flight (the driver's tables are
-# the only inputs), the HEADLINE timing must not include fixture
-# construction -- production reads already-encrypted envelopes from the
-# source.  Rounds 4-8 attributed this by subtraction (gross best minus
-# fixture-probe best), but a difference of two noisy minimums is
-# numerically unstable: r7 committed an impossible 0.081s and r8 then
-# looked like a 10x regression (r8 verdict nit #1).  Instead, bench.py now
-# MATERIALISES the fixture once per run (untimed beyond a one-shot
-# fixture_materialize_sec) and times the production pipeline directly over
-# the written files: read -> parse -> decrypt -> canonicalise -> shape,
-# exactly the path a user pays.  The in-flight gross timing stays in the
-# details for round-over-round comparability.
-#
-# `materialize(spark, sf_dir, fix_dir)` writes the fixture;
-# `pipeline(spark, fix_dir)` returns the production DataFrame over it.
-BENCH_FIXTURES: dict[str, dict[str, Callable]] = {}
+
+@dataclass(frozen=True)
+class BenchEntry:
+    """One timed entry.  Each part takes (spark, sf_dir, work_dir).
+
+    prepare  untimed: materialises under work_dir what `run` and `plan`
+             read, skipping what is already there, so any entry can run
+             alone
+    run      timed: returns engine seconds when the entry times itself,
+             else None and the wall clock is the headline
+    plan     the DataFrame whose plan_sha pins the entry, built outside
+             the timed runs
+    warm     run once at the smallest SF before any timing: the first
+             execution of a read plan pays codegen and Python-worker
+             spin-up
+    """
+
+    prepare: Callable[[SparkSession, str, str], None]
+    run: Callable[[SparkSession, str, str], float | None]
+    plan: Callable[[SparkSession, str, str], DataFrame]
+    warm: bool
 
 
-def _materialize_cdi_fixture(spark: SparkSession, sf_dir: str, fix_dir: str) -> None:
-    from .workloads.cdi_pipeline import envelope_lines_from_events
-
-    # gzip JSONL, the reference's on-S3 envelope layout (modulo the
-    # documented LZO->gzip codec swap): the timed read pays the same
-    # decompress+scan cost production pays
-    envelope_lines_from_events(spark, sf_dir).write.mode("overwrite").option(
-        "compression", "gzip"
-    ).text(fix_dir)
+def _noop_write(df: DataFrame) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
-def _cdi_pipeline_from_files(spark: SparkSession, fix_dir: str) -> DataFrame:
+def _prepare_nothing(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    """The entry reads only the SF tables."""
+
+
+def _read_entry(fn: Callable[[SparkSession, str], DataFrame]) -> BenchEntry:
+    return BenchEntry(
+        prepare=_prepare_nothing,
+        run=lambda spark, sf_dir, work_dir: _noop_write(fn(spark, sf_dir)),
+        plan=lambda spark, sf_dir, work_dir: fn(spark, sf_dir),
+        warm=True,
+    )
+
+
+# cdi_ingest_pipeline's registry form encrypts its own input in-flight (the
+# driver's tables are its only inputs), but production reads
+# already-encrypted envelopes from the source.  Its entry times the
+# production pipeline over a fixture that prepare writes once: read ->
+# parse -> decrypt -> canonicalise -> shape, the path a user pays.
+# (Attributing it by subtraction, in-flight best minus fixture best, was a
+# difference of two noisy minimums, and once read an impossible 0.081 s.)
+
+
+def _cdi_fixture_dir(work_dir: str) -> str:
+    return f"{work_dir}/fixtures/cdi_ingest_pipeline"
+
+
+def _plan_cdi(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
     from .functions.crypto import IdentityKeyService
     from .operators.ingest import ingest_daily
     from .workloads.cdi_pipeline import EXPORT_DATE
 
     rows, _quarantined = ingest_daily(
         spark,
-        fix_dir,
+        _cdi_fixture_dir(work_dir),
         "calculator:calculationParts",
         IdentityKeyService(),
         EXPORT_DATE,
@@ -401,13 +428,25 @@ def _cdi_pipeline_from_files(spark: SparkSession, fix_dir: str) -> DataFrame:
     return rows
 
 
-BENCH_FIXTURES["cdi_ingest_pipeline"] = {
-    "materialize": _materialize_cdi_fixture,
-    "pipeline": _cdi_pipeline_from_files,
-}
+def _bench_cdi(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    _noop_write(_plan_cdi(spark, sf_dir, work_dir))
 
 
-WRITE_BENCHES: dict[str, Callable[[SparkSession, str, str], None]] = {}
+def _prepare_cdi_fixture(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    from .workloads.cdi_pipeline import envelope_lines_from_events
+
+    fix_dir = _cdi_fixture_dir(work_dir)
+    if os.path.exists(fix_dir):
+        return
+    # gzip JSONL, the reference's on-S3 envelope layout (modulo the
+    # documented LZO->gzip codec swap): the timed read pays the same
+    # decompress+scan cost production pays
+    envelope_lines_from_events(spark, sf_dir).write.mode("overwrite").option(
+        "compression", "gzip"
+    ).text(fix_dir)
+    # one untimed warm run: the file-scan plan differs from the in-flight
+    # plan of the registry query
+    _bench_cdi(spark, sf_dir, work_dir)
 
 
 def _daily_rows_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -439,97 +478,35 @@ def _daily_rows_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bench_write_daily(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
+def _stored_daily(spark: SparkSession, work_dir: str) -> DataFrame:
+    """The daily dataset write_daily_clustered_orc writes, as snapshot rows."""
+    from .sinks.writers import SNAPSHOT_COLUMNS, read_daily
+
+    return read_daily(spark, f"{work_dir}/daily", "orc").select(*SNAPSHOT_COLUMNS)
+
+
+def _bench_write_daily(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
     from .sinks.writers import write_daily
 
     # pure-columnar input: no persist needed across the range sampler's
     # double execution
     write_daily(
-        _daily_rows_from_events(spark, sf_dir), f"{out_dir}/daily", stabilize=False
+        _daily_rows_from_events(spark, sf_dir), f"{work_dir}/daily", stabilize=False
     )
 
 
-def _bench_merge_write(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """The full merge lifecycle: read back the range-clustered daily
-    dataset written by _bench_write_daily, union with itself as a stand-in
-    snapshot, window-dedup, write the new snapshot."""
-    from .operators.merge import merge_snapshot
-    from .sinks.writers import SNAPSHOT_COLUMNS, read_daily, write_snapshot
+def _plan_write_daily(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
+    from .sinks.writers import daily_layout
 
-    daily = read_daily(spark, f"{out_dir}/daily", "orc").select(*SNAPSHOT_COLUMNS)
-    write_snapshot(merge_snapshot(daily, daily), f"{out_dir}/snapshot")
+    return daily_layout(_daily_rows_from_events(spark, sf_dir))
 
 
-def _bench_mor_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Merge-on-read daily cycle, the counterpoint to the CoW
-    merge_and_write_snapshot above: append a ~1% delta and produce the
-    read-time merged view.  The base is built on the first repeat only and
-    the delta set is reset each call, so best-of-N times the steady state
-    (delta append + read-amplified merged scan, no base rewrite)."""
-    import shutil
-
-    from .operators import mor
-    from .sinks.writers import SNAPSHOT_COLUMNS, read_daily
-
-    table = f"{out_dir}/mor"
-    daily = read_daily(spark, f"{out_dir}/daily", "orc").select(*SNAPSHOT_COLUMNS)
-    if mor.current_state(table)["deltas"] or not mor.current_state(table)["base"]:
-        shutil.rmtree(table, ignore_errors=True)
-        mor.write_delta(daily, table)
-        mor.compact(spark, table)
-    mor.write_delta(daily.sample(fraction=0.01, seed=42), table)
-    mor.read_merged(spark, table).write.format("noop").mode("overwrite").save()
-    # restore steady state for the next repeat
-    mor.clear_deltas(table)
+def _prepare_daily(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    if not os.path.exists(f"{work_dir}/daily"):
+        _bench_write_daily(spark, sf_dir, work_dir)
 
 
-def _bench_update_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """The full weekly lifecycle via plans.runner.run_update against
-    LocalStateStore (reference steps/ingesters.py:341-460): state lookup ->
-    partition-pruned dailies read -> previous-snapshot read -> union+window
-    merge -> snapshot write -> new export prefix recorded.  Each repeat
-    resets the state file so best-of-N times the same incremental cycle
-    (previous export = the merge bench's snapshot, dailies = the daily
-    dataset, all newer than the seeded export date)."""
-    import os
-    import shutil
-
-    from .plans.runner import CollectionSpec, EngineConfig, run_update
-    from .plans.state import COMPLETED, JobStatus, LocalStateStore, data_product
-
-    collection = "calculator:calculationParts"
-    state_path = f"{out_dir}/update_state.jsonl"
-    exports_root = f"{out_dir}/update_exports"
-    shutil.rmtree(exports_root, ignore_errors=True)
-    if os.path.exists(state_path):
-        os.remove(state_path)
-    LocalStateStore(state_path).put(
-        JobStatus(
-            correlation_id="bench",
-            data_product=data_product(collection),
-            date="2024-01-10",
-            status=COMPLETED,
-            export_prefix=f"{out_dir}/snapshot",
-        )
-    )
-    cfg = EngineConfig(
-        correlation_id="bench",
-        start_date="2024-01-15",
-        end_date="2024-01-15",
-        collection=CollectionSpec(
-            name=collection,
-            source_root="unused",
-            output_root=f"{out_dir}/daily",
-            exports_root=exports_root,
-            sink_format="orc",
-            compression="zlib",
-        ),
-        state_path=state_path,
-    )
-    run_update(spark, cfg, as_of="2024-01-16")
-
-
-def _bench_write_daily_zordered(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
+def _bench_write_daily_zordered(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
     """The flat z-ordered ALTERNATIVE daily layout (zorder.py::
     write_daily_flat_zordered) benched alongside the default
     directory-partitioned writer: same input rows, layout z-interleaves
@@ -541,53 +518,181 @@ def _bench_write_daily_zordered(spark: SparkSession, sf_dir: str, out_dir: str) 
 
     write_daily_flat_zordered(
         _daily_rows_from_events(spark, sf_dir),
-        f"{out_dir}/daily_z",
+        f"{work_dir}/daily_z",
         base_date="2024-01-01",
     )
 
 
-def _bench_streaming_ingest(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Trigger-once streaming ingest over the day's encrypted-envelope
-    landing directory (streaming/ingest.py): readStream text ->
-    envelope parse -> fused decrypt/validate/sanitise -> parquet
-    append sink, availableNow.
+def _plan_write_daily_zordered(
+    spark: SparkSession, sf_dir: str, work_dir: str
+) -> DataFrame:
+    from .operators.zorder import daily_flat_zorder_plan
 
-    The encrypted JSONL fixture is built ONCE (first call) into
-    out_dir; every repeat resets the checkpoint and sink so
-    availableNow re-drains the same backlog -- the steady state timed
-    is "a day's files land, the stream catches up", the streaming twin
-    of cdi_ingest_pipeline's batch cost.  Best-of-N therefore excludes
-    the fixture-build repeat automatically.
+    return daily_flat_zorder_plan(
+        _daily_rows_from_events(spark, sf_dir), base_date="2024-01-01"
+    )
 
-    Each repeat also records the DRAIN-ONLY seconds (sum of the query's
-    per-trigger durationMs.triggerExecution) into _STREAMING_DRAIN_SECS:
-    the wall clock additionally pays fresh checkpoint/sink creation and
-    stream-query bootstrap, a per-repeat fixed cost that made the entry
-    structurally noisy (r7 judge probe: median/best 1.7x).  The enricher
-    swaps the headline to the drain time -- the cost the ENGINE charges
-    for catching up -- and keeps the gross wall clock in the details,
-    the same engine-cost-vs-harness-cost split cdi_ingest_pipeline makes
-    via its materialised fixture (BENCH_FIXTURES above)."""
-    import os as _os
-    import shutil as _shutil
 
+def _plan_merge_write(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
+    """Union the daily dataset with itself as a stand-in snapshot and
+    window-dedup it."""
+    from .operators.merge import merge_snapshot
+
+    daily = _stored_daily(spark, work_dir)
+    return merge_snapshot(daily, daily)
+
+
+def _bench_merge_write(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    """The full merge lifecycle: read back the range-clustered daily
+    dataset, merge, write the new snapshot."""
+    from .sinks.writers import write_snapshot
+
+    write_snapshot(_plan_merge_write(spark, sf_dir, work_dir), f"{work_dir}/snapshot")
+
+
+def _prepare_snapshot(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    """The daily dataset, and the snapshot merge_and_write_snapshot writes
+    from it."""
+    _prepare_daily(spark, sf_dir, work_dir)
+    if not os.path.exists(f"{work_dir}/snapshot"):
+        _bench_merge_write(spark, sf_dir, work_dir)
+
+
+def _prepare_mor_base(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    """A compacted base of the daily dataset and no deltas: the steady
+    state every mor repeat starts from and returns to."""
+    from .operators import mor
+
+    _prepare_daily(spark, sf_dir, work_dir)
+    table = f"{work_dir}/mor"
+    state = mor.current_state(table)
+    if state["base"] and not state["deltas"]:
+        return
+    shutil.rmtree(table, ignore_errors=True)
+    mor.write_delta(_stored_daily(spark, work_dir), table)
+    mor.compact(spark, table)
+
+
+def _mor_append(spark: SparkSession, work_dir: str) -> DataFrame:
+    """Append a ~1% delta to the mor base; the read-time merged view."""
+    from .operators import mor
+
+    table = f"{work_dir}/mor"
+    mor.write_delta(_stored_daily(spark, work_dir).sample(fraction=0.01, seed=42), table)
+    return mor.read_merged(spark, table)
+
+
+def _bench_mor_cycle(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    """Merge-on-read daily cycle, the counterpoint to the CoW
+    merge_and_write_snapshot above: delta append + read-amplified merged
+    scan, no base rewrite.  The delta is dropped again so every repeat
+    times the same steady state."""
+    from .operators import mor
+
+    _noop_write(_mor_append(spark, work_dir))
+    mor.clear_deltas(f"{work_dir}/mor")
+
+
+def _plan_mor_cycle(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
+    """The merged scan over base + one 1% delta.  The delta write is a
+    tiny job outside the timed repeats."""
+    from .operators import mor
+
+    merged = _mor_append(spark, work_dir)
+    # force the physical plan NOW, while the delta files exist:
+    # QueryExecution.executedPlan is a cached lazy val, so the later
+    # plan_sha toString() renders the cached plan and never re-analyzes
+    # a DataFrame whose files clear_deltas already removed
+    merged._jdf.queryExecution().executedPlan()
+    mor.clear_deltas(f"{work_dir}/mor")
+    return merged
+
+
+def _bench_update_cycle(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    """The full weekly lifecycle via plans.runner.run_update against
+    LocalStateStore (reference steps/ingesters.py:341-460): state lookup ->
+    partition-pruned dailies read -> previous-snapshot read -> union+window
+    merge -> snapshot write -> new export prefix recorded.  Each repeat
+    resets the state file so best-of-N times the same incremental cycle
+    (previous export = the merge entry's snapshot, dailies = the daily
+    dataset, all newer than the seeded export date)."""
+    from .plans.runner import CollectionSpec, EngineConfig, run_update
+    from .plans.state import COMPLETED, JobStatus, LocalStateStore, data_product
+
+    collection = "calculator:calculationParts"
+    state_path = f"{work_dir}/update_state.jsonl"
+    exports_root = f"{work_dir}/update_exports"
+    shutil.rmtree(exports_root, ignore_errors=True)
+    if os.path.exists(state_path):
+        os.remove(state_path)
+    LocalStateStore(state_path).put(
+        JobStatus(
+            correlation_id="bench",
+            data_product=data_product(collection),
+            date="2024-01-10",
+            status=COMPLETED,
+            export_prefix=f"{work_dir}/snapshot",
+        )
+    )
+    cfg = EngineConfig(
+        correlation_id="bench",
+        start_date="2024-01-15",
+        end_date="2024-01-15",
+        collection=CollectionSpec(
+            name=collection,
+            source_root="unused",
+            output_root=f"{work_dir}/daily",
+            exports_root=exports_root,
+            sink_format="orc",
+            compression="zlib",
+        ),
+        state_path=state_path,
+    )
+    run_update(spark, cfg, as_of="2024-01-16")
+
+
+def _plan_update_cycle(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
+    from .operators.merge import merge_snapshot
+    from .plans.runner import read_dailies_since
+    from .sinks.writers import read_snapshot
+
+    dailies = read_dailies_since(spark, f"{work_dir}/daily", "2024-01-10", fmt="orc")
+    return merge_snapshot(read_snapshot(spark, f"{work_dir}/snapshot", "orc"), dailies)
+
+
+def _prepare_stream_src(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
+    """The day's encrypted-envelope landing directory."""
+    from .workloads.cdi_pipeline import envelope_lines_from_events
+
+    src = f"{work_dir}/stream_src"
+    if not os.path.exists(src):
+        envelope_lines_from_events(spark, sf_dir).write.mode("overwrite").text(src)
+
+
+def _bench_streaming_ingest(spark: SparkSession, sf_dir: str, work_dir: str) -> float:
+    """Trigger-once streaming ingest over the landing directory
+    (streaming/ingest.py): readStream text -> envelope parse -> fused
+    decrypt/validate/sanitise -> parquet append sink, availableNow.
+    Every repeat resets the checkpoint and sink so availableNow re-drains
+    the same backlog: "a day's files land, the stream catches up", the
+    streaming twin of cdi_ingest_pipeline's batch cost.
+
+    Returns the DRAIN seconds (sum of the query's per-trigger
+    durationMs.triggerExecution), the cost the engine charges for
+    catching up.  The wall clock also pays fresh checkpoint/sink creation
+    and stream-query bootstrap, a per-repeat fixed cost that made the
+    entry structurally noisy (median/best 1.7x); it stays in the details
+    as gross_best/gross_median."""
     from .functions.crypto import IdentityKeyService
     from .streaming.ingest import streaming_ingest_query
 
-    src = f"{out_dir}/stream_src"
-    if not _os.path.exists(src):
-        from .workloads.cdi_pipeline import envelope_lines_from_events
-
-        envelope_lines_from_events(spark, sf_dir).write.mode(
-            "overwrite"
-        ).text(src)
-    ckpt = f"{out_dir}/stream_ckpt"
-    sink = f"{out_dir}/stream_out"
-    _shutil.rmtree(ckpt, ignore_errors=True)
-    _shutil.rmtree(sink, ignore_errors=True)
+    ckpt = f"{work_dir}/stream_ckpt"
+    sink = f"{work_dir}/stream_out"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    shutil.rmtree(sink, ignore_errors=True)
     q = streaming_ingest_query(
         spark,
-        src,
+        f"{work_dir}/stream_src",
         sink,
         ckpt,
         "calculator:calculationParts",
@@ -603,89 +708,11 @@ def _bench_streaming_ingest(spark: SparkSession, sf_dir: str, out_dir: str) -> N
         (p["durationMs"] or {}).get("triggerExecution", 0)
         for p in (q.recentProgress or [])
     )
-    _STREAMING_DRAIN_SECS.append(drain_ms / 1000.0)
+    return drain_ms / 1000.0
 
 
-# per-repeat drain-only seconds for the current bench entry; the enricher
-# consumes and clears it
-_STREAMING_DRAIN_SECS: list[float] = []
-
-
-WRITE_BENCHES["write_daily_clustered_orc"] = _bench_write_daily
-WRITE_BENCHES["write_daily_flat_zordered"] = _bench_write_daily_zordered
-WRITE_BENCHES["merge_and_write_snapshot"] = _bench_merge_write
-WRITE_BENCHES["mor_append_and_read_merged"] = _bench_mor_cycle
-WRITE_BENCHES["snapshot_update_cycle"] = _bench_update_cycle
-WRITE_BENCHES["streaming_ingest_trigger_once"] = _bench_streaming_ingest
-
-
-# Plan-fingerprint probes for the write benches: each returns the DataFrame
-# the sink consumes, so bench.py can record a plan_sha for write paths too
-# (round-3 verdict: the write benches had no fingerprint, leaving a +22%
-# write_daily regression unexplainable).  Probes must be cheap to build and
-# must NOT execute jobs.
-WRITE_BENCH_PLAN_PROBES: dict[str, Callable[[SparkSession, str, str], DataFrame]] = {}
-
-
-def _probe_write_daily(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
-    from .sinks.writers import daily_layout
-
-    return daily_layout(_daily_rows_from_events(spark, sf_dir))
-
-
-def _probe_merge_write(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
-    from .operators.merge import merge_snapshot
-    from .sinks.writers import SNAPSHOT_COLUMNS, read_daily
-
-    daily = read_daily(spark, f"{out_dir}/daily", "orc").select(*SNAPSHOT_COLUMNS)
-    return merge_snapshot(daily, daily)
-
-
-def _probe_update_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
-    from .operators.merge import merge_snapshot
-    from .plans.runner import read_dailies_since
-    from .sinks.writers import read_snapshot
-
-    dailies = read_dailies_since(spark, f"{out_dir}/daily", "2024-01-10", fmt="orc")
-    return merge_snapshot(read_snapshot(spark, f"{out_dir}/snapshot", "orc"), dailies)
-
-
-def _probe_mor_cycle(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
-    """Fingerprint the read-amplified merged scan the mor bench times.
-
-    The bench's last repeat ends with clear_deltas (steady state = base
-    only), so re-create the 1% delta the repeats appended, build the
-    merged plan, and clear again.  The delta write is a tiny job but the
-    probe runs OUTSIDE the timed repeats, so it cannot reintroduce the
-    round-3 probe-inside-the-timing regression."""
-    from .operators import mor
-    from .sinks.writers import SNAPSHOT_COLUMNS, read_daily
-
-    table = f"{out_dir}/mor"
-    daily = read_daily(spark, f"{out_dir}/daily", "orc").select(*SNAPSHOT_COLUMNS)
-    mor.write_delta(daily.sample(fraction=0.01, seed=42), table)
-    merged = mor.read_merged(spark, table)
-    # force the physical plan NOW, while the delta files exist:
-    # QueryExecution.executedPlan is a cached lazy val, so the later
-    # plan_sha toString() renders the cached plan and never re-analyzes
-    # a DataFrame whose files clear_deltas already removed
-    merged._jdf.queryExecution().executedPlan()
-    mor.clear_deltas(table)
-    return merged
-
-
-def _probe_write_daily_zordered(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> DataFrame:
-    from .operators.zorder import daily_flat_zorder_plan
-
-    return daily_flat_zorder_plan(
-        _daily_rows_from_events(spark, sf_dir), base_date="2024-01-01"
-    )
-
-
-def _probe_streaming_ingest(
-    spark: SparkSession, sf_dir: str, out_dir: str
+def _plan_streaming_ingest(
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Batch twin of the streaming ingest's per-batch plan: the same
     ingest_lines chain and row projection over a batch read of the same
@@ -697,53 +724,64 @@ def _probe_streaming_ingest(
     from .streaming.ingest import to_stream_rows
 
     rows, _quarantined = ingest_lines(
-        spark.read.text(f"{out_dir}/stream_src"),
+        spark.read.text(f"{work_dir}/stream_src"),
         "calculator:calculationParts",
         IdentityKeyService(),
     )
     return to_stream_rows(rows)
 
 
-WRITE_BENCH_PLAN_PROBES["write_daily_clustered_orc"] = _probe_write_daily
-WRITE_BENCH_PLAN_PROBES["write_daily_flat_zordered"] = _probe_write_daily_zordered
-WRITE_BENCH_PLAN_PROBES["merge_and_write_snapshot"] = _probe_merge_write
-WRITE_BENCH_PLAN_PROBES["mor_append_and_read_merged"] = _probe_mor_cycle
-WRITE_BENCH_PLAN_PROBES["snapshot_update_cycle"] = _probe_update_cycle
-WRITE_BENCH_PLAN_PROBES["streaming_ingest_trigger_once"] = _probe_streaming_ingest
-
-
-# per-entry post-timing enrichment: add fields to the bench record that
-# the generic timing loop cannot know (e.g. streaming rows/sec)
-WRITE_BENCH_ENRICHERS: dict[str, Callable[[SparkSession, str, str, dict], None]] = {}
-
-
-def _enrich_streaming_ingest(
-    spark: SparkSession, sf_dir: str, out_dir: str, rec: dict
-) -> None:
-    import statistics as _stats
-
-    n = spark.read.parquet(f"{out_dir}/stream_out").count()
-    rec["rows"] = int(n)
-    # headline = drain-only (engine cost of catching up on the backlog);
-    # gross wall clock -- which also pays fresh checkpoint/sink creation
-    # and stream bootstrap per repeat, and was structurally noisy for
-    # exactly that reason -- stays in the details as gross_best
-    if _STREAMING_DRAIN_SECS:
-        rec["gross_best"] = rec.get("best")
-        rec["gross_median"] = rec.get("median")
-        rec["best"] = round(min(_STREAMING_DRAIN_SECS), 3)
-        rec["median"] = round(_stats.median(_STREAMING_DRAIN_SECS), 3)
-        _STREAMING_DRAIN_SECS.clear()
-    if rec.get("best"):
-        rec["rows_per_sec"] = round(n / rec["best"], 1)
-
-
-WRITE_BENCH_ENRICHERS["streaming_ingest_trigger_once"] = _enrich_streaming_ingest
+# the entries that are not a plain timing of a registry query; the write
+# entries come after the registry queries in bench order
+_OWN_ENTRIES: dict[str, BenchEntry] = {
+    "cdi_ingest_pipeline": BenchEntry(
+        _prepare_cdi_fixture, _bench_cdi, _plan_cdi, warm=True
+    ),
+    "write_daily_clustered_orc": BenchEntry(
+        _prepare_nothing, _bench_write_daily, _plan_write_daily, warm=False
+    ),
+    "write_daily_flat_zordered": BenchEntry(
+        _prepare_nothing,
+        _bench_write_daily_zordered,
+        _plan_write_daily_zordered,
+        warm=False,
+    ),
+    "merge_and_write_snapshot": BenchEntry(
+        _prepare_daily, _bench_merge_write, _plan_merge_write, warm=False
+    ),
+    "mor_append_and_read_merged": BenchEntry(
+        _prepare_mor_base, _bench_mor_cycle, _plan_mor_cycle, warm=False
+    ),
+    "snapshot_update_cycle": BenchEntry(
+        _prepare_snapshot, _bench_update_cycle, _plan_update_cycle, warm=False
+    ),
+    "streaming_ingest_trigger_once": BenchEntry(
+        _prepare_stream_src,
+        _bench_streaming_ingest,
+        _plan_streaming_ingest,
+        warm=False,
+    ),
+}
 
 
 # Extension modules register additional queries on import; this must stay at
 # the bottom so `register` and the helpers above exist when they import us.
 from . import workloads  # noqa: E402,F401  (intentional circular-safe import)
+
+
+def bench_entry(name: str) -> BenchEntry:
+    """The entry timed under `name`: a bench entry, or any other registry
+    query timed into the noop sink."""
+    entry = _OWN_ENTRIES.get(name)
+    return entry if entry is not None else _read_entry(QUERIES[name].fn)
+
+
+def bench_entries() -> dict[str, BenchEntry]:
+    """Every bench entry in bench order: the queries registered with
+    bench=True, then the write paths."""
+    names = [name for name, spec in QUERIES.items() if spec.bench]
+    names += [name for name in _OWN_ENTRIES if name not in QUERIES]
+    return {name: bench_entry(name) for name in names}
 
 
 def _cli(argv: list[str] | None = None) -> int:

@@ -9,6 +9,7 @@ import glob
 import importlib.util
 import json
 import os
+import time
 
 import bench
 
@@ -102,6 +103,20 @@ class TestTimedRecord:
         assert rec["cpu_s"] > 0
         assert rec["best"] <= rec["median"]
         assert isinstance(rec["jit_ms"], int) and rec["jit_ms"] >= 0
+        assert "gross_best" not in rec and "gross_median" not in rec
+
+    def test_run_that_returns_seconds_is_the_headline(self, spark):
+        """An entry that times its own engine work (the streaming drain)
+        returns seconds: they are the headline, the wall clock is gross."""
+        engine = iter([0.25, 0.1, 0.2])
+
+        def run_once():
+            time.sleep(0.3)
+            return next(engine)
+
+        rec = bench._timed_record(spark, run_once, 3)
+        assert (rec["best"], rec["median"]) == (0.1, 0.2)
+        assert 0.3 <= rec["gross_best"] <= rec["gross_median"]
 
 
 def test_plan_sha_ignores_the_warehouse_location():

@@ -84,26 +84,20 @@ class TestManifest:
         assert _snap(spark, t) == {"aa1": ("INSERT", "v1")}
         assert read_manifest(t)["deltas"] != []
 
-    def test_pre_manifest_table_recovers_from_listing(self, spark, tmp_path):
-        """Deleting the manifest (a pre-manifest table) falls back to
-        sorted directory listing; the next write re-commits a manifest
-        covering the recovered batches."""
-        from dataworks_aws_corporate_data_ingestion_spark.operators.mor import (
-            read_manifest,
-        )
-
+    def test_orphan_first_batch_is_not_data(self, spark, tmp_path):
+        """A first write_delta that dies between its parquet write and its
+        manifest commit leaves a batch no manifest names: the table reads
+        as empty, and the next write_delta does not adopt the orphan."""
         t = str(tmp_path / "tbl")
-        write_delta(_rows(spark, ("aa1", "INSERT", "v1")), t)
-        write_delta(_rows(spark, ("aa1", "INSERT", "v2")), t)
-        os.remove(os.path.join(t, "_manifest.json"))
-        assert _snap(spark, t) == {"aa1": ("INSERT", "v2")}  # listing order
-        write_delta(_rows(spark, ("bb2", "INSERT", "v3")), t)
-        m = read_manifest(t)
-        assert len(m["deltas"]) == 3  # recovered both + the new one, in order
-        assert _snap(spark, t) == {
-            "aa1": ("INSERT", "v2"),
-            "bb2": ("INSERT", "v3"),
-        }
+        orphan = os.path.join(t, "deltas", "batch-00000000000000000001-dead")
+        _rows(spark, ("aa1", "INSERT", "ORPHAN")).write.parquet(orphan)
+        assert mor.current_state(t) == {"version": 0, "base": False, "deltas": []}
+        assert _snap(spark, t) == {}
+        write_delta(_rows(spark, ("bb2", "INSERT", "v1")), t)
+        m = mor.read_manifest(t)
+        assert m["version"] == 1 and len(m["deltas"]) == 1
+        assert os.path.basename(orphan) not in m["deltas"]
+        assert _snap(spark, t) == {"bb2": ("INSERT", "v1")}
 
     def test_compact_commits_empty_delta_list(self, spark, tmp_path):
         from dataworks_aws_corporate_data_ingestion_spark.operators.mor import (
@@ -203,126 +197,6 @@ class TestManifest:
         } == {"v1"}
 
 
-class StubObjectStore:
-    """In-memory HTTP object store with ETag conditional-write semantics
-    (If-Match / If-None-Match), the wire contract of S3 conditional PUT."""
-
-    def __init__(self):
-        self.objects: dict[str, tuple[bytes, str]] = {}
-        self.requests: list[tuple[str, str]] = []
-        self._etag = 0
-        self.on_conditional_put = None  # test hook: runs before the check
-
-    def __call__(self, method, url, headers, body):
-        self.requests.append((method, url))
-        if method == "GET":
-            if url not in self.objects:
-                return 404, {}, None
-            data, etag = self.objects[url]
-            return 200, {"ETag": etag}, data
-        assert method == "PUT"
-        conditional = "If-Match" in headers or "If-None-Match" in headers
-        if conditional and self.on_conditional_put:
-            hook, self.on_conditional_put = self.on_conditional_put, None
-            hook()
-        current = self.objects.get(url)
-        if "If-Match" in headers and (
-            current is None or current[1] != headers["If-Match"]
-        ):
-            return 412, {}, None
-        if "If-None-Match" in headers and current is not None:
-            return 412, {}, None
-        self._etag += 1
-        etag = f'"{self._etag}"'
-        self.objects[url] = (body, etag)
-        return 200, {"ETag": etag}, None
-
-
-class TestConditionalPutManifestStore:
-    URL = "https://store.example/tables/t1/_manifest.json"
-
-    def _store(self):
-        from dataworks_aws_corporate_data_ingestion_spark.operators.mor_store import (
-            ConditionalPutManifestStore,
-        )
-
-        transport = StubObjectStore()
-        return ConditionalPutManifestStore(self.URL, transport), transport
-
-    def test_create_and_load_roundtrip(self):
-        store, transport = self._store()
-        assert store.load() == (None, None)
-        state = {"version": 1, "base": False, "deltas": ["b1"]}
-        store.commit(state, None)  # If-None-Match: * create
-        loaded, token = store.load()
-        assert loaded == state
-        assert token  # ETag present for the next CAS
-
-    def test_stale_token_conflicts(self):
-        from dataworks_aws_corporate_data_ingestion_spark.operators.mor_store import (
-            ManifestConflict,
-        )
-
-        store, transport = self._store()
-        store.commit({"version": 1, "base": False, "deltas": []}, None)
-        _, stale = store.load()
-        store.commit({"version": 2, "base": False, "deltas": ["x"]}, stale)
-        with pytest.raises(ManifestConflict):
-            store.commit({"version": 2, "base": False, "deltas": ["y"]}, stale)
-        # create-precondition also conflicts once the object exists
-        with pytest.raises(ManifestConflict):
-            store.commit({"version": 1, "base": False, "deltas": []}, None)
-
-    def test_cas_update_retries_past_interleaved_commit(self):
-        from dataworks_aws_corporate_data_ingestion_spark.operators.mor_store import (
-            cas_update,
-        )
-
-        store, transport = self._store()
-        store.commit({"version": 1, "base": True, "deltas": ["b1"]}, None)
-
-        def foreign_commit():
-            # another appender lands between our load and our PUT
-            st, tok = store.load()
-            st = dict(st, version=st["version"] + 1, deltas=st["deltas"] + ["theirs"])
-            store.commit(st, tok)
-
-        transport.on_conditional_put = foreign_commit
-
-        def append_mine(state):
-            return dict(
-                state,
-                version=int(state["version"]) + 1,
-                deltas=state["deltas"] + ["mine"],
-            )
-
-        final = cas_update(store, append_mine)
-        # both appends survived: ours retried on top of theirs
-        assert final["deltas"] == ["b1", "theirs", "mine"]
-        assert final["version"] == 3
-        loaded, _ = store.load()
-        assert loaded == final
-
-    def test_versioned_snapshots_enable_time_travel(self):
-        store, transport = self._store()
-        v1 = {"version": 1, "base": False, "deltas": []}
-        v2 = {"version": 2, "base": False, "deltas": ["b1"]}
-        store.commit(v1, None)
-        _, tok = store.load()
-        store.commit(v2, tok)
-        assert store.load_version(1) == v1
-        assert store.load_version(2) == v2
-        assert store.load_version(9) is None
-
-    def test_data_puts_are_never_conditional(self):
-        """Only the manifest swap carries a precondition; the immutable
-        .v{N} snapshot PUT must be unconditional (unique name)."""
-        store, transport = self._store()
-        store.commit({"version": 1, "base": False, "deltas": []}, None)
-        puts = [u for m, u in transport.requests if m == "PUT"]
-        assert puts == [self.URL + ".v1", self.URL]
-
-
 class TestManifestRowCounts:
     def test_delta_fraction_is_metadata_only(self, spark, tmp_path):
         """After manifest-era appends and a compact, delta_fraction needs
@@ -345,12 +219,16 @@ class TestManifestRowCounts:
         # spark=None proves zero jobs: any data-file read would crash
         assert mor.delta_fraction(None, t) == 2 / 10
 
-    def test_fallback_counts_pre_manifest_tables(self, spark, tmp_path):
+    def test_orphan_batches_are_not_counted(self, spark, tmp_path):
+        """delta_fraction counts only what the manifest names: an orphan
+        first batch adds no rows before or after the next commit."""
         t = str(tmp_path / "t")
-        df = spark.createDataFrame(
-            [("1", "INSERT", "v", "00")],
-            "id string, db_type string, val string, id_part string",
+        orphan = os.path.join(t, "deltas", "batch-00000000000000000001-dead")
+        orphan_rows = _rows(
+            spark, ("aa1", "INSERT", "ORPHAN"), ("cc3", "INSERT", "ORPHAN")
         )
-        mor.write_delta(df, t)
-        os.remove(os.path.join(t, "_manifest.json"))  # pre-manifest table
-        assert mor.delta_fraction(spark, t) == 1.0
+        orphan_rows.write.parquet(orphan)
+        # spark=None: no re-count of listed batches is possible
+        assert mor.delta_fraction(None, t) == 0.0
+        write_delta(_rows(spark, ("bb2", "INSERT", "v1")), t)
+        assert mor.delta_fraction(None, t) == 1.0

@@ -63,23 +63,18 @@ def test_cdi_python_stages_evaluate_once(spark, tmp_path):
     struct.  Every caller of the shared ingest chain is checked: the two
     registry pipelines (fixture encrypt + fused ingest) and the two
     benched file-reading plans (fused ingest)."""
-    from dataworks_aws_corporate_data_ingestion_spark.workload import (
-        _cdi_pipeline_from_files,
-        _materialize_cdi_fixture,
-        _probe_streaming_ingest,
-    )
+    from dataworks_aws_corporate_data_ingestion_spark.workload import bench_entries
 
     for name in ("cdi_ingest_pipeline", "cdi_audit_pipeline"):
         plan = _plan(spark, name)
         n = plan.count("ArrowEvalPython")
         assert n == 2, f"{name}: expected 2 Python stages, found {n}"
 
-    src = str(tmp_path / "stream_src")
-    _materialize_cdi_fixture(spark, SF, src)
-    for name, df in (
-        ("_cdi_pipeline_from_files", _cdi_pipeline_from_files(spark, src)),
-        ("_probe_streaming_ingest", _probe_streaming_ingest(spark, SF, str(tmp_path))),
-    ):
+    entries = bench_entries()
+    for name in ("cdi_ingest_pipeline", "streaming_ingest_trigger_once"):
+        entry = entries[name]
+        entry.prepare(spark, SF, str(tmp_path))
+        df = entry.plan(spark, SF, str(tmp_path))
         plan = df._jdf.queryExecution().executedPlan().toString()
         n = plan.count("ArrowEvalPython")
         assert n == 1, f"{name}: expected 1 Python stage, found {n}"

@@ -69,6 +69,17 @@ def test_check_exports_the_checkout_to_python_workers(monkeypatch, tmp_path, cap
     assert seen["pythonpath"].split(os.pathsep) == [REPO, "/elsewhere"]
 
 
+def test_bench_entries_are_the_pinned_entries():
+    """Every bench entry has a pin and every pin a bench entry.  Building
+    the table runs no Spark job, so this catches an entry added without
+    a pin, or a pin left behind, before the slow pin check."""
+    from dataworks_aws_corporate_data_ingestion_spark.workload import bench_entries
+
+    with open(os.path.join(REPO, "PLAN_SHAS.json")) as f:
+        pinned = json.load(f)["plan_shas"]
+    assert sorted(bench_entries()) == sorted(pinned)
+
+
 @pytest.mark.slow
 def test_benched_plan_shas_match_committed_pin():
     proc = subprocess.run(

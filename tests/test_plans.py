@@ -615,6 +615,9 @@ class TestZorderedRewrite:
         from dataworks_aws_corporate_data_ingestion_spark.plans.runner import (
             rewrite_dailies_zordered,
         )
+        from dataworks_aws_corporate_data_ingestion_spark.sinks.writers import (
+            read_daily,
+        )
 
         root = str(tmp_path / "dailies")
         rows = spark.range(0, 3000).select(
@@ -636,8 +639,13 @@ class TestZorderedRewrite:
             spark, root, dest, base_date="2024-01-01", fmt="parquet"
         )
         back = spark.read.parquet(dest)
-        orig = spark.read.parquet(root)
+        orig = read_daily(spark, root, "parquet")
         assert back.count() == 3000
+        # an all-digit id_part directory stays the string it was written as
+        assert dict(back.dtypes)["id_part"] == "string"
+        assert sorted(
+            r.id_part for r in back.select("id_part").distinct().collect()
+        ) == [f"{i:02d}" for i in range(8)]
         # content parity, column-order independent
         cols = sorted(back.columns)
         assert sorted(orig.columns) == cols

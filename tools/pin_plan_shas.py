@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Pin the physical-plan fingerprints of every benched entry (r9 verdict
-#6): PLAN_SHAS.json commits the normalised plan_sha of each benched read
-query (fixture entries fingerprint the pipeline over materialised files,
-exactly as bench.py does) and each write bench's plan probe.
+"""Pin the physical-plan fingerprints of every bench entry (r9 verdict
+#6): PLAN_SHAS.json commits the normalised plan_sha of each entry of
+workload.bench_entries(), computed by bench.py's own `time_entry` with no
+timed repeats: each entry's prepare writes what its plan reads, then its
+plan is fingerprinted, exactly as bench.py does after timing.
 
 tests/test_plan_shas.py recomputes this table and diffs it, so a plan
 change in any benched entry fails CI with a readable diff -- decoupling
@@ -34,41 +35,18 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
 def compute_plan_shas(spark, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, str]:
-    """plan_sha for every benched entry, mirroring bench.py's choices:
-    read queries fingerprint spec.fn(spark, sf_dir); fixture entries
-    fingerprint the production pipeline over a freshly materialised
-    fixture (tmp paths are normalised out of the sha); write benches
-    fingerprint their WRITE_BENCH_PLAN_PROBES DataFrame after running
-    the write once so downstream probes have their inputs."""
-    from bench import plan_sha
-    from dataworks_aws_corporate_data_ingestion_spark.workload import (
-        BENCH_FIXTURES,
-        QUERIES,
-        WRITE_BENCH_PLAN_PROBES,
-        WRITE_BENCHES,
-    )
+    """plan_sha for every bench entry: prepare + plan, no timed runs."""
+    from bench import time_entry
+    from dataworks_aws_corporate_data_ingestion_spark.workload import bench_entries
 
-    shas: dict[str, str] = {}
-    out_dir = tempfile.mkdtemp(prefix="cdi-planpin-")
+    work_dir = tempfile.mkdtemp(prefix="cdi-planpin-")
     try:
-        for name, spec in QUERIES.items():
-            if not spec.bench:
-                continue
-            fix = BENCH_FIXTURES.get(name)
-            if fix is None:
-                shas[name] = plan_sha(spec.fn(spark, sf_dir))
-            else:
-                fix_dir = os.path.join(out_dir, "fixtures", name)
-                fix["materialize"](spark, sf_dir, fix_dir)
-                shas[name] = plan_sha(fix["pipeline"](spark, fix_dir))
-        for name, fn in WRITE_BENCHES.items():
-            probe = WRITE_BENCH_PLAN_PROBES.get(name)
-            fn(spark, sf_dir, out_dir)  # materialise downstream inputs
-            if probe is not None:
-                shas[name] = plan_sha(probe(spark, sf_dir, out_dir))
+        return {
+            name: time_entry(spark, entry, sf_dir, work_dir, 0)["plan_sha"]
+            for name, entry in bench_entries().items()
+        }
     finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-    return shas
+        shutil.rmtree(work_dir, ignore_errors=True)
 
 
 def main() -> int:

@@ -1,12 +1,15 @@
 #!/usr/bin/env python3
 """Measured scale-up decade for the 5 flagship ops (VERDICT r5 #2).
 
-Runs cdi_ingest_pipeline, write_daily_clustered_orc (dependency) +
-merge_and_write_snapshot + snapshot_update_cycle, near_dup_pairs_minhash
+Runs cdi_ingest_pipeline, write_daily_clustered_orc,
+merge_and_write_snapshot, snapshot_update_cycle, near_dup_pairs_minhash
 and bm25_search_postings at sf0.01 / sf0.1 / sf1.0 over the
 tools/make_scale_data.py tables (same generator recipe at every sf, so
 exponents measure the ENGINE, not generator drift), best-of-N per point,
 with executor-side stage metrics (shuffle MB) for the final repeat.
+Every op is prepared and timed as bench.py times it (bench.time_entry
+over workload.bench_entry): cdi_ingest_pipeline is the pipeline over its
+materialised fixture, and each write op's prepare writes its inputs.
 
 Fits the per-op scaling exponent b in t = a * sf^b over the decade
 (log-log least squares across the three points).  b <= ~1 + shuffle
@@ -26,10 +29,8 @@ import json
 import math
 import os
 import shutil
-import statistics
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -37,7 +38,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SFS = [0.01, 0.1, 1.0]
 
 FLAGSHIP_QUERIES = ["cdi_ingest_pipeline", "near_dup_pairs_minhash", "bm25_search_postings"]
-# ordered: merge + update read write_daily's output
 FLAGSHIP_WRITES = ["write_daily_clustered_orc", "merge_and_write_snapshot", "snapshot_update_cycle"]
 
 
@@ -56,7 +56,7 @@ def main() -> int:
         "--writes",
         nargs="*",
         default=None,
-        help="restrict to these WRITE_BENCHES ops (skips the queries) "
+        help="restrict to these write entries (skips the queries) "
         "and MERGE the measured ops into an existing --out JSON",
     )
     p.add_argument(
@@ -69,12 +69,9 @@ def main() -> int:
     )
     args = p.parse_args()
 
-    from bench import _completed_stage_ids, _end_repeat, _stage_metrics_since
+    from bench import time_entry, warm_up
     from dataworks_aws_corporate_data_ingestion_spark.session import get_session
-    from dataworks_aws_corporate_data_ingestion_spark.workload import (
-        QUERIES,
-        WRITE_BENCHES,
-    )
+    from dataworks_aws_corporate_data_ingestion_spark.workload import bench_entry
 
     restricted = args.queries is not None or args.writes is not None
     flagship_queries = (
@@ -87,6 +84,7 @@ def main() -> int:
         if args.writes is not None
         else ([] if restricted else FLAGSHIP_WRITES)
     )
+    ops = {name: bench_entry(name) for name in flagship_queries + flagship_writes}
     sfs = args.sfs if args.sfs else SFS
 
     for sf in sfs:
@@ -103,66 +101,35 @@ def main() -> int:
     # execution pays JVM codegen + Python-UDF worker spin-up, which
     # otherwise lands in the sf0.01 points and bends the fitted exponent
     # negative (observed on the first pass of this tool)
-    warm_dir = os.path.join(REPO, ".scaledata", "sf0.01")
     warm_out = tempfile.mkdtemp(prefix="cdi-scale-warm-")
     try:
-        for name in flagship_queries:
-            QUERIES[name].fn(spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        for name in flagship_writes:
-            WRITE_BENCHES[name](spark, warm_dir, warm_out)
+        warm_up(
+            spark, ops.values(), os.path.join(REPO, ".scaledata", "sf0.01"), warm_out
+        )
     finally:
         shutil.rmtree(warm_out, ignore_errors=True)
-    _end_repeat(spark)
 
     results: dict[str, dict] = {}
-
-    def run_op(name, run_once, sf):
-        times = []
-        metrics = None
-        for rep in range(args.repeats):
-            before = (
-                _completed_stage_ids(spark) if rep == args.repeats - 1 else None
-            )
-            t0 = time.perf_counter()
-            run_once()
-            times.append(time.perf_counter() - t0)
-            if before is not None:
-                metrics = _stage_metrics_since(spark, before)
-            _end_repeat(spark)
-        rec = results.setdefault(name, {"points": {}})
-        rec["points"][str(sf)] = {
-            "best_sec": round(min(times), 3),
-            "median_sec": round(statistics.median(times), 3),
-            "shuffle_write_mb": (metrics or {}).get("shuffle_write_mb"),
-            "input_mb": (metrics or {}).get("input_mb"),
-            "n_tasks": (metrics or {}).get("n_tasks"),
-        }
-        print(
-            f"  {name} sf{sf}: best {min(times):.3f}s "
-            f"shuffleW {(metrics or {}).get('shuffle_write_mb')}MB",
-            flush=True,
-        )
-
     for sf in sfs:
         sf_dir = os.path.join(REPO, ".scaledata", f"sf{sf}")
         print(f"== sf{sf} ({sf_dir})", flush=True)
         out_dir = tempfile.mkdtemp(prefix=f"cdi-scale-{sf}-")
         try:
-            for name in flagship_queries:
-                fn = QUERIES[name].fn
-                run_op(
-                    name,
-                    lambda: fn(spark, sf_dir)
-                    .write.format("noop")
-                    .mode("overwrite")
-                    .save(),
-                    sf,
+            for name, entry in ops.items():
+                rec = time_entry(spark, entry, sf_dir, out_dir, args.repeats)
+                metrics = rec["stages"] or {}
+                results.setdefault(name, {"points": {}})["points"][str(sf)] = {
+                    "best_sec": rec["best"],
+                    "median_sec": rec["median"],
+                    "shuffle_write_mb": metrics.get("shuffle_write_mb"),
+                    "input_mb": metrics.get("input_mb"),
+                    "n_tasks": metrics.get("n_tasks"),
+                }
+                print(
+                    f"  {name} sf{sf}: best {rec['best']:.3f}s "
+                    f"shuffleW {metrics.get('shuffle_write_mb')}MB",
+                    flush=True,
                 )
-            for name in flagship_writes:
-                fn = WRITE_BENCHES[name]
-                run_op(name, lambda: fn(spark, sf_dir, out_dir), sf)
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
 
